@@ -295,9 +295,8 @@ class ZarrWriteBuilder(path: String, info: LogicalWriteInfo)
                         else Set("c/", "c.", "nested", "flat")
     require(allowedKeyEnc.contains(keyEnc),
       s"keyEnc '$keyEnc' not writable for zarrFormat=$format (one of $allowedKeyEnc)")
-    // fail HERE, not at job commit: metaJson's backstop require fires only
-    // after overwrite has truncated the existing store and every task has
-    // run — an expensive way to learn the options were invalid
+    // fail HERE, before overwrite truncates the existing store and every
+    // task runs — an expensive way to learn the options were invalid
     require(format == 3 || !Option(opts.get("fOrder")).exists(_.toBoolean),
       "F-order writes are v3-only (the transpose codec); v2 stores are written C-order")
     val innerRows = Option(opts.get("innerRows")).map(_.toInt).getOrElse(0)

@@ -8,13 +8,16 @@ import org.apache.spark.sql.functions._
 
 import graft.array.ZMatrix
 
-/** Minimal Zarr store in BOTH formats: v2 (directory of "ci.cj" chunk
-  * files + `.zarray` JSON — the reference's storage format; lasersonlab/
-  * zappy reads/writes Zarr v2 arrays with C-order chunks, little-endian
-  * dtype, `compressor: null` or zlib) and v3 (the current spec:
-  * `zarr.json` metadata, "c/ci/cj" chunk keys, named data types, gzip
-  * codec). No external libraries — the metadata JSON is tiny and
-  * fixed-shape, written/parsed directly. Format is detected on read;
+/** Zarr store in BOTH formats: v2 (directory of "ci.cj" chunk files +
+  * `.zarray` JSON — the reference's storage format; lasersonlab/zappy
+  * reads/writes Zarr v2 arrays with C-order chunks, little-endian dtype,
+  * `compressor: null` or zlib) and v3 (the current spec: `zarr.json`
+  * metadata, "c/ci/cj" chunk keys, named data types, gzip codec). No
+  * external libraries. Array metadata is one model for every rank and
+  * element kind — [[ZarrMeta]], whose parse/emit are the only code that
+  * knows the document fields; this object reads it (`readMeta` and the
+  * string/time readers, each checking the kind and rank it serves) and
+  * writes it only through `writeMetaFile`. Format is detected on read;
   * chosen on write via `format = 2|3` / `.option("zarrFormat", ...)`.
   *
   * Scale design: the chunk grid IS the partitioning.
@@ -30,40 +33,10 @@ import graft.array.ZMatrix
   */
 object Zarr {
 
-  /** `format` 2 = classic v2 store (`.zarray`, "ci.cj" chunk keys,
-    * zlib-framed compression); 3 = current Zarr v3 spec (`zarr.json`,
-    * "c/ci/cj" chunk keys, named dtypes, gzip codec).
-    * `innerRows/innerCols` > 0 selects the v3 `sharding_indexed` codec:
-    * chunkRows×chunkCols becomes the SHARD shape and each shard file packs
-    * a grid of inner chunks plus an end-of-file index (offset/nbytes pairs
-    * + crc32c) — the object-count answer at 100 TB, where one object per
-    * chunk would mean billions of store objects. */
-  /** `keyEnc` is the chunk-key layout, normalized across formats/encodings:
-    * "flat" = "ci.cj" at the root (v2 default; v3 "v2" encoding with ".")
-    * "nested" = "ci/cj" (v2 dimension_separator "/"; v3 "v2" encoding "/")
-    * "c/" = "c/ci/cj" (v3 default encoding, "/" separator — our write form)
-    * "c." = "c.ci.cj" (v3 default encoding, "." separator).
-    * We always WRITE "flat" (v2) or "c/" (v3); the rest are read interop. */
-  /** `rank1`: the store is a 1-D array (anndata obs/var columns, zappy 1-D
-    * ndarrays), represented internally as the (n, 1) column matrix —
-    * metadata and chunk keys carry ONE component, the in-memory cell form
-    * keeps j = 0 so every 2-D operator works unchanged. A 1-D chunk of
-    * length L is byte-identical to a C-order (L, 1) chunk, so encode and
-    * decode are shared. */
-  /** `comp`: "" = the format-default framing selected by `zlib` (v2 zlib /
-    * v3 gzip, or none); "blosc" = blosc(lz4, byte-shuffle) frames — the
-    * zarr-python v2 DEFAULT compressor, so most community stores need it
-    * (see [[Blosc]]; read accepts any conforming inner codec); "zstd" =
-    * bare zstd frames — numcodecs Zstd in v2 and the standalone `zstd`
-    * codec that is zarr-python's v3 DEFAULT, via the zstd-jni already on
-    * Spark's classpath. */
-  final case class Meta(rows: Long, cols: Long, chunkRows: Int, chunkCols: Int,
-                        zlib: Boolean, fill: Double, dtype: String = "<f8",
-                        format: Int = 2, innerRows: Int = 0, innerCols: Int = 0,
-                        fOrder: Boolean = false, keyEnc: String = "flat",
-                        rank1: Boolean = false, comp: String = "") {
-    def sharded: Boolean = innerRows > 0 && innerCols > 0
-  }
+  /** Array metadata (see [[ZarrMeta]] for the fields); the 2-D engines
+    * read `rows`/`cols`/`chunkRows`/`chunkCols`/`rank1` off it. */
+  type Meta = ZarrMeta
+  val Meta: ZarrMeta.type = ZarrMeta
 
   /** Row-major ↔ column-major buffer permutation (the v3 `transpose`
     * codec with order [1, 0]; self-inverse up to swapped dims). */
@@ -243,129 +216,6 @@ object Zarr {
 
   private def byteOrder(dtype: String): ByteOrder =
     if (dtype.startsWith(">")) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN
-
-  private def metaJson(m: Meta): String = {
-    // we READ foreign F-order v2 stores but WRITE C only (zarr-python's
-    // default); a v2 Meta carrying fOrder here would declare "C" over
-    // F-laid bytes — a silent data corruption, so refuse
-    require(!m.fOrder, "v2 writes are C-order only (fOrder Meta is read-side)")
-    val comp =
-      if (m.comp == "blosc")
-        """{"id": "blosc", "cname": "lz4", "clevel": 1, "shuffle": 1, "blocksize": 0}"""
-      else if (m.comp == "zstd") """{"id": "zstd", "level": 1}"""
-      else if (m.zlib) """{"id": "zlib", "level": 1}"""
-      else "null"
-    val chunks = if (m.rank1) s"[${m.chunkRows}]" else s"[${m.chunkRows}, ${m.chunkCols}]"
-    val shape = if (m.rank1) s"[${m.rows}]" else s"[${m.rows}, ${m.cols}]"
-    // dimension_separator "/" = the v2 NESTED layout (zarr-python
-    // DirectoryStoreV2 nested mode); absent = the "." default
-    val sep = m.keyEnc match {
-      case "nested" => "\n    \"dimension_separator\": \"/\","
-      case "flat"   => ""
-      case other =>
-        throw new IllegalArgumentException(s"v2 write cannot emit keyEnc '$other'")
-    }
-    s"""{
-       |    "chunks": $chunks,$sep
-       |    "compressor": $comp,
-       |    "dtype": "${m.dtype}",
-       |    "fill_value": ${fillLiteral(m)},
-       |    "filters": null,
-       |    "order": "C",
-       |    "shape": $shape,
-       |    "zarr_format": 2
-       |}""".stripMargin
-  }
-
-  /** v2 dtype string ↔ v3 named data_type (+ endian for the bytes codec). */
-  private[zarr] val v3Names: Map[String, String] =
-    Map("f8" -> "float64", "f4" -> "float32", "f2" -> "float16",
-      "i8" -> "int64", "i4" -> "int32", "i2" -> "int16", "i1" -> "int8",
-      "u2" -> "uint16", "u1" -> "uint8", "b1" -> "bool")
-  private[zarr] val v3NamesInv: Map[String, String] = v3Names.map(_.swap)
-
-  /** `fill_value` literal per the specs (same rules in v2 and v3): an
-    * INTEGER for integer data types (a conforming reader may reject `0.0`
-    * for int32), a JSON number for finite floats, and the STRINGS "NaN" /
-    * "Infinity" / "-Infinity" for non-finite floats (bare NaN is not
-    * JSON — a store written with it is unreadable by any parser). */
-  private def isIntegral(dtype: String): Boolean =
-    Set("i8", "i4", "i2", "i1", "u2", "u1").contains(dtype.substring(1))
-
-  private def fillLiteral(m: Meta): String =
-    if (m.dtype.endsWith("b1")) (if (m.fill != 0.0) "true" else "false")
-    else if (isIntegral(m.dtype)) m.fill.toLong.toString
-    else if (m.fill.isNaN) "\"NaN\""
-    else if (m.fill.isPosInfinity) "\"Infinity\""
-    else if (m.fill.isNegInfinity) "\"-Infinity\""
-    else m.fill.toString
-
-  private def metaJsonV3(m: Meta): String = {
-    require(!m.rank1 || (!m.sharded && !m.fOrder),
-      "rank-1 stores do not compose with sharding or F-order")
-    val endian = if (m.dtype.startsWith(">")) "big" else "little"
-    val transpose =
-      if (m.fOrder) """{"name": "transpose", "configuration": {"order": [1, 0]}}, """ else ""
-    val bytesCodec = s"""{"name": "bytes", "configuration": {"endian": "$endian"}}"""
-    val inner =
-      if (m.comp == "blosc")
-        s"""[$transpose$bytesCodec, {"name": "blosc", "configuration": {"cname": "lz4", "clevel": 1, "shuffle": "shuffle", "typesize": ${elemSize(m.dtype)}, "blocksize": 0}}]"""
-      else if (m.comp == "zstd")
-        s"""[$transpose$bytesCodec, {"name": "zstd", "configuration": {"level": 1, "checksum": false}}]"""
-      else if (m.zlib)
-        s"""[$transpose$bytesCodec, {"name": "gzip", "configuration": {"level": 1}}]"""
-      else s"""[$transpose$bytesCodec]"""
-    val codecs = if (m.sharded)
-      s"""[{"name": "sharding_indexed", "configuration": {
-         |        "chunk_shape": [${m.innerRows}, ${m.innerCols}],
-         |        "codecs": $inner,
-         |        "index_codecs": [{"name": "bytes", "configuration": {"endian": "little"}}, {"name": "crc32c"}],
-         |        "index_location": "end"}}]""".stripMargin
-    else inner
-    val shape = if (m.rank1) s"[${m.rows}]" else s"[${m.rows}, ${m.cols}]"
-    val chunkShape = if (m.rank1) s"[${m.chunkRows}]" else s"[${m.chunkRows}, ${m.chunkCols}]"
-    // any of the four key layouts is writable; metadata must declare the
-    // one the chunk files actually use ("flat"/"nested" = the v2-style
-    // encodings a v3 store may carry for migrated-in-place v2 trees)
-    val keyEncJson = m.keyEnc match {
-      case "c/" => """{"name": "default", "configuration": {"separator": "/"}}"""
-      case "c." => """{"name": "default", "configuration": {"separator": "."}}"""
-      case "nested" => """{"name": "v2", "configuration": {"separator": "/"}}"""
-      case "flat" => """{"name": "v2", "configuration": {"separator": "."}}"""
-      case other =>
-        throw new IllegalArgumentException(s"v3 write cannot emit keyEnc '$other'")
-    }
-    s"""{
-       |    "zarr_format": 3,
-       |    "node_type": "array",
-       |    "shape": $shape,
-       |    "data_type": "${v3Names(m.dtype.substring(1))}",
-       |    "chunk_grid": {"name": "regular", "configuration": {"chunk_shape": $chunkShape}},
-       |    "chunk_key_encoding": $keyEncJson,
-       |    "fill_value": ${fillLiteral(m)},
-       |    "codecs": $codecs,
-       |    "attributes": {}
-       |}""".stripMargin
-  }
-
-  /** Chunk dims must fit a JVM array index: a silent .toInt wrap on a
-    * foreign store's oversized dim would decode garbage, not error. */
-  private def chunkDim(l: Long, what: String): Int = {
-    require(l > 0 && l <= Int.MaxValue, s"$what $l outside supported range [1, 2^31)")
-    l.toInt
-  }
-
-  /** Shared v2/v3 `fill_value` parse: JSON number, the spec's non-finite
-    * strings, or null/absent (zarr-python's "no fill" — read as 0). */
-  private def fillOf(n: com.fasterxml.jackson.databind.JsonNode): Double =
-    if (n.isNull || n.isMissingNode) 0.0
-    else if (n.isBoolean) { if (n.asBoolean()) 1.0 else 0.0 } // bool stores
-    else if (n.isTextual) n.asText() match {
-      case "NaN" => Double.NaN
-      case "Infinity" => Double.PositiveInfinity
-      case "-Infinity" => Double.NegativeInfinity
-      case other => throw new IllegalArgumentException(s"unsupported fill_value '$other'")
-    } else n.asDouble()
 
   // ---- group / AnnData-layout navigation ----
   // The reference's primary entry shape is an ARRAY INSIDE A GROUP: scanpy
@@ -628,14 +478,33 @@ object Zarr {
         }
       }
 
-  /** Reads `zarr.json` (v3) when present, else `.zarray` (v2). When the
-    * array carries NO per-node metadata at all, falls back to a
-    * CONSOLIDATED map on an ancestor group — the cloud-store layout where
-    * one `.zmetadata` (or v3 inline map) object replaces thousands of
-    * per-array metadata GETs, and per-array docs may be absent entirely. */
-  def readMeta(path: String): Meta =
-    if (exists(s"$path/zarr.json")) readMetaV3(path)
-    else if (exists(s"$path/.zarray")) readMetaV2(path)
+  /** Metadata of a 1-D/2-D numeric array — the 2-D engines' view of
+    * [[readArrayMeta]]: a rank-N store points at ZarrNd, a string or time
+    * store at its own reader. */
+  def readMeta(path: String): Meta = {
+    val m = readArrayMeta(path)
+    require(m.rank <= 2, s"$path is a rank-${m.rank} array — read it through ZarrNd")
+    requireNumeric(m, path)
+    m
+  }
+
+  private[zarr] def requireNumeric(m: Meta, path: String): Unit =
+    require(Dtypes.contains(m.dtype), s"$path: unsupported dtype ${m.dtype}" +
+      (if (m.isString) " — vlen string arrays read through Zarr.readStringVector"
+       else if (m.isTime) " — datetime64/timedelta64 arrays read through Zarr.readTimeVector"
+       else ""))
+
+  /** Any array's metadata, parsed by [[ZarrMeta.parse]]: reads `zarr.json`
+    * (v3) when present, else `.zarray` (v2). When the array carries NO
+    * per-node metadata at all, falls back to a CONSOLIDATED map on an
+    * ancestor group — the cloud-store layout where one `.zmetadata` (or
+    * v3 inline map) object replaces thousands of per-array metadata GETs,
+    * and per-array docs may be absent entirely. */
+  private[zarr] def readArrayMeta(path: String): Meta = {
+    def parseFile(f: String) =
+      parseArray(mapper.readTree(new String(readBytes(s"$path/$f"), "UTF-8")), path)
+    if (exists(s"$path/zarr.json")) parseFile("zarr.json")
+    else if (exists(s"$path/.zarray")) parseFile(".zarray")
     else consolidatedMeta(path).getOrElse {
       if (exists(s"$path/.zgroup")) throw new IllegalArgumentException(
         s"$path is a Zarr v2 GROUP, not an array — select an array with " +
@@ -645,6 +514,16 @@ object Zarr {
         s"$path is not a Zarr store (no zarr.json / .zarray / .zgroup, " +
           "and no ancestor consolidated metadata covers it)")
     }
+  }
+
+  private def parseArray(doc: com.fasterxml.jackson.databind.JsonNode, path: String): Meta = {
+    if (doc.path("node_type").asText("") == "group")
+      throw new IllegalArgumentException(
+        s"$path is a Zarr v3 GROUP, not an array — select an array with " +
+          s"'$path#<key>' or .option(\"key\", <key>); available keys: " +
+          groupKeys(path).mkString(", "))
+    ZarrMeta.parse(doc, path)
+  }
 
   /** Resolve an array's Meta purely from an ancestor's consolidated map
     * (walks up a bounded number of levels accumulating the relative key).
@@ -661,9 +540,8 @@ object Zarr {
       readConsolidated(p.toString) match {
         case Some(m) if rel.nonEmpty =>
           val r = rel.mkString("/")
-          m.get(s"$r/zarr.json").map(parseMetaV3(_, path))
-            .orElse(m.get(s"$r/.zarray").map(parseMetaV2(_, path)))
-            .foreach(meta => return Some(meta))
+          m.get(s"$r/zarr.json").orElse(m.get(s"$r/.zarray"))
+            .foreach(doc => return Some(parseArray(doc, path)))
         case _ => ()
       }
       rel = p.getName :: rel
@@ -671,160 +549,6 @@ object Zarr {
       depth += 1
     }
     None
-  }
-
-  private def readMetaV2(path: String): Meta =
-    parseMetaV2(mapper.readTree(new String(readBytes(s"$path/.zarray"), "UTF-8")), path)
-
-  private def parseMetaV2(root: com.fasterxml.jackson.databind.JsonNode,
-                          path: String): Meta = {
-    import com.fasterxml.jackson.databind.JsonNode
-    // rank 1 or 2; a 1-D shape pads to the (n, 1) column form
-    val rank1 = root.path("shape").size() == 1
-    def longsOf(n: JsonNode, what: String): Array[Long] = {
-      require(n.isArray && (n.size() == 1 || n.size() == 2),
-        s"$what must be a 1- or 2-element array, got $n")
-      require((n.size() == 1) == rank1, s"$what rank differs from shape rank")
-      if (n.size() == 1) Array(n.get(0).asLong(), 1L)
-      else Array(n.get(0).asLong(), n.get(1).asLong())
-    }
-    val shape = longsOf(root.path("shape"), "shape")
-    val chunks = longsOf(root.path("chunks"), "chunks").map(chunkDim(_, "chunk dim"))
-    val compNode = root.path("compressor")
-    // zarr-python's v2 DEFAULT is blosc — the frame is self-describing, so
-    // any cname it declares decodes through Blosc (lz4/zlib/snappy/zstd;
-    // blosclz fails loudly at decode, not here)
-    val (zlib, compName) =
-      if (compNode.isNull || compNode.isMissingNode) (false, "")
-      else compNode.path("id").asText() match {
-        case "zlib"  => (true, "")
-        case "blosc" => (false, "blosc")
-        case "zstd"  => (false, "zstd") // numcodecs Zstd: bare zstd frames
-        case id      => throw new IllegalArgumentException(s"unsupported v2 compressor '$id'")
-      }
-    // dtype before filters: a string store ("|O" + vlen-utf8) should point
-    // at the right API, not die on its filter list
-    val dtype = root.path("dtype").asText()
-    require(Dtypes.contains(dtype),
-      s"unsupported dtype $dtype" +
-        (if (dtype == "|O") " — vlen string arrays read through Zarr.readStringVector"
-         else ""))
-    val filters = root.path("filters")
-    require(filters.isNull || filters.isMissingNode || filters.size() == 0,
-      s"unsupported v2 filters $filters")
-    // F-order v2 stores read through the same fromFOrder path the v3
-    // transpose codec uses (rank-1 chunks are order-agnostic); we WRITE
-    // C only, like zarr-python's default
-    val order = root.path("order").asText("C")
-    require(order == "C" || order == "F", s"unsupported v2 order '$order'")
-    val fill = fillOf(root.path("fill_value"))
-    val sep = root.path("dimension_separator").asText(".")
-    require(sep == "." || sep == "/", s"unsupported dimension_separator '$sep'")
-    Meta(shape(0), shape(1), chunks(0), chunks(1), zlib, fill, dtype,
-      fOrder = order == "F" && !rank1,
-      keyEnc = if (sep == "/") "nested" else "flat", rank1 = rank1, comp = compName)
-  }
-
-  /** Spec-robust v3 metadata read: real JSON tree traversal (Jackson, on
-    * Spark's own classpath), key-order independent, so stores written by
-    * OTHER conforming v3 writers parse correctly — not just our own.
-    * Codec chains are walked structurally; an unrecognized codec name is
-    * a hard error (decoding its bytes would be wrong), while crc32c and
-    * the index machinery of sharding_indexed are handled in the shard
-    * decoder itself. */
-  private def readMetaV3(path: String): Meta =
-    parseMetaV3(mapper.readTree(new String(readBytes(s"$path/zarr.json"), "UTF-8")), path)
-
-  private def parseMetaV3(root: com.fasterxml.jackson.databind.JsonNode,
-                          path: String): Meta = {
-    import com.fasterxml.jackson.databind.JsonNode
-    require(root.path("zarr_format").asInt() == 3,
-      s"zarr.json is not a v3 array: zarr_format=${root.path("zarr_format")}")
-    if (root.path("node_type").asText("") == "group")
-      throw new IllegalArgumentException(
-        s"$path is a Zarr v3 GROUP, not an array — select an array with " +
-          s"'$path#<key>' or .option(\"key\", <key>); available keys: " +
-          groupKeys(path).mkString(", "))
-    // rank 1 or 2; a 1-D shape pads to the (n, 1) column form
-    val rank1 = root.path("shape").size() == 1
-    def longsOf(n: JsonNode, what: String): Array[Long] = {
-      require(n.isArray && (n.size() == 1 || n.size() == 2),
-        s"$what must be a 1- or 2-element array, got $n")
-      require((n.size() == 1) == rank1, s"$what rank differs from shape rank")
-      if (n.size() == 1) Array(n.get(0).asLong(), 1L)
-      else Array(n.get(0).asLong(), n.get(1).asLong())
-    }
-    val shape = longsOf(root.path("shape"), "shape")
-    val grid = root.path("chunk_grid")
-    require(grid.path("name").asText() == "regular",
-      s"unsupported chunk_grid ${grid.path("name")}")
-    val chunks = longsOf(grid.path("configuration").path("chunk_shape"), "chunk_shape")
-      .map(chunkDim(_, "chunk dim"))
-    // both v3 encodings, both separators (we write default+"/"; the rest
-    // is read interop with other conforming writers)
-    val keyEncNode = root.path("chunk_key_encoding")
-    val keyEnc = if (keyEncNode.isMissingNode) "c/" else {
-      val name = keyEncNode.path("name").asText("default")
-      val sep = keyEncNode.path("configuration").path("separator")
-        .asText(if (name == "v2") "." else "/")
-      (name, sep) match {
-        case ("default", "/") => "c/"
-        case ("default", ".") => "c."
-        case ("v2", "/")      => "nested"
-        case ("v2", ".")      => "flat"
-        case other =>
-          throw new IllegalArgumentException(s"unsupported chunk_key_encoding $other")
-      }
-    }
-    // walk one codec chain: compression, endian, transpose order
-    def scanChain(codecs: JsonNode): (Boolean, String, Boolean, String) = {
-      var zlib = false; var endian = "little"; var fOrder = false; var comp = ""
-      codecs.forEach { c =>
-        c.path("name").asText() match {
-          case "gzip"  => zlib = true
-          case "zstd"  => comp = "zstd" // zarr-python's v3 DEFAULT codec
-          case "blosc" =>
-            // shuffle mode / cname live in the self-describing frame too;
-            // only bitshuffle is beyond the decoder, and IT fails loudly
-            // per chunk (Blosc.decompress), not here
-            comp = "blosc"
-          case "bytes" | "endian" =>
-            endian = c.path("configuration").path("endian").asText("little")
-          case "transpose" =>
-            val o = c.path("configuration").path("order")
-            val order = (0 until o.size()).map(o.get(_).asInt())
-            require(order == Seq(1, 0) || order == Seq(0, 1),
-              s"unsupported transpose order $order")
-            fOrder = order == Seq(1, 0)
-          case other =>
-            throw new IllegalArgumentException(s"unsupported v3 codec '$other'")
-        }
-      }
-      (zlib, endian, fOrder, comp)
-    }
-    val topCodecs = root.path("codecs")
-    val sharded = topCodecs.size() == 1 &&
-      topCodecs.get(0).path("name").asText() == "sharding_indexed"
-    val (inner, chainNode) = if (sharded) {
-      val cfg = topCodecs.get(0).path("configuration")
-      (longsOf(cfg.path("chunk_shape"), "inner chunk_shape"), cfg.path("codecs"))
-    } else (Array(0L, 0L), topCodecs)
-    val (zlib, endian, fOrder, compName) = scanChain(chainNode)
-    val named = root.path("data_type").asText()
-    val base = v3NamesInv.getOrElse(named,
-      throw new IllegalArgumentException(s"unsupported data_type $named"))
-    val fill = fillOf(root.path("fill_value"))
-    require(!rank1 || (!sharded && !fOrder),
-      "rank-1 v3 stores with sharding or transpose codecs are unsupported")
-    // 1-byte types carry no byte order: normalize to '|' so append
-    // validation (string equality on dtype) matches what we write
-    val dtypeStr =
-      if (elemSize("|" + base) == 1) "|" + base
-      else (if (endian == "big") ">" else "<") + base
-    Meta(shape(0), shape(1), chunks(0), chunks(1), zlib, fill,
-      dtypeStr, format = 3,
-      innerRows = inner(0).toInt, innerCols = inner(1).toInt, fOrder = fOrder,
-      keyEnc = keyEnc, rank1 = rank1, comp = compName)
   }
 
   /** Decompress a zstd frame whose length is only known from the frame
@@ -1023,6 +747,8 @@ object Zarr {
     buf
   }
 
+  /** Write an array's metadata document — every array writer commits
+    * through here, with the document from [[ZarrMeta.emit]]. */
   private[graft] def writeMetaFile(path: String, m: Meta): Unit =
     if (m.format == 3) {
       // APPEND onto an attributed v3 array must not drop its inline
@@ -1046,7 +772,7 @@ object Zarr {
       // the regenerated set; `dimension_names` in particular stays valid
       // under append/resize because rank never changes, only extent.
       val f = s"$path/zarr.json"
-      val fresh = metaJsonV3(m)
+      val fresh = ZarrMeta.emit(m)
       val out =
         if (!exists(f)) fresh
         else {
@@ -1064,9 +790,9 @@ object Zarr {
         }
       writeBytes(f, out.getBytes("UTF-8"))
     } else
-      writeBytes(s"$path/.zarray", metaJson(m).getBytes("UTF-8"))
+      writeBytes(s"$path/.zarray", ZarrMeta.emit(m).getBytes("UTF-8"))
 
-  /** The key layout we WRITE for each format (see [[Meta.keyEnc]]). */
+  /** The key layout we WRITE for each format (see [[ZarrMeta]] `keyEnc`). */
   def writeKeyEnc(format: Int): String = if (format == 3) "c/" else "flat"
 
   /** Chunk object path for (ci, cj) under the store root, per key layout.
@@ -1074,16 +800,15 @@ object Zarr {
     * "c.0" — note v2 flat and nested collapse to the same bare-index key. */
   def chunkPath(path: String, ci: Long, cj: Long, keyEnc: String,
                 rank1: Boolean = false): String =
-    if (rank1) keyEnc match {
-      case "c/"              => s"$path/c/$ci"
-      case "c."              => s"$path/c.$ci"
-      case "nested" | "flat" => s"$path/$ci"
-      case other             => throw new IllegalArgumentException(s"unknown keyEnc $other")
-    } else keyEnc match {
-      case "c/"     => s"$path/c/$ci/$cj"
-      case "c."     => s"$path/c.$ci.$cj"
-      case "nested" => s"$path/$ci/$cj"
-      case "flat"   => s"$path/$ci.$cj"
+    chunkKey(path, if (rank1) Array(ci) else Array(ci, cj), keyEnc)
+
+  /** Chunk object path for a chunk coordinate of any rank, per key layout. */
+  private[zarr] def chunkKey(path: String, coord: Array[Long], keyEnc: String): String =
+    keyEnc match {
+      case "c/"     => s"$path/c/${coord.mkString("/")}"
+      case "c."     => s"$path/c.${coord.mkString(".")}"
+      case "nested" => s"$path/${coord.mkString("/")}"
+      case "flat"   => s"$path/${coord.mkString(".")}"
       case other    => throw new IllegalArgumentException(s"unknown keyEnc $other")
     }
 
@@ -1617,9 +1342,7 @@ object Zarr {
 
   // resolved per-component plans (driver-built, task-serialized)
   private sealed trait ObsPlan extends Serializable { def out: String }
-  private final case class PString(arr: String, n: Long, chunk: Int,
-                                   zlib: Boolean, comp: String, format: Int,
-                                   keyEnc: String, out: String) extends ObsPlan
+  private final case class PString(arr: String, m: Meta, out: String) extends ObsPlan
   private final case class PCat(arr: String, m: Meta,
                                 labels: IndexedSeq[String], out: String) extends ObsPlan
   private final case class PDense(arr: String, m: Meta, j: Long,
@@ -1652,8 +1375,7 @@ object Zarr {
     val plans: Seq[ObsPlan] = cols.map {
       case ObsString(key, out) =>
         val arr = resolveArray(root, Some(key))
-        val (n, chunk, zlib, comp, format, keyEnc) = readStringMeta(arr)
-        PString(arr, n, chunk, zlib, comp, format, keyEnc, out)
+        PString(arr, vectorMeta(arr, "string")(_.isString), out)
       case ObsCategorical(key, out) =>
         val arr = resolveArray(root, Some(key))
         val cats = readAttrs(arr).path("categories")
@@ -1690,7 +1412,7 @@ object Zarr {
         PSparse(datArr, dm, spark.sparkContext.broadcast(indptr), out)
     }
     val nObsList: Seq[Long] = plans.map {
-      case p: PString => p.n
+      case p: PString => p.m.rows
       case p: PCat    => p.m.rows
       case p: PDense  => p.m.rows
       case p: PSparse => p.bptr.value.length - 1L
@@ -1699,7 +1421,7 @@ object Zarr {
     require(nObsList.forall(_ == nObs),
       s"components disagree on the obs length: ${cols.map(_.key).zip(nObsList)}")
     val rowChunks: Seq[Int] = plans.map {
-      case p: PString => p.chunk
+      case p: PString => p.m.chunkRows
       case p: PCat    => p.m.chunkRows
       case p: PDense  => p.m.chunkRows
       case _: PSparse => 1
@@ -1724,27 +1446,29 @@ object Zarr {
       val colsOut: Array[Array[Any]] = plansArr.map {
         case ps: PString =>
           val a = new Array[Any](len)
-          var ci = lo / ps.chunk
-          val ciHi = (hi - 1) / ps.chunk
+          val m = ps.m
+          val chunk = m.chunkRows
+          var ci = lo / chunk
+          val ciHi = (hi - 1) / chunk
           while (ci <= ciHi) {
-            val cLen = math.min(ps.chunk.toLong, ps.n - ci * ps.chunk).toInt
-            val f = chunkPath(ps.arr, ci, 0, ps.keyEnc, rank1 = true)
+            val cLen = math.min(chunk.toLong, m.rows - ci * chunk).toInt
+            val f = chunkPath(ps.arr, ci, 0, m.keyEnc, rank1 = true)
             val items: Array[String] =
               if (!exists(f)) Array.fill(cLen)("")
               else {
                 val raw0 = readBytes(f)
                 val raw =
-                  if (ps.comp == "blosc") Blosc.decompressSelfSized(raw0)
-                  else if (ps.comp == "zstd") zstdDecompressSelfSized(raw0)
-                  else if (ps.zlib) inflateUnsized(raw0, gzipped = ps.format == 3)
+                  if (m.comp == "blosc") Blosc.decompressSelfSized(raw0)
+                  else if (m.comp == "zstd") zstdDecompressSelfSized(raw0)
+                  else if (m.zlib) inflateUnsized(raw0, gzipped = m.format == 3)
                   else raw0
-                vlenDecode(raw, ps.chunk, expectedAlt = cLen)
+                vlenDecode(raw, chunk, expectedAlt = cLen)
               }
-            val from = math.max(lo, ci * ps.chunk)
-            val until = math.min(hi, ci * ps.chunk + cLen)
+            val from = math.max(lo, ci * chunk)
+            val until = math.min(hi, ci * chunk + cLen)
             var r = from
             while (r < until) {
-              a((r - lo).toInt) = items((r - ci * ps.chunk).toInt); r += 1
+              a((r - lo).toInt) = items((r - ci * chunk).toInt); r += 1
             }
             ci += 1
           }
@@ -2187,71 +1911,16 @@ object Zarr {
     out.toByteArray
   }
 
-  /** (n, chunk, zlib, comp, format, keyEnc) of a vlen string array. */
-  private def readStringMeta(path: String): (Long, Int, Boolean, String, Int, String) =
-    if (exists(s"$path/zarr.json")) {
-      val root = mapper.readTree(new String(readBytes(s"$path/zarr.json"), "UTF-8"))
-      require(root.path("zarr_format").asInt() == 3 &&
-        root.path("node_type").asText("") == "array",
-        s"$path/zarr.json is not a v3 array")
-      require(root.path("data_type").asText() == "string",
-        s"$path is not a string array (data_type ${root.path("data_type")}) — " +
-          "numeric arrays read through Zarr.read/readVector")
-      require(root.path("shape").size() == 1,
-        s"string arrays are rank-1 only, got shape ${root.path("shape")}")
-      val n = root.path("shape").get(0).asLong()
-      val chunk = chunkDim(
-        root.path("chunk_grid").path("configuration").path("chunk_shape").get(0).asLong(),
-        "chunk dim")
-      var zlib = false; var comp = ""; var sawVlen = false
-      root.path("codecs").forEach { c =>
-        c.path("name").asText() match {
-          case "vlen-utf8" => sawVlen = true
-          case "gzip"      => zlib = true
-          case "zstd"      => comp = "zstd"
-          case "blosc"     => comp = "blosc"
-          case other =>
-            throw new IllegalArgumentException(s"unsupported string-array codec '$other'")
-        }
-      }
-      require(sawVlen, s"$path string array lacks the vlen-utf8 codec")
-      val keyEncNode = root.path("chunk_key_encoding")
-      val name = keyEncNode.path("name").asText("default")
-      val sep = keyEncNode.path("configuration").path("separator")
-        .asText(if (name == "v2") "." else "/")
-      val keyEnc = (name, sep) match {
-        case ("default", "/") => "c/"
-        case ("default", ".") => "c."
-        case ("v2", "/")      => "nested"
-        case ("v2", ".")      => "flat"
-        case other => throw new IllegalArgumentException(s"unsupported chunk_key_encoding $other")
-      }
-      (n, chunk, zlib, comp, 3, keyEnc)
-    } else {
-      val root = mapper.readTree(new String(readBytes(s"$path/.zarray"), "UTF-8"))
-      require(root.path("dtype").asText() == "|O",
-        s"$path is not a string array (dtype ${root.path("dtype")}) — " +
-          "numeric arrays read through Zarr.read/readVector")
-      require(root.path("shape").size() == 1,
-        s"string arrays are rank-1 only, got shape ${root.path("shape")}")
-      val filters = root.path("filters")
-      require(filters.isArray && filters.size() == 1 &&
-        filters.get(0).path("id").asText() == "vlen-utf8",
-        s"object-dtype array needs the vlen-utf8 filter, got $filters")
-      val compNode = root.path("compressor")
-      val (zlib, comp) =
-        if (compNode.isNull || compNode.isMissingNode) (false, "")
-        else compNode.path("id").asText() match {
-          case "zlib"  => (true, "")
-          case "zstd"  => (false, "zstd")
-          case "blosc" => (false, "blosc")
-          case id => throw new IllegalArgumentException(s"unsupported v2 compressor '$id'")
-        }
-      val n = root.path("shape").get(0).asLong()
-      val chunk = chunkDim(root.path("chunks").get(0).asLong(), "chunk dim")
-      val sep = root.path("dimension_separator").asText(".")
-      (n, chunk, zlib, comp, 2, if (sep == "/") "nested" else "flat")
-    }
+  /** Metadata of a rank-1 array whose element kind `ok` accepts (`what`
+    * names the kind) — the string and time readers' view of
+    * [[readArrayMeta]]. */
+  private def vectorMeta(path: String, what: String)(ok: Meta => Boolean): Meta = {
+    val m = readArrayMeta(path)
+    require(ok(m), s"$path is not a $what array (dtype ${m.dtype}) — " +
+      "numeric arrays read through Zarr.read/readVector")
+    require(m.rank1, s"$what arrays are rank-1 only, got shape ${m.shape.mkString("[", ", ", "]")}")
+    m
+  }
 
   /** Write a rank-1 vlen string array from a long-form (i, s) frame —
     * the anndata obs/var index shape, readable by zarr-python as-is.
@@ -2310,46 +1979,8 @@ object Zarr {
         }
         flush()
       }
-    val metaJson =
-      if (format == 3) {
-        val compCodec =
-          if (comp == "blosc")
-            """, {"name": "blosc", "configuration": {"cname": "lz4", "clevel": 1, "shuffle": "noshuffle", "typesize": 1, "blocksize": 0}}"""
-          else if (comp == "zstd")
-            """, {"name": "zstd", "configuration": {"level": 1, "checksum": false}}"""
-          else if (zlib) """, {"name": "gzip", "configuration": {"level": 1}}"""
-          else ""
-        s"""{
-           |    "zarr_format": 3,
-           |    "node_type": "array",
-           |    "shape": [$n],
-           |    "data_type": "string",
-           |    "chunk_grid": {"name": "regular", "configuration": {"chunk_shape": [$chunk]}},
-           |    "chunk_key_encoding": {"name": "default", "configuration": {"separator": "/"}},
-           |    "fill_value": "",
-           |    "codecs": [{"name": "vlen-utf8"}$compCodec],
-           |    "attributes": {}
-           |}""".stripMargin
-      } else {
-        val compJson =
-          if (comp == "blosc")
-            """{"id": "blosc", "cname": "lz4", "clevel": 1, "shuffle": 0, "blocksize": 0}"""
-          else if (comp == "zstd") """{"id": "zstd", "level": 1}"""
-          else if (zlib) """{"id": "zlib", "level": 1}"""
-          else "null"
-        s"""{
-           |    "chunks": [$chunk],
-           |    "compressor": $compJson,
-           |    "dtype": "|O",
-           |    "fill_value": null,
-           |    "filters": [{"id": "vlen-utf8"}],
-           |    "order": "C",
-           |    "shape": [$n],
-           |    "zarr_format": 2
-           |}""".stripMargin
-      }
-    writeBytes(s"$target/${if (format == 3) "zarr.json" else ".zarray"}",
-      metaJson.getBytes("UTF-8"))
+    writeMetaFile(target, Meta(n, 1, chunk, 1, zlib, 0.0, ZarrMeta.StringDtype,
+      format, keyEnc = keyEnc, rank1 = true, comp = comp))
     if (segs.nonEmpty) ensureGroupMeta(root, segs, format)
     refreshConsolidatedAbove(target)
   }
@@ -2359,20 +1990,21 @@ object Zarr {
     * addressing as for matrices; absent chunks yield fill ("") rows. */
   def readStringVector(spark: SparkSession, path: String, key: String = ""): DataFrame = {
     val arr = resolveArray(path, Some(key).filter(_.nonEmpty))
-    val (n, chunk, zlib, comp, format, keyEnc) = readStringMeta(arr)
+    val m = vectorMeta(arr, "string")(_.isString)
+    val (n, chunk) = (m.rows, m.chunkRows)
     val nChunks = (n + chunk - 1) / chunk
     import spark.implicits._
     spark.range(nChunks).as[Long].flatMap { ci =>
       val len = math.min(chunk.toLong, n - ci * chunk).toInt
-      val f = chunkPath(arr, ci, 0, keyEnc, rank1 = true)
+      val f = chunkPath(arr, ci, 0, m.keyEnc, rank1 = true)
       val items: Array[String] =
         if (!exists(f)) Array.fill(len)("")
         else {
           val raw0 = readBytes(f)
           val raw =
-            if (comp == "blosc") Blosc.decompressSelfSized(raw0)
-            else if (comp == "zstd") zstdDecompressSelfSized(raw0)
-            else if (zlib) inflateUnsized(raw0, gzipped = format == 3)
+            if (m.comp == "blosc") Blosc.decompressSelfSized(raw0)
+            else if (m.comp == "zstd") zstdDecompressSelfSized(raw0)
+            else if (m.zlib) inflateUnsized(raw0, gzipped = m.format == 3)
             else raw0
           vlenDecode(raw, chunk, expectedAlt = len)
         }
@@ -2389,8 +2021,6 @@ object Zarr {
   // v2 stores the literal "<M8[ns]" dtype zarr-python emits; v3 the
   // zarr-python "numpy.datetime64" extension data_type.
 
-  private val TimeDtypes = Set("<M8[ns]", ">M8[ns]", "<m8[ns]", ">m8[ns]")
-
   /** Write a rank-1 datetime64[ns]/timedelta64[ns] array from a long-form
     * (i, v: epoch-nanos long) frame. Same distributed mechanics as
     * [[writeStringVector]]: one write task per shuffle partition streams
@@ -2402,8 +2032,8 @@ object Zarr {
                       comp: String = "", zlib: Boolean = false,
                       fill: Long = 0L): Unit = {
     require(n > 0 && chunk > 0, s"need n > 0 and chunk > 0, got n=$n chunk=$chunk")
-    require(TimeDtypes.contains(dtype),
-      s"unsupported time dtype '$dtype' (one of ${TimeDtypes.mkString(", ")})")
+    require(ZarrMeta.TimeDtypes.contains(dtype),
+      s"unsupported time dtype '$dtype' (one of ${ZarrMeta.TimeDtypes.mkString(", ")})")
     require(format == 2 || format == 3, s"zarrFormat must be 2 or 3, got $format")
     require(comp == "" || comp == "blosc" || comp == "zstd",
       s"unsupported comp '$comp'")
@@ -2453,145 +2083,34 @@ object Zarr {
         }
         flush()
       }
-    val unit = "ns"
-    val kind = if (dtype.charAt(1) == 'M') "datetime64" else "timedelta64"
-    val metaJson =
-      if (format == 3) {
-        val compCodec =
-          if (comp == "blosc")
-            """, {"name": "blosc", "configuration": {"cname": "lz4", "clevel": 1, "shuffle": "shuffle", "typesize": 8, "blocksize": 0}}"""
-          else if (comp == "zstd")
-            """, {"name": "zstd", "configuration": {"level": 1, "checksum": false}}"""
-          else if (zlib) """, {"name": "gzip", "configuration": {"level": 1}}"""
-          else ""
-        val endian = if (big) "big" else "little"
-        s"""{
-           |    "zarr_format": 3,
-           |    "node_type": "array",
-           |    "shape": [$n],
-           |    "data_type": {"name": "numpy.$kind", "configuration": {"unit": "$unit", "scale_factor": 1}},
-           |    "chunk_grid": {"name": "regular", "configuration": {"chunk_shape": [$chunk]}},
-           |    "chunk_key_encoding": {"name": "default", "configuration": {"separator": "/"}},
-           |    "fill_value": $fill,
-           |    "codecs": [{"name": "bytes", "configuration": {"endian": "$endian"}}$compCodec],
-           |    "attributes": {}
-           |}""".stripMargin
-      } else {
-        val compJson =
-          if (comp == "blosc")
-            """{"id": "blosc", "cname": "lz4", "clevel": 1, "shuffle": 1, "blocksize": 0}"""
-          else if (comp == "zstd") """{"id": "zstd", "level": 1}"""
-          else if (zlib) """{"id": "zlib", "level": 1}"""
-          else "null"
-        s"""{
-           |    "chunks": [$chunk],
-           |    "compressor": $compJson,
-           |    "dtype": "$dtype",
-           |    "fill_value": $fill,
-           |    "filters": null,
-           |    "order": "C",
-           |    "shape": [$n],
-           |    "zarr_format": 2
-           |}""".stripMargin
-      }
-    writeBytes(s"$target/${if (format == 3) "zarr.json" else ".zarray"}",
-      metaJson.getBytes("UTF-8"))
+    writeMetaFile(target, Meta(n, 1, chunk, 1, zlib, 0.0, dtype, format,
+      keyEnc = keyEnc, rank1 = true, comp = comp).copy(timeFill = fill))
     if (segs.nonEmpty) ensureGroupMeta(root, segs, format)
     refreshConsolidatedAbove(target)
   }
-
-  /** (n, chunk, big-endian, zlib, comp, format, keyEnc, fill) of a
-    * datetime64/timedelta64[ns] rank-1 array, v2 or v3. */
-  private def readTimeMeta(path: String): (Long, Int, Boolean, Boolean, String, Int, String, Long) =
-    if (exists(s"$path/zarr.json")) {
-      val root = mapper.readTree(new String(readBytes(s"$path/zarr.json"), "UTF-8"))
-      require(root.path("zarr_format").asInt() == 3 &&
-        root.path("node_type").asText("") == "array",
-        s"$path/zarr.json is not a v3 array")
-      val dt = root.path("data_type")
-      val name = dt.path("name").asText("")
-      require(name == "numpy.datetime64" || name == "numpy.timedelta64",
-        s"$path is not a datetime64/timedelta64 array (data_type $dt) — " +
-          "numeric arrays read through Zarr.read/readVector")
-      val cfg = dt.path("configuration")
-      require(cfg.path("unit").asText() == "ns" && cfg.path("scale_factor").asInt(1) == 1,
-        s"only ns-unit scale-1 time arrays are supported, got $cfg")
-      require(root.path("shape").size() == 1,
-        s"time arrays are rank-1 only, got shape ${root.path("shape")}")
-      val n = root.path("shape").get(0).asLong()
-      val chunk = chunkDim(
-        root.path("chunk_grid").path("configuration").path("chunk_shape").get(0).asLong(),
-        "chunk dim")
-      var zlib = false; var comp = ""; var big = false
-      root.path("codecs").forEach { c =>
-        c.path("name").asText() match {
-          case "bytes" => big = c.path("configuration").path("endian").asText("little") == "big"
-          case "gzip"  => zlib = true
-          case "zstd"  => comp = "zstd"
-          case "blosc" => comp = "blosc"
-          case other =>
-            throw new IllegalArgumentException(s"unsupported time-array codec '$other'")
-        }
-      }
-      val keyEncNode = root.path("chunk_key_encoding")
-      val kname = keyEncNode.path("name").asText("default")
-      val sep = keyEncNode.path("configuration").path("separator")
-        .asText(if (kname == "v2") "." else "/")
-      val keyEnc = (kname, sep) match {
-        case ("default", "/") => "c/"
-        case ("default", ".") => "c."
-        case ("v2", "/")      => "nested"
-        case ("v2", ".")      => "flat"
-        case other => throw new IllegalArgumentException(s"unsupported chunk_key_encoding $other")
-      }
-      (n, chunk, big, zlib, comp, 3, keyEnc, root.path("fill_value").asLong(0L))
-    } else {
-      val root = mapper.readTree(new String(readBytes(s"$path/.zarray"), "UTF-8"))
-      val dtype = root.path("dtype").asText()
-      require(TimeDtypes.contains(dtype),
-        s"$path is not a datetime64/timedelta64 array (dtype '$dtype') — " +
-          "numeric arrays read through Zarr.read/readVector")
-      require(root.path("shape").size() == 1,
-        s"time arrays are rank-1 only, got shape ${root.path("shape")}")
-      require(root.path("filters").isNull || root.path("filters").isMissingNode,
-        s"unsupported filters on time array: ${root.path("filters")}")
-      val compNode = root.path("compressor")
-      val (zlib, comp) =
-        if (compNode.isNull || compNode.isMissingNode) (false, "")
-        else compNode.path("id").asText() match {
-          case "zlib"  => (true, "")
-          case "zstd"  => (false, "zstd")
-          case "blosc" => (false, "blosc")
-          case id => throw new IllegalArgumentException(s"unsupported v2 compressor '$id'")
-        }
-      val n = root.path("shape").get(0).asLong()
-      val chunk = chunkDim(root.path("chunks").get(0).asLong(), "chunk dim")
-      val sep = root.path("dimension_separator").asText(".")
-      (n, chunk, dtype.startsWith(">"), zlib, comp, 2,
-        if (sep == "/") "nested" else "flat",
-        root.path("fill_value").asLong(0L))
-    }
 
   /** Read a rank-1 datetime64/timedelta64[ns] array back as
     * (i, v: epoch-nanos long) — bit-exact, never through double. Absent
     * chunks materialize as the store's fill_value. */
   def readTimeVector(spark: SparkSession, path: String, key: String = ""): DataFrame = {
     val arr = resolveArray(path, Some(key).filter(_.nonEmpty))
-    val (n, chunk, big, zlib, comp, format, keyEnc, fill) = readTimeMeta(arr)
+    val m = vectorMeta(arr, "datetime64/timedelta64")(_.isTime)
+    val (n, chunk, fill) = (m.rows, m.chunkRows, m.timeFill)
+    val big = m.dtype.startsWith(">")
     val nChunks = (n + chunk - 1) / chunk
     import spark.implicits._
     spark.range(nChunks).as[Long].flatMap { ci =>
       val len = math.min(chunk.toLong, n - ci * chunk).toInt
-      val f = chunkPath(arr, ci, 0, keyEnc, rank1 = true)
+      val f = chunkPath(arr, ci, 0, m.keyEnc, rank1 = true)
       val items: Array[Long] =
         if (!exists(f)) Array.fill(len)(fill)
         else {
           val raw0 = readBytes(f)
           val raw =
-            if (comp == "blosc") Blosc.decompress(raw0, chunk * 8)
-            else if (comp == "zstd") zstdDecompressSelfSized(raw0)
-            else if (!zlib) raw0
-            else if (format == 3) gunzip(raw0, chunk * 8) else inflate(raw0, chunk * 8)
+            if (m.comp == "blosc") Blosc.decompress(raw0, chunk * 8)
+            else if (m.comp == "zstd") zstdDecompressSelfSized(raw0)
+            else if (!m.zlib) raw0
+            else if (m.format == 3) gunzip(raw0, chunk * 8) else inflate(raw0, chunk * 8)
           require(raw.length >= len * 8,
             s"time chunk $f holds ${raw.length} bytes, need ${len * 8}")
           val bb = ByteBuffer.wrap(raw)

@@ -4,15 +4,15 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
-/** Rank-N (N ≥ 1, aimed at N ≥ 3) dense Zarr v2 arrays — the tensor face
-  * zappy/zarr-python expose for image stacks, (time, lat, lon) cubes and
-  * other ndarray-shaped stores that the 2-D [[Zarr]] engine (matrix-shaped,
-  * scanpy-workload) deliberately does not model. Closes the rank boundary
-  * the r17 verdict asked to decide: rank-1/2 keep their specialized
-  * engines (pushdown DSv2, sharding, append/resize, sparse groups); this
-  * module supplies spec-complete READ/WRITE for higher ranks in the same
+/** Rank-N (N ≥ 1, aimed at N ≥ 3) dense Zarr arrays, v2 and v3 — the
+  * tensor face zappy/zarr-python expose for image stacks, (time, lat, lon)
+  * cubes and other ndarray-shaped stores. Rank-1/2 keep their specialized
+  * engines in [[Zarr]] (pushdown DSv2, sharding, F-order, append/resize,
+  * sparse groups); this module supplies READ/WRITE at any rank in the same
   * coordinate form, so `from_zarr` on a foreign rank-3 store works and a
-  * rank-3 store written here opens in stock zarr-python.
+  * rank-3 store written here opens in stock zarr-python. Metadata is the
+  * shared [[ZarrMeta]] model — the same parser and emitter as the 2-D
+  * engines, every write committing through [[Zarr.writeMetaFile]].
   *
   * Data model: a coordinate DataFrame (i0 … i{N−1}, v) — the N-D
   * generalization of ZMatrix's (i, j, v). Chunks are the unit of
@@ -20,208 +20,31 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   * write), so the layout scales exactly like the 2-D paths: nothing ever
   * materializes more than one chunk per task.
   *
-  * Spec notes (v2, zarr.dev/zarr-specs — same contract the 2-D engine
-  * pins by interop test): every stored chunk is the FULL chunk shape —
-  * edge chunks are fill-padded, so all chunk objects have identical
-  * decoded length; C-order within the chunk; missing chunk reads as
-  * fill; keys are dot-joined chunk coordinates ("2.0.1"), slash-joined
-  * when `dimension_separator` is "/". Compressors: the shared codec set
-  * (null/zlib/blosc-lz4/zstd via [[Zarr.encodeChunk]]/[[Zarr.decodeChunk]]).
+  * Spec notes (zarr.dev/zarr-specs — the contract the 2-D engine pins by
+  * interop test): every stored chunk is the FULL chunk shape — edge chunks
+  * are fill-padded, so all chunk objects have identical decoded length;
+  * C-order within the chunk; missing chunk reads as fill; keys follow the
+  * store's key encoding (v2 "2.0.1" / "2/0/1", v3 "c/2/0/1" / "c.2.0.1").
+  * Compressors: the shared codec set (null/zlib/blosc-lz4/zstd via
+  * [[Zarr.encodeChunk]]/[[Zarr.decodeChunk]]); numeric dtypes only.
   */
 object ZarrNd {
 
-  /** Rank-N array metadata (the [[Zarr.Meta]] face for N dims).
-    * `format` 2 or 3; `nested` = v2 "/"-separated keys, or for v3 the
-    * default "/"-separated `c/…` encoding (false = "."-joined). */
-  final case class MetaN(shape: Array[Long], chunks: Array[Int], dtype: String,
-                         zlib: Boolean, comp: String, fill: Double,
-                         nested: Boolean, format: Int = 2) {
-    def rank: Int = shape.length
-    def chunkElems: Int = chunks.product
-    /** chunk-grid extent per dim. */
-    def grid: Array[Long] =
-      shape.indices.map(d => (shape(d) + chunks(d) - 1) / chunks(d)).toArray
-    def nChunks: Long = grid.product
-  }
-
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  private def fillLiteralN(m: MetaN): String = {
-    val it = Set("i8", "i4", "i2", "i1", "u2", "u1")
-    if (m.dtype.endsWith("b1")) (if (m.fill != 0.0) "true" else "false")
-    else if (it.contains(m.dtype.substring(1))) m.fill.toLong.toString
-    else if (m.fill.isNaN) "\"NaN\""
-    else if (m.fill.isPosInfinity) "\"Infinity\""
-    else if (m.fill.isNegInfinity) "\"-Infinity\""
-    else m.fill.toString
-  }
-
-  private def metaJsonN(m: MetaN): String = {
-    val comp =
-      if (m.comp == "blosc")
-        """{"id": "blosc", "cname": "lz4", "clevel": 1, "shuffle": 1, "blocksize": 0}"""
-      else if (m.comp == "zstd") """{"id": "zstd", "level": 1}"""
-      else if (m.zlib) """{"id": "zlib", "level": 1}"""
-      else "null"
-    val sep = if (m.nested) "\n    \"dimension_separator\": \"/\"," else ""
-    s"""{
-       |    "chunks": [${m.chunks.mkString(", ")}],$sep
-       |    "compressor": $comp,
-       |    "dtype": "${m.dtype}",
-       |    "fill_value": ${fillLiteralN(m)},
-       |    "filters": null,
-       |    "order": "C",
-       |    "shape": [${m.shape.mkString(", ")}],
-       |    "zarr_format": 2
-       |}""".stripMargin
-  }
-
-  /** v3 `zarr.json` for a rank-N array — the stock zarr-python v3 layout
-    * (named dtype, regular chunk grid, bytes codec + optional
-    * gzip/zstd/blosc frame, default chunk-key encoding). */
-  private def metaJsonNv3(m: MetaN): String = {
-    val bytesCodec = """{"name": "bytes", "configuration": {"endian": "little"}}"""
-    val codecs =
-      if (m.comp == "blosc")
-        s"""[$bytesCodec, {"name": "blosc", "configuration": {"cname": "lz4", "clevel": 1, "shuffle": "shuffle", "typesize": ${Zarr.elemSize(m.dtype)}, "blocksize": 0}}]"""
-      else if (m.comp == "zstd")
-        s"""[$bytesCodec, {"name": "zstd", "configuration": {"level": 1, "checksum": false}}]"""
-      else if (m.zlib)
-        s"""[$bytesCodec, {"name": "gzip", "configuration": {"level": 1}}]"""
-      else s"""[$bytesCodec]"""
-    val sep = if (m.nested) "/" else "."
-    s"""{
-       |    "zarr_format": 3,
-       |    "node_type": "array",
-       |    "shape": [${m.shape.mkString(", ")}],
-       |    "data_type": "${Zarr.v3Names(m.dtype.substring(1))}",
-       |    "chunk_grid": {"name": "regular", "configuration": {"chunk_shape": [${m.chunks.mkString(", ")}]}},
-       |    "chunk_key_encoding": {"name": "default", "configuration": {"separator": "$sep"}},
-       |    "fill_value": ${fillLiteralN(m)},
-       |    "codecs": $codecs,
-       |    "attributes": {}
-       |}""".stripMargin
-  }
-
-  /** Parse rank-N metadata — v2 `.zarray` or v3 `zarr.json` (any rank;
-    * the 1-D/2-D engines keep their own rank-restricted parsers). */
-  def readMetaN(path: String): MetaN = {
-    val m = if (Zarr.exists(s"$path/zarr.json")) readMetaNv3(path)
-            else readMetaNv2(path)
+  /** Parse rank-N metadata (v2 `.zarray` or v3 `zarr.json`, consolidated
+    * fallback included) through the shared [[ZarrMeta]] parser, and check
+    * it fits this engine: numeric elements, C-order, unsharded, and a
+    * chunk small enough for one JVM buffer. */
+  def readMetaN(path: String): Zarr.Meta = {
+    val m = Zarr.readArrayMeta(path)
+    Zarr.requireNumeric(m, path)
+    require(!m.fOrder && !m.sharded, s"$path: F-order and sharded N-D stores are not supported")
     // a FOREIGN store's chunk-element product must fit one JVM buffer —
-    // a silent Int overflow would decode garbage, not error (the 2-D
-    // chunkDim rule at rank N)
+    // a silent Int overflow would decode garbage, not error
     require(m.chunkElems.toLong == m.chunks.map(_.toLong).product,
       s"$path: chunk of ${m.chunks.mkString("x")} elements exceeds one " +
         "Int-addressable buffer")
     m
   }
-
-  private def readMetaNv2(path: String): MetaN = {
-    val root = mapper.readTree(
-      new String(Zarr.readBytes(s"$path/.zarray"), "UTF-8"))
-    require(root.path("zarr_format").asInt() == 2,
-      s"$path: .zarray must declare zarr_format 2")
-    require(root.path("order").asText("C") == "C",
-      s"$path: F-order N-D stores not supported")
-    require(root.path("filters").isNull || root.path("filters").isMissingNode,
-      s"$path: filter chains not supported")
-    def longs(n: com.fasterxml.jackson.databind.JsonNode): Array[Long] = {
-      require(n.isArray && n.size() > 0, s"$path: bad shape/chunks")
-      (0 until n.size()).map(n.get(_).asLong()).toArray
-    }
-    val shape = longs(root.path("shape"))
-    val chunks = longs(root.path("chunks")).map { c =>
-      require(c > 0 && c <= Int.MaxValue, s"$path: chunk extent $c"); c.toInt
-    }
-    require(shape.length == chunks.length, s"$path: rank mismatch")
-    val compNode = root.path("compressor")
-    val (zlib, comp) =
-      if (compNode.isNull || compNode.isMissingNode) (false, "")
-      else compNode.path("id").asText() match {
-        case "zlib"  => (true, "")
-        case "blosc" => (false, "blosc")
-        case "zstd"  => (false, "zstd")
-        case other => throw new IllegalArgumentException(
-          s"$path: unsupported compressor '$other'")
-      }
-    val fillNode = root.path("fill_value")
-    val fill =
-      if (fillNode.isNull || fillNode.isMissingNode) 0.0
-      else if (fillNode.isTextual) fillNode.asText() match {
-        case "NaN" => Double.NaN
-        case "Infinity" => Double.PositiveInfinity
-        case "-Infinity" => Double.NegativeInfinity
-        case other => throw new IllegalArgumentException(
-          s"$path: fill_value '$other'")
-      }
-      else if (fillNode.isBoolean) { if (fillNode.asBoolean()) 1.0 else 0.0 }
-      else fillNode.asDouble()
-    MetaN(shape, chunks, root.path("dtype").asText(), zlib, comp, fill,
-      nested = root.path("dimension_separator").asText(".") == "/")
-  }
-
-  private def readMetaNv3(path: String): MetaN = {
-    val root = mapper.readTree(
-      new String(Zarr.readBytes(s"$path/zarr.json"), "UTF-8"))
-    require(root.path("zarr_format").asInt() == 3 &&
-      root.path("node_type").asText() == "array", s"$path: not a v3 array")
-    def longs(n: com.fasterxml.jackson.databind.JsonNode): Array[Long] = {
-      require(n.isArray && n.size() > 0, s"$path: bad shape/chunk_shape")
-      (0 until n.size()).map(n.get(_).asLong()).toArray
-    }
-    val shape = longs(root.path("shape"))
-    val grid = root.path("chunk_grid")
-    require(grid.path("name").asText() == "regular", s"$path: chunk grid")
-    val chunks = longs(grid.path("configuration").path("chunk_shape")).map { c =>
-      require(c > 0 && c <= Int.MaxValue, s"$path: chunk extent $c"); c.toInt
-    }
-    require(shape.length == chunks.length, s"$path: rank mismatch")
-    val dtName = root.path("data_type").asText()
-    val dt = "<" + Zarr.v3NamesInv.getOrElse(dtName,
-      throw new IllegalArgumentException(s"$path: data_type '$dtName'"))
-    // codec chain: [bytes(endian)] + at most one frame codec
-    val codecs = root.path("codecs")
-    var zlib = false; var comp = ""; var big = false
-    (0 until codecs.size()).foreach { k =>
-      val c = codecs.get(k)
-      c.path("name").asText() match {
-        case "bytes" =>
-          big = c.path("configuration").path("endian").asText("little") == "big"
-        case "gzip"  => zlib = true
-        case "zstd"  => comp = "zstd"
-        case "blosc" => comp = "blosc"
-        case other => throw new IllegalArgumentException(
-          s"$path: unsupported v3 codec '$other' for N-D reads")
-      }
-    }
-    require(!big, s"$path: big-endian N-D stores not supported")
-    val kenc = root.path("chunk_key_encoding")
-    require(kenc.isMissingNode || kenc.path("name").asText("default") == "default",
-      s"$path: N-D reads support the default chunk-key encoding")
-    val sep = kenc.path("configuration").path("separator").asText("/")
-    val fillNode = root.path("fill_value")
-    val fill =
-      if (fillNode.isNull || fillNode.isMissingNode) 0.0
-      else if (fillNode.isTextual) fillNode.asText() match {
-        case "NaN" => Double.NaN
-        case "Infinity" => Double.PositiveInfinity
-        case "-Infinity" => Double.NegativeInfinity
-        case other => throw new IllegalArgumentException(
-          s"$path: fill_value '$other'")
-      }
-      else if (fillNode.isBoolean) { if (fillNode.asBoolean()) 1.0 else 0.0 }
-      else fillNode.asDouble()
-    MetaN(shape, chunks, dt, zlib, comp, fill, nested = sep == "/", format = 3)
-  }
-
-  private def chunkKey(path: String, coord: Array[Long], nested: Boolean,
-                       format: Int = 2): String =
-    if (format == 3) {
-      // v3 default encoding: "c" + sep + coords joined by sep
-      val sep = if (nested) "/" else "."
-      s"$path/${(("c" +: coord.map(_.toString)).mkString(sep))}"
-    } else s"$path/${coord.mkString(if (nested) "/" else ".")}"
 
   private def coordCols(rank: Int): Seq[String] = (0 until rank).map(d => s"i$d")
 
@@ -252,26 +75,27 @@ object ZarrNd {
     // `nested` picks the key separator in both formats (true = "/");
     // zarr-python's v3 default is "/" — pass nested = true for v3 stores
     // meant to open there with zero configuration
-    val m = MetaN(shape.toArray, chunks.toArray, dtype, zlib, comp, fill,
-      nested = nested, format = format)
+    val m = metaOf(shape, chunks, dtype, zlib, comp, fill, nested, format)
     require(m.chunkElems.toLong == chunks.map(_.toLong).product,
       "chunk too large: elements must fit one Int-addressable buffer")
     Zarr.delete(path, recursive = true)
     writeChunks(df, path, m, 0L, shape.head)
-    writeMetaN(path, m)
+    Zarr.writeMetaFile(path, m)
   }
 
-  private def writeMetaN(path: String, m: MetaN): Unit =
-    if (m.format == 3)
-      Zarr.writeBytes(s"$path/zarr.json", metaJsonNv3(m).getBytes("UTF-8"))
-    else
-      Zarr.writeBytes(s"$path/.zarray", metaJsonN(m).getBytes("UTF-8"))
+  private def metaOf(shape: Seq[Long], chunks: Seq[Int], dtype: String,
+                     zlib: Boolean, comp: String, fill: Double, nested: Boolean,
+                     format: Int): Zarr.Meta =
+    Zarr.Meta(shape.toList, chunks.toList, dtype, zlib, comp, fill, 0L, format,
+      fOrder = false, inner = Nil,
+      keyEnc = if (format == 3) { if (nested) "c/" else "c." }
+               else if (nested) "nested" else "flat")
 
   /** The shared chunk-assembly core: shuffle by linearized chunk id, one
     * fill-initialized buffer per chunk per task, encode + publish. Cells
     * must sit inside `m.shape` AND inside [axis0Lo, axis0Hi) on axis 0 —
     * the band contract appendBand enforces. */
-  private def writeChunks(df: DataFrame, path: String, m: MetaN,
+  private def writeChunks(df: DataFrame, path: String, m: Zarr.Meta,
                           axis0Lo: Long, axis0Hi: Long): Unit = {
     val rank = m.rank
     val chunks = m.chunks
@@ -289,9 +113,9 @@ object ZarrNd {
     val cid = (0 until rank)
       .map(d => expr(s"i$d div ${chunks(d)}") * strides(d))
       .reduce(_ + _)
-    val shapeB = m.shape; val chunksB = m.chunks; val gridB = grid
+    val shapeB = m.shape.toArray; val chunksB = m.chunks.toArray; val gridB = grid
     val dtypeB = m.dtype; val zlibB = m.zlib; val compB = m.comp
-    val fillB = m.fill; val nestedB = m.nested; val elemsB = m.chunkElems
+    val fillB = m.fill; val keyEncB = m.keyEnc; val elemsB = m.chunkElems
     val formatB = m.format; val loB = axis0Lo; val hiB = axis0Hi
     val parts = math.max(spark.sessionState.conf.numShufflePartitions,
       math.min((m.nChunks + 7) / 8, 65536L).toInt)
@@ -304,7 +128,7 @@ object ZarrNd {
       var buf: Array[Double] = null
       val coord = new Array[Long](r)
       def flush(): Unit = if (buf != null) {
-        Zarr.writeBytes(chunkKey(path, coord, nestedB, formatB),
+        Zarr.writeBytes(Zarr.chunkKey(path, coord, keyEncB),
           Zarr.encodeChunk(buf, dtypeB, zlibB, formatB, compB))
         buf = null
       }
@@ -365,26 +189,27 @@ object ZarrNd {
     require(chunks.nonEmpty && bandStart % chunks.head == 0,
       s"band start $bandStart must align to the axis-0 chunk ${chunks.head}")
     require(shapeTail.length + 1 == chunks.length, "shapeTail/chunks rank mismatch")
+    val want = metaOf(bandEnd +: shapeTail, chunks, dtype, zlib, comp, fill,
+      nested, format)
     val exists = Zarr.exists(s"$path/zarr.json") || Zarr.exists(s"$path/.zarray")
     val shape0 =
       if (!exists) bandEnd
       else {
         val m0 = readMetaN(path)
-        require(m0.chunks.toSeq == chunks.toSeq &&
-          m0.shape.drop(1).toSeq == shapeTail.toSeq &&
-          m0.dtype == dtype && m0.zlib == zlib && m0.comp == comp &&
-          m0.nested == nested && m0.format == format &&
-          // fill is load-bearing: the rewrite below re-emits metadata, so a
-          // divergent fill would silently change how every MISSING chunk
-          // reads (NaN-safe comparison — NaN fill is legal for floats)
+        // everything but the axis-0 extent must match. Fill is
+        // load-bearing: the rewrite below re-emits metadata, so a divergent
+        // fill would silently change how every MISSING chunk reads
+        // (NaN-safe comparison — NaN fill is legal for floats)
+        require(m0.shape.tail == want.shape.tail &&
+          m0.copy(shape = want.shape, fill = 0.0) == want.copy(fill = 0.0) &&
           (m0.fill == fill || (m0.fill.isNaN && fill.isNaN)),
           s"$path: band geometry/codec/fill differs from the existing store")
-        math.max(m0.shape(0), bandEnd)
+        math.max(m0.shape.head, bandEnd)
       }
-    val m = MetaN((shape0 +: shapeTail).toArray, chunks.toArray, dtype, zlib,
-      comp, fill, nested = nested, format = format)
+    val m = want.copy(shape = shape0 +: want.shape.tail)
     writeChunks(df, path, m, bandStart, bandEnd)
-    writeMetaN(path, m)
+    // writeMetaFile keeps a v3 store's attributes and foreign fields
+    Zarr.writeMetaFile(path, m)
   }
 
   /** Read a rank-N store back as (i0 … i{N−1}, v) — partition-per-chunk
@@ -439,18 +264,20 @@ object ZarrNd {
       .getOrElse(math.max(spark.sparkContext.defaultParallelism.toLong * 4, 4096L))
     val numSlices = math.max(1L, math.min(nSel, maxSlices)).toInt
     val mB = m
+    // per-cell loops index arrays, not the model's Seqs
+    val shapeB = m.shape.toArray; val chunksB = m.chunks.toArray
     val winB = win
     val rdd = spark.sparkContext
       .range(0L, nSel, 1L, math.max(1, numSlices))
       .flatMap { ord =>
         // mixed-radix decode: selection ordinal -> chunk coordinate
-        val r = mB.rank
+        val r = shapeB.length
         val c = new Array[Long](r)
         var rem = ord
         var dd = r - 1
         while (dd >= 0) { c(dd) = cLo(dd) + rem % ext(dd); rem /= ext(dd); dd -= 1 }
         val elems = mB.chunkElems
-        val key = chunkKey(path, c, mB.nested, mB.format)
+        val key = Zarr.chunkKey(path, c, mB.keyEnc)
         val buf =
           if (Zarr.exists(key))
             Zarr.decodeChunk(Zarr.readBytes(key), elems, mB.zlib, mB.dtype,
@@ -459,17 +286,17 @@ object ZarrNd {
         // emit in-bounds cells only (edge chunks are fill-padded on disk)
         val base = new Array[Long](r)
         var d = 0
-        while (d < r) { base(d) = c(d) * mB.chunks(d); d += 1 }
+        while (d < r) { base(d) = c(d) * chunksB(d); d += 1 }
         (0 until elems).iterator.flatMap { off =>
           val idx = new Array[Long](r)
           var rem = off
           var inBounds = true
           var k = r - 1
           while (k >= 0) {
-            val local = rem % mB.chunks(k)
-            rem /= mB.chunks(k)
+            val local = rem % chunksB(k)
+            rem /= chunksB(k)
             val g = base(k) + local
-            if (g >= mB.shape(k) || g < winB(k)._1 || g >= winB(k)._2)
+            if (g >= shapeB(k) || g < winB(k)._1 || g >= winB(k)._2)
               inBounds = false
             idx(k) = g
             k -= 1

@@ -39,11 +39,12 @@ class ZarrNdSpec extends AnyFunSuite {
   }
 
   test("rank-3 v3 roundtrips: raw, gzip, zstd, both key separators") {
-    def v3(tag: String, zlib: Boolean, comp: String, nested: Boolean): Unit = {
+    def v3(tag: String, zlib: Boolean, comp: String, nested: Boolean,
+           dtype: String = "<f8"): Unit = {
       val path = s"${GraftPaths.tmpRoot}/zarrnd_v3_$tag"
       val df = cube(7, 5, 6)
       ZarrNd.write(df, path, Seq(7L, 5L, 6L), Seq(4, 3, 4),
-        zlib = zlib, comp = comp, nested = nested, format = 3)
+        dtype = dtype, zlib = zlib, comp = comp, nested = nested, format = 3)
       val back = ZarrNd.read(spark, path).orderBy("i0", "i1", "i2").collect()
       assert(back.sameElements(df.orderBy("i0", "i1", "i2").collect()),
         s"v3 $tag mismatch")
@@ -52,6 +53,8 @@ class ZarrNdSpec extends AnyFunSuite {
     v3("gzip", zlib = true, comp = "", nested = true)
     v3("zstd", zlib = false, comp = "zstd", nested = true)
     v3("dotkeys", zlib = true, comp = "", nested = false)
+    // the bytes codec must declare the chunks' byte order
+    v3("bigendian", zlib = false, comp = "", nested = true, dtype = ">f8")
   }
 
   test("v3 metadata is stock zarr-python: zarr.json, named dtype, c/-keys") {
@@ -175,6 +178,14 @@ class ZarrNdSpec extends AnyFunSuite {
     intercept[org.apache.spark.SparkException] {
       ZarrNd.appendBand(band(0, 8), path, 0, 4, Seq(3L), Seq(4, 3))
     }
+    // a 1-byte dtype reads back as the "|u1" it was written with, so a
+    // second v3 band passes the geometry check
+    val u1 = s"${GraftPaths.tmpRoot}/zarrnd_band_u1_v3"
+    graft.zarr.Zarr.delete(u1, recursive = true)
+    ZarrNd.appendBand(band(0, 4), u1, 0, 4, Seq(3L), Seq(4, 3), dtype = "|u1", format = 3)
+    ZarrNd.appendBand(band(4, 8), u1, 4, 8, Seq(3L), Seq(4, 3), dtype = "|u1", format = 3)
+    assert(ZarrNd.read(spark, u1).orderBy("i0", "i1").collect()
+      .sameElements(band(0, 8).orderBy("i0", "i1").collect()))
   }
 
   test("readRange: exact window, unprobed chunks provably never opened") {
@@ -214,6 +225,13 @@ class ZarrNdSpec extends AnyFunSuite {
       val m = ZarrNd.readMetaN(path)
       assert(m.rank == 3 && m.format == format)
       assert(ZarrNd.read(spark, path).count() == 7 * 5 * 6)
+      // ...and a later band's metadata rewrite must keep the names
+      val extra = cube(10, 5, 6).filter(col("i0") >= 8)
+      ZarrNd.appendBand(extra, path, 8, 10, Seq(5L, 6L), Seq(4, 3, 4),
+        nested = format == 3, format = format)
+      assert(ZarrNd.readMetaN(path).shape.head == 10L)
+      assert(graft.zarr.Zarr.readXarrayDims(path) == Seq("time", "lat", "lon"),
+        s"v$format append dropped the dimension names")
     }
   }
 

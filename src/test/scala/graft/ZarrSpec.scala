@@ -993,6 +993,46 @@ class ZarrSpec extends AnyFunSuite {
     assert(back.map(_.toSeq).toSeq == dense.map(_.toSeq).toSeq)
   }
 
+  test("array metadata: parse(emit(m)) == m and emit is a fixed point over the writable grid") {
+    import graft.zarr.ZarrMeta
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val numeric = Seq("<f8", "<f4", "<f2", "<i8", "|u1", "|b1", ">f8")
+    val kinds = numeric ++ Seq(ZarrMeta.StringDtype, "<M8[ns]", "<m8[ns]")
+    // (numeric fill, time fill); NaT and 2^53 + 1 must survive exactly
+    def fills(dtype: String): Seq[(Double, Long)] =
+      if (ZarrMeta.TimeDtypes.contains(dtype))
+        Seq(0L, 7L, Long.MinValue, (1L << 53) + 1).map(t => (0.0, t))
+      else if (dtype == ZarrMeta.StringDtype) Seq((0.0, 0L))
+      else if (dtype.endsWith("b1")) Seq((0.0, 0L), (1.0, 0L))
+      else if (dtype.endsWith("u1")) Seq((0.0, 0L), (7.0, 0L))
+      else if (dtype.endsWith("i8")) Seq((0.0, 0L), (-3.0, 0L))
+      else Seq(0.0, -1.25, Double.NaN, Double.NegativeInfinity).map((_, 0L))
+    var points = 0
+    for {
+      format <- Seq(2, 3)
+      dtype <- kinds
+      (zlib, comp) <- Seq((false, ""), (true, ""), (false, "blosc"), (false, "zstd"))
+      (fill, timeFill) <- fills(dtype)
+      // string and time arrays are rank-1 only
+      rank <- if (numeric.contains(dtype)) 1 to 4 else 1 to 1
+      keyEnc <- if (format == 2) Seq("flat", "nested") else Seq("c/", "c.", "nested", "flat")
+      fOrder <- if (rank > 1 && numeric.contains(dtype)) Seq(false, true) else Seq(false)
+      inner <- if (format == 3 && rank > 1 && numeric.contains(dtype)) Seq(Nil, List.fill(rank)(2))
+               else Seq(Nil)
+    } {
+      val m = ZarrMeta((1 to rank).map(d => 10L * d + 3).toList, List.fill(rank)(4),
+        dtype, zlib, comp, fill, timeFill, format, fOrder, keyEnc, inner)
+      val doc = ZarrMeta.emit(m)
+      val back = ZarrMeta.parse(mapper.readTree(doc), "fixture")
+      assert(back.copy(fill = 0.0) == m.copy(fill = 0.0) &&
+        (back.fill == m.fill || (back.fill.isNaN && m.fill.isNaN)),
+        s"emitted $m, parsed $back from\n$doc")
+      assert(ZarrMeta.emit(back) == doc, s"emit is not a fixed point for $m")
+      points += 1
+    }
+    assert(points > 1000, s"grid covered only $points points")
+  }
+
   test("v3 fill_value is an integer literal for integer dtypes") {
     val path = "/root/repo/target/tmp/zarr_test_v3_intfill"
     Zarr.write(ZMatrix.fromDense(spark, dense), path, 10, 5, 4, 3,
