@@ -40,7 +40,25 @@ object TextStatsUtil {
   private def isPunct(c: Char): Boolean =
     c == '.' || c == ',' || c == '!' || c == '?' || c == ';' || c == ':'
 
+  /** One-entry per-thread memo of the last (input bytes, stats) pair.
+    * `FilterExec` does no common-subexpression elimination, so each
+    * `getField` of a filter's stats struct re-evaluates this expression —
+    * about 13 calls per row for the quality + repetition filter. The key is
+    * a `copy()`: scan buffers are reused in place, so holding the caller's
+    * `UTF8String` would compare the next row's bytes against themselves. */
+  private final class Memo { var key: UTF8String = _; var row: InternalRow = _ }
+  private val memo: ThreadLocal[Memo] = ThreadLocal.withInitial(() => new Memo)
+
   def stats(text: UTF8String): InternalRow = {
+    val m = memo.get()
+    if (m.key == null || !m.key.equals(text)) {
+      m.row = compute(text)
+      m.key = text.copy()
+    }
+    m.row
+  }
+
+  private def compute(text: UTF8String): InternalRow = {
     val s = text.toString
     // SQL trim: ASCII spaces only (NOT the \s set)
     var start = 0

@@ -150,39 +150,6 @@ object Dedup {
     }
   }
 
-  /** L32: EXACT set-similarity join by prefix filtering (Chaudhuri 2006 /
-    * PPJoin family) — every pair of documents whose distinct-token
-    * Jaccard is ≥ `minJaccardPct`/100, with NO approximation and NO
-    * all-pairs work: the exact counterpart of the MinHash-LSH candidate
-    * stage (L2 trades recall for speed; this trades nothing and is the
-    * right tool when the threshold is high).
-    *
-    * The pruning theorem: order all tokens globally by (frequency, token)
-    * ascending — rarest first. If J(a,b) ≥ t then |a∩b| ≥ ⌈t·|a|⌉, and
-    * any two sets with overlap ≥ c must share a token inside their first
-    * (|s| − c + 1) tokens under ANY shared total order. So each document
-    * exposes only its first |s| − ⌈t·|s|⌉ + 1 tokens (the PREFIX) to the
-    * candidate join; rare-first ordering makes those prefix tokens the
-    * corpus's least frequent, so candidate buckets stay small exactly
-    * where a frequency-oblivious order would explode them. Candidates
-    * then get ONE exact intersection count; the Jaccard test is an
-    * integer cross-multiply (inter·100 ≥ pct·union) — no float anywhere
-    * (PARITY class 1).
-    *
-    * Cost model (honest): beyond the linear scan/rank work, runtime is
-    * OUTPUT-proportional — an exact similarity join must emit every
-    * qualifying pair, and a near-dup clique of k documents contains
-    * k·(k−1)/2 of them. Measured on the replica corpus (100-variant
-    * cliques): output grew 979× for 10× data and runtime grew 47× —
-    * sub-linear per pair, quadratic per clique by SEMANTICS, not by
-    * plan. Downstream consumers that only need keepers should feed
-    * these pairs to [[connectedComponents]] (cluster-sized output) or
-    * use [[dedupCascade]]/[[minhashPairs]] at the ingest edge.
-    *
-    * Scale shapes: token frequencies are one aggregate; per-doc ranking
-    * is a doc-keyed window (doc-sized partitions); the candidate join
-    * shuffles prefix tokens only; verification is candidate-bounded.
-    * Returns (id1, id2, inter, uni) with id1 < id2. */
   /** Distinct word-k-gram shingle set per doc (the minhash family's
     * granularity: unigram sets are degenerate on small vocabularies —
     * k-gram sets are position-structured and discriminate); docs shorter
@@ -226,6 +193,34 @@ object Dedup {
         s"$sfDir/documents.parquet")(
       shingleToks(graft.Tables.documents(spark, sfDir), "doc_id", "text", shingle))
 
+  /** The rarest-first ranking both exact joins filter their prefixes
+    * from, over (doc_id, h) rows: `_f` = h's corpus frequency, `_rk` = h's
+    * 1-based rank inside its doc under the global (`_f`, h) order, `sz` =
+    * the doc's set size. Two windows, no aggregate and no join: a
+    * `groupBy(h)` frequency table is vocabulary-sized and AQE collects and
+    * broadcasts it back (~16 MB for a 2,000-doc shard), and a size
+    * aggregate costs a second join. Each window's input is repartitioned to an explicit count (the
+    * `candSpread` idiom below): AQE would coalesce the few-MB shuffle into
+    * one or two tasks and run the CPU-bound sort on one core, and at scale
+    * the count never drops below the session's shuffle setting. */
+  private def rarestFirst(ht: DataFrame): DataFrame = {
+    val spark = ht.sparkSession
+    val n = math.max(spark.sparkContext.defaultParallelism,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val byDoc = Window.partitionBy(col("doc_id"))
+    ht.repartition(n, col("h"))
+      .withColumn("_f", count(lit(1)).over(Window.partitionBy(col("h"))))
+      .repartition(n, col("doc_id"))
+      .withColumn("_rk", row_number().over(byDoc.orderBy(col("_f"), col("h"))))
+      .withColumn("sz", count(lit(1)).over(byDoc))
+  }
+
+  /** (doc_id, h, sz) of each doc's prefix at threshold `pct`: its first
+    * |s| − ⌈t·|s|⌉ + 1 tokens of [[rarestFirst]], ⌈t·|s|⌉ as exact ints. */
+  private def prefixOf(ranked: DataFrame, pct: Int): DataFrame =
+    ranked.filter(col("_rk") <= col("sz") - expr(s"(sz * $pct + 99) div 100") + 1)
+      .select(col("doc_id"), col("h"), col("sz"))
+
   def jaccardJoin(docs: DataFrame, idCol: String, textCol: String,
                   minJaccardPct: Int = 50, shingle: Int = 3): DataFrame =
     jaccardJoinToks(shingleToks(docs, idCol, textCol, shingle), minJaccardPct)
@@ -243,14 +238,51 @@ object Dedup {
     connectedComponents(
       jaccardJoinToks(toks, minJaccardPct).select(col("id1"), col("id2")))
 
-  /** [[jaccardJoin]] over a pre-built (doc_id, token) shingle index —
-    * the [[corpusShingles]] entry point. NOTE: emits every qualifying
-    * PAIR — output-bound under mass duplication; [[jaccardDedup]] is the
-    * cluster-sized default for keeper-selection consumers. */
+  /** L32: EXACT set-similarity join by prefix filtering (Chaudhuri 2006 /
+    * PPJoin family) — every pair of documents whose distinct-token
+    * Jaccard is ≥ `minJaccardPct`/100, with NO approximation and NO
+    * all-pairs work: the exact counterpart of the MinHash-LSH candidate
+    * stage (L2 trades recall for speed; this trades nothing and is the
+    * right tool when the threshold is high).
+    *
+    * The pruning theorem: order all tokens globally by (frequency, token)
+    * ascending — rarest first. If J(a,b) ≥ t then |a∩b| ≥ ⌈t·|a|⌉, and
+    * any two sets with overlap ≥ c must share a token inside their first
+    * (|s| − c + 1) tokens under ANY shared total order. So each document
+    * exposes only its first |s| − ⌈t·|s|⌉ + 1 tokens (the PREFIX) to the
+    * candidate join; rare-first ordering makes those prefix tokens the
+    * corpus's least frequent, so candidate buckets stay small exactly
+    * where a frequency-oblivious order would explode them. Candidates
+    * then get ONE exact intersection count; the Jaccard test is an
+    * integer cross-multiply (inter·100 ≥ pct·union) — no float anywhere
+    * (PARITY class 1).
+    *
+    * Cost model (honest): beyond the linear scan/rank work, runtime is
+    * OUTPUT-proportional — an exact similarity join must emit every
+    * qualifying pair, and a near-dup clique of k documents contains
+    * k·(k−1)/2 of them. Measured on the replica corpus (100-variant
+    * cliques): output grew 979× for 10× data and runtime grew 47× —
+    * sub-linear per pair, quadratic per clique by SEMANTICS, not by
+    * plan. Downstream consumers that only need keepers should feed
+    * these pairs to [[connectedComponents]] (cluster-sized output) or
+    * use [[dedupCascade]]/[[minhashPairs]] at the ingest edge.
+    *
+    * Scale shapes: the candidate stage is two windows and no aggregate
+    * ([[rarestFirst]]): token frequencies are an h-keyed window, per-doc
+    * rank and set size a doc-keyed one, each over an input repartitioned
+    * to an explicit count, so no frequency or size table is collected or
+    * broadcast at any vocabulary size. The filtered prefix is materialised once and
+    * self-joined on prefix tokens only; verification is candidate-bounded.
+    *
+    * This entry point runs over a pre-built (doc_id, token) shingle index
+    * ([[corpusShingles]]). It emits every qualifying PAIR, so it is
+    * output-bound under mass duplication; [[jaccardDedup]] is the
+    * cluster-sized default for keeper-selection consumers.
+    * Returns (id1, id2, inter, uni) with id1 < id2. */
   def jaccardJoinToks(toks: DataFrame, minJaccardPct: Int): DataFrame = {
     require(minJaccardPct > 0 && minJaccardPct <= 100)
     // r20: the whole join runs over xxhash64 SHINGLE HASHES, not strings —
-    // every exchange (freq aggregate, rank window, candidate join, verify
+    // every exchange (frequency window, rank window, candidate join, verify
     // sets) carries 8-byte longs instead of ~17-byte 3-gram strings, and
     // the per-pair intersection compares longs. Output-equivalent: the
     // prefix theorem holds for ANY consistent global token order (rarest-
@@ -261,16 +293,9 @@ object Dedup {
     // bits (~2⁻⁵² per corpus here; the minhash family's documented
     // envelope, deterministic at the gate SFs).
     val ht = toks.select(col("doc_id"), xxhash64(col("token")).as("h"))
-    val sizes = ht.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    val freq = ht.groupBy(col("h")).agg(count(lit(1)).as("_f"))
-    val ranked = ht.join(freq, Seq("h"))
-      .withColumn("_rk", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("_f"), col("h"))))
-      .join(sizes, Seq("doc_id"))
-    // prefix = first |s| − ⌈t·|s|⌉ + 1 tokens; ⌈t·|s|⌉ as exact ints
-    val prefix = ranked.filter(col("_rk") <=
-        col("sz") - expr(s"(sz * $minJaccardPct + 99) div 100") + 1)
-      .select(col("doc_id"), col("h"), col("sz"))
+    // materialised once: both sides of the self-join read it, and
+    // unmaterialised each side would re-run both windows' sorts
+    val prefix = prefixOf(rarestFirst(ht), minJaccardPct).localCheckpoint()
     val cand = prefix.select(col("doc_id").as("id1"), col("h"), col("sz").as("_s1"))
       .join(prefix.select(col("doc_id").as("id2"), col("h"), col("sz").as("_s2")),
         Seq("h"))
@@ -355,18 +380,13 @@ object Dedup {
     // the probe against the FULL inverted index (the asymmetric side that
     // cannot be prefix-filtered) shuffles 8-byte keys, not 3-gram strings.
     val ht = toks.select(col("doc_id"), xxhash64(col("token")).as("h"))
-    val sizes = ht.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    val freq = ht.groupBy(col("h")).agg(count(lit(1)).as("_f"))
-    val prefix = ht.join(freq, Seq("h"))
-      .withColumn("_rk", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("_f"), col("h"))))
-      .join(sizes, Seq("doc_id"))
-      .filter(col("_rk") <=
-        col("sz") - expr(s"(sz * $minContainPct + 99) div 100") + 1)
-      .select(col("doc_id"), col("h"), col("sz"))
-    val cand = prefix.select(col("doc_id").as("id_a"), col("h"), col("sz").as("_sa"))
-      .join(ht.join(sizes, Seq("doc_id"))
-          .select(col("doc_id").as("id_b"), col("h"), col("sz").as("_sb")),
+    // one ranked frame: A's prefix and B's full (doc_id, h, sz) rows; B's
+    // side reads only sz, so Catalyst prunes the rank and frequency windows
+    // from it and leaves one doc-keyed size window
+    val ranked = rarestFirst(ht)
+    val cand = prefixOf(ranked, minContainPct)
+      .select(col("doc_id").as("id_a"), col("h"), col("sz").as("_sa"))
+      .join(ranked.select(col("doc_id").as("id_b"), col("h"), col("sz").as("_sb")),
         Seq("h"))
       .filter(col("id_a") =!= col("id_b"))
       // exact LENGTH filter: |A∩B| ≥ ⌈t·|A|⌉ needs |B| ≥ ⌈t·|A|⌉ — a

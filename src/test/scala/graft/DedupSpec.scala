@@ -498,6 +498,59 @@ class DedupSpec extends AnyFunSuite {
     assert(comps.toSet == viaCC)
   }
 
+  test("exact joins at the edges: threshold equality, the length-filter bound, frequency ties") {
+    import spark.implicits._
+    // shingle = 1, so each doc's set is exactly its distinct words
+    def words(p: String, n: Int, from: Int = 1) = (from until from + n).map(i => s"$p$i")
+    // a family of v docs over v tokens, doc i = tokens i … i+w−1 (mod v):
+    // every token occurs in exactly w docs, so all its frequencies tie and
+    // the rarest-first order is decided by the hash alone; docs at cyclic
+    // distance d share w − d tokens
+    def ring(base: Long, v: Int, w: Int, p: String) =
+      (0 until v).map(i => (base + i) -> (0 until w).map(j => s"$p${(i + j) % v}"))
+    val sets: Seq[(Long, Seq[String])] = Seq(
+      10L -> words("a", 6), 11L -> (words("a", 4) ++ words("b", 2, 5)), // J = 4/8
+      12L -> words("c", 5), 13L -> words("c", 4),                        // J = 4/5, |A| = 1.25|B|
+      14L -> words("d", 10), 15L -> words("d", 5),                       // J = 5/10, |A| = 2|B|
+      16L -> words("e", 11), 17L -> words("e", 5),                       // |A| = 2|B| + 1
+      18L -> words("f", 10), 19L -> (words("f", 6) ++ words("g", 4)),    // c = 6/10 both ways
+      20L -> words("h", 10), 21L -> (words("h", 9) :+ "i1"),             // c = 9/10 both ways
+      22L -> words("j", 10), 23L -> words("j", 6),                       // c(A→B) = 6/10, |B| = 0.6|A|
+      24L -> words("k", 10), 25L -> words("k", 9)                        // c(A→B) = 9/10, |B| = 0.9|A|
+    ) ++ ring(100L, 30, 9, "u") ++ ring(200L, 40, 10, "t")
+    val df = sets.map { case (id, ws) => (id, ws.mkString(" ")) }.toDF("doc_id", "text")
+    val m = sets.map { case (id, ws) => id -> ws.toSet }
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    // brute force, and the edge pairs it must hold (so the fixture really
+    // sits on each boundary): equality at the threshold, pairs at the
+    // length-filter bound, tie-ranked ring neighbours at exact ratios
+    val jaccardEdges = Map(
+      50 -> Set((10L, 11L, 4L, 8L), (14L, 15L, 5L, 10L), (100L, 103L, 6L, 12L)),
+      80 -> Set((12L, 13L, 4L, 5L), (100L, 101L, 8L, 10L)))
+    for ((pct, edges) <- jaccardEdges) {
+      val ref = (for {
+        (i, a) <- m; (j, b) <- m if i < j
+        inter = (a & b).size.toLong; uni = (a | b).size.toLong
+        if inter * 100 >= pct * uni
+      } yield (i, j, inter, uni)).toSet
+      assert(edges.subsetOf(ref) && !ref.exists(t => t._1 == 16L && t._2 == 17L))
+      assert(rows(Dedup.jaccardJoin(df, "doc_id", "text", pct, 1)) == ref, s"jaccard pct=$pct")
+    }
+    val containEdges = Map(
+      60 -> Set((18L, 19L, 6L, 10L), (19L, 18L, 6L, 10L), (22L, 23L, 6L, 10L), (200L, 204L, 6L, 10L)),
+      90 -> Set((20L, 21L, 9L, 10L), (24L, 25L, 9L, 10L), (200L, 201L, 9L, 10L)))
+    for ((pct, edges) <- containEdges) {
+      val ref = (for {
+        (i, a) <- m; (j, b) <- m if i != j
+        inter = (a & b).size.toLong
+        if inter * 100 >= pct * a.size
+      } yield (i, j, inter, a.size.toLong)).toSet
+      assert(edges.subsetOf(ref))
+      assert(rows(Dedup.containmentJoin(df, "doc_id", "text", pct, 1)) == ref, s"containment pct=$pct")
+    }
+  }
+
   test("fuzzyJoin: in-block near-names pair; cross-block twins never compared") {
     import spark.implicits._
     val recs = Seq(

@@ -95,6 +95,63 @@ class PlanSpec extends AnyFunSuite {
     assert(exchanges(plan) <= 6, s"added exchange in:\n$plan")
   }
 
+  /** The final physical plan of every SQL execution `body` runs — eager
+    * `localCheckpoint`s included, which `executedPlan` above cannot see:
+    * each execution's last start / AQE-update event, matched to `body` by
+    * job group. */
+  private def executionPlans(body: => Unit): Seq[org.apache.spark.sql.execution.SparkPlanInfo] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+    val group = s"plan-shape-${System.nanoTime()}"
+    val mine = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val plans = new java.util.concurrent.ConcurrentHashMap[Long, SparkPlanInfo]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) =>
+          mine.add(s.executionId); plans.put(s.executionId, s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate if mine.contains(u.executionId) =>
+          plans.put(u.executionId, u.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try { body; org.apache.spark.ListenerBusDrain(sc) }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    import scala.jdk.CollectionConverters._
+    plans.values.asScala.toSeq
+  }
+
+  /** Every operator a plan computes: a reused exchange's subtree ran in the
+    * stage it was first built in, so it is not descended into. */
+  private def operators(p: org.apache.spark.sql.execution.SparkPlanInfo)
+      : Seq[org.apache.spark.sql.execution.SparkPlanInfo] =
+    p +: (if (p.nodeName == "ReusedExchange") Nil else p.children.flatMap(operators))
+
+  for (name <- Seq("dedup_jaccard_join", "dedup_containment"))
+    test(s"$name: rarest-first prefix windows run once; no aggregate is broadcast") {
+      ops.Dedup.corpusShingles(spark, TestSpark.sf).collect() // build the durable index first
+      val plans = executionPlans(SparkEntry.queries(name)(spark, TestSpark.sf).collect())
+      val computed = plans.flatMap(operators)
+      def windows(fn: String) =
+        computed.filter(o => o.nodeName == "Window" && o.simpleString.contains(fn))
+      // the frequency window and the rank window, each computed exactly
+      // once — an unmaterialised prefix self-join ran its sort per side
+      val rank = windows("row_number()")
+      val freq = windows("count(1) windowspecdefinition(h")
+      assert(rank.size == 1, s"rank window computed ${rank.size}×:\n${rank.map(_.simpleString).mkString("\n")}")
+      assert(freq.size == 1, s"frequency window computed ${freq.size}×:\n${freq.map(_.simpleString).mkString("\n")}")
+      // no frequency or size AGGREGATE is collected and broadcast back into
+      // the candidate stage (the executions that rank)
+      val ranking = plans.filter(p => operators(p).exists(_.nodeName == "Window"))
+      val bcastAggs = ranking.flatMap(operators).filter(_.nodeName == "BroadcastExchange")
+        .filter(b => operators(b).exists(_.nodeName.contains("HashAggregate")))
+      assert(bcastAggs.isEmpty, "aggregate broadcast in the candidate stage:\n" +
+        bcastAggs.flatMap(operators).map(_.simpleString).mkString("\n"))
+    }
+
   test("dedup_simhash (components' edge stage): one exchange, one scan") {
     val plan = executedPlan("dedup_simhash")
     assert(exchanges(plan) <= 1, s"added exchange in:\n$plan")

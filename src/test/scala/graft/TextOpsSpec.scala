@@ -182,6 +182,23 @@ class TextOpsSpec extends AnyFunSuite {
     assert(bad.isEmpty, bad.take(3).map(_.toString).mkString("; "))
   }
 
+  test("text-stats memo keys on the input bytes, not on a reused buffer") {
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.TextStatsUtil
+    // scan buffers are reused in place: the same UTF8String object holds
+    // the next row's bytes, and its stats must be the new text's
+    val buf = "a a b".getBytes("UTF-8")
+    val u = UTF8String.fromBytes(buf)
+    val first = TextStatsUtil.stats(u)
+    assert((first.getInt(0), first.getInt(1)) == (3, 2))
+    "c d e".getBytes("UTF-8").copyToArray(buf)
+    val second = TextStatsUtil.stats(u)
+    assert((second.getInt(0), second.getInt(1), second.getInt(2)) == (3, 3, 2))
+    // and back: equal bytes in another object read the same stats
+    val again = TextStatsUtil.stats(UTF8String.fromString("a a b"))
+    assert((again.getInt(0), again.getInt(1), again.getInt(2)) == (3, 2, 2))
+  }
+
   test("fingerprint is deterministic and order-sensitive") {
     val df = Seq((1L, "a b c"), (2L, "c b a"), (3L, "a b c")).toDF("doc_id", "text")
     val fp = TextOps.fingerprint(df, "doc_id", "text").collect()
