@@ -151,10 +151,9 @@ object Similarity {
   }
 
   /** Cached face of [[hybridBm25TopK]] over the standard corpus tables —
-    * the pools come from [[bm25KwPoolCached]]/[[vecPoolCached]], so the
-    * fitted index artifacts are built once per (corpus, parameters) and
-    * shared with the S24/S25 serving queries instead of refit per query
-    * (the r17-adjudicated refit class; the NB/ppl model-cache precedent). */
+    * the pools come from [[bm25KwPoolCached]]/[[vecPoolCached]], so within
+    * a session the batch query and the streaming hybrid query share one
+    * build per (corpus, query) instead of each scoring the corpus. */
   def hybridBm25TopKCached(spark: org.apache.spark.sql.SparkSession,
                            sfDir: String, terms: Seq[String], q: Array[Double],
                            k: Int, poolK: Int = 100): DataFrame =
@@ -162,32 +161,33 @@ object Similarity {
       vecPoolCached(spark, sfDir, q, poolK), k)
 
   /** [[bm25KwPoolDf]] over the corpus documents table, built once per
-    * (corpus, terms, poolK) in the shared model store. The defining
-    * (score desc, id) order is RE-APPLIED after the store round-trip
-    * (parquet read-back order is not guaranteed); values are exact longs,
-    * so the loaded pool is bit-identical to the fresh build. */
+    * (session, corpus, terms, poolK). The pool is a query result, keyed
+    * on the query's literal terms, so it lives in the in-session tier
+    * only — never in the durable store. The defining (score desc, id)
+    * order is RE-APPLIED over the checkpoint. */
   def bm25KwPoolCached(spark: org.apache.spark.sql.SparkSession, sfDir: String,
                        terms: Seq[String], poolK: Int): DataFrame =
-    graft.SessionCache.durableFrame(spark,
+    graft.SessionCache.getOrBuild(spark,
         s"bm25KwPool:$sfDir:${terms.mkString(" ")}:$poolK",
         s"$sfDir/documents.parquet")(
       bm25KwPoolDf(graft.Tables.documents(spark, sfDir), "doc_id", "text",
-        terms, poolK))
+        terms, poolK).localCheckpoint())
       .orderBy(col("_kw").desc, col("id"))
 
   /** [[vecPoolDf]] over the corpus embeddings table, built once per
-    * (corpus, query vector, poolK); same re-applied defining order. The
-    * tag carries the query vector's full-precision digest. */
+    * (session, corpus, query vector, poolK); in-session only and the same
+    * re-applied defining order as [[bm25KwPoolCached]]. The tag carries
+    * the query vector's full-precision digest. */
   def vecPoolCached(spark: org.apache.spark.sql.SparkSession, sfDir: String,
                     q: Array[Double], poolK: Int): DataFrame = {
     val qSig = java.security.MessageDigest.getInstance("MD5")
       .digest(q.map(java.lang.Double.doubleToRawLongBits)
         .mkString(",").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
-    graft.SessionCache.durableFrame(spark, s"vecPool:$sfDir:$qSig:$poolK",
+    graft.SessionCache.getOrBuild(spark, s"vecPool:$sfDir:$qSig:$poolK",
         s"$sfDir/embeddings.parquet")(
       vecPoolDf(graft.Tables.embeddings(spark, sfDir), "vec_id", "embedding",
-        q, poolK))
+        q, poolK).localCheckpoint())
       .orderBy(col("_cos").desc, col("id"))
   }
 

@@ -775,10 +775,10 @@ object Stream {
     val sfName = sfDir.replaceAll("[^A-Za-z0-9]", "_")
     val raw = schemas.computeIfAbsent(s"$sfDir/documents",
       _ => spark.read.parquet(s"$sfDir/documents.parquet").schema)
-    // r21: the three fitted artifacts come from the shared model store —
-    // the SAME pool frames the batch hybrid query fuses (bm25KwPoolCached /
-    // vecPoolCached re-apply the defining order after the store
-    // round-trip, so the collected pool order is unchanged)
+    // the BM25 model and both pools come from the in-session cache — the
+    // SAME pool frames the batch hybrid query fuses (bm25KwPoolCached /
+    // vecPoolCached re-apply the defining order over the checkpoint, so
+    // the collected pool order is the fresh build's)
     val (idf, n, tl) = Similarity.bm25ModelCached(spark, sfDir, terms)
     val kwPool = Similarity.bm25KwPoolCached(spark, sfDir, terms, poolK)
       .collect().map(r => (r.getLong(0), r.getLong(1))) // (id, _kw), pool order

@@ -141,6 +141,20 @@ class RelationalSpec extends AnyFunSuite {
   test("every oracleSql key has a queries entry") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracle without query: $missing")
+    // the model-literal families, built on this corpus whether or not an
+    // earlier suite ran their queries in this JVM
+    val families = SparkEntry.modelOracleFamilies(spark, TestSpark.sf)
+    assert(families.keySet ==
+      Set("ivf-graph", "pq", "whiten", "pca", "recipe-full-pca", "louvain-conv"))
+    families.foreach { case (family, oracles) =>
+      assert(oracles.nonEmpty, family)
+      val orphans = oracles.keySet -- SparkEntry.queries.keySet
+      assert(orphans.isEmpty, s"$family oracle without query: $orphans")
+      assert((oracles.keySet & SparkEntry.oracleSql.keySet).isEmpty, family)
+    }
+    val built = SparkEntry.modelOracleSql(spark, TestSpark.sf, _ => true)
+    assert(built.keySet == families.values.flatMap(_.keySet).toSet)
+    built.foreach { case (q, sql) => assert(sql.contains("SELECT"), q) }
   }
 
   test("funnel counts users per strictly-ordered stage") {

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.zarr.Zarr
+
 /** Lifecycle rules of the fitted-model cache (the r17 ADVICE findings) and
   * cached-vs-direct equality of every family that now shares a fit. */
 class SessionCacheSpec extends AnyFunSuite {
@@ -96,6 +98,63 @@ class SessionCacheSpec extends AnyFunSuite {
     val root = new java.io.File(SessionCache.modelsRoot(spark).get)
     val dirs = root.listFiles().filter(_.getName.contains("durableRegen"))
     assert(dirs.length == 1, dirs.map(_.getName).mkString(","))
+  }
+
+  /** A fresh session with its own durable store under `root`: no
+    * in-session entry of an earlier suite can answer its lookups. */
+  private def isolatedSession(root: java.nio.file.Path) = {
+    val s = spark.newSession()
+    s.conf.set("spark.graft.models.dir", root.resolve("models").toString)
+    s
+  }
+
+  test("SparkEntry: a corpus REGENERATED at the same path refits its models and restages its tables") {
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("graft_regen_corpus")
+    try {
+      val s = isolatedSession(root)
+      def copyOf(name: String): String = {
+        val to = Files.createDirectory(root.resolve(name))
+        Files.list(Paths.get(sf)).forEach(f => Files.copy(f, to.resolve(f.getFileName)))
+        to.toString
+      }
+      // rewrite lineitem and orders in place with a row subset (read from
+      // the pristine corpus: Spark cannot overwrite a path it reads)
+      def regenerate(d: String): Unit = {
+        Tables.lineitem(s, sf).filter(col("l_orderkey") % 3 =!= 0)
+          .write.mode("overwrite").parquet(s"$d/lineitem.parquet")
+        Tables.orders(s, sf).filter(col("o_orderkey") % 3 =!= 0)
+          .write.mode("overwrite").parquet(s"$d/orders.parquet")
+      }
+      def run(d: String): Map[String, Seq[String]] =
+        Seq("arr_pca", "q26_partition_pruning").map { q =>
+          q -> SparkEntry.queries(q)(s, d).collect().map(_.toString).sorted.toSeq
+        }.toMap
+      val d = copyOf("d")
+      val before = run(d) // fits the PCA model, stages the orders tree
+      regenerate(d)
+      val d2 = copyOf("d2")
+      regenerate(d2)
+      val (regen, fresh) = (run(d), run(d2))
+      assert(regen != before, "the row subset must change both results")
+      fresh.foreach { case (q, rows) =>
+        assert(regen(q) == rows, s"$q on the regenerated corpus served stale state")
+      }
+    } finally Zarr.delete(root.toString, recursive = true)
+  }
+
+  test("query-keyed hybrid pools stay in-session: nothing named bm25KwPool or vecPool is durable") {
+    val root = java.nio.file.Files.createTempDirectory("graft_pools")
+    try {
+      val s = isolatedSession(root)
+      Seq("ann_hybrid_bm25", "stream_hybrid_rrf").foreach { q =>
+        assert(SparkEntry.queries(q)(s, sf).collect().nonEmpty, q)
+      }
+      val models = root.resolve("models").toFile
+      val names = Option(models.list()).toSeq.flatten
+      assert(!names.exists(n => n.contains("bm25KwPool") || n.contains("vecPool")),
+        names.mkString(", "))
+    } finally Zarr.delete(root.toString, recursive = true)
   }
 
   test("durable tier: a damaged committed artifact self-heals by rebuilding") {
