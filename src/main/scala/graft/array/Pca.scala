@@ -9,7 +9,9 @@ import org.apache.spark.sql.functions._
   *
   * Decomposition of work, 100 TB contract:
   *  - DISTRIBUTED: the column co-moment matrix Σ x_a·x_b AND the column
-  *    sums via one per-row grouping (single data shuffle on i) + ONE
+  *    sums via one per-row grouping over [[ZMatrix.byRow]] (the single
+  *    data shuffle on i, at its explicit width: AQE would coalesce a
+  *    plain group-by shuffle of a few MB into one task) + ONE
   *    [[graft.functions.CoMomentAgg]] pass — a TypedImperativeAggregate
   *    accumulating a dense upper-triangle double array per task, one
   *    buffer shipped per task (no explode, no ncols² tuple fanout).
@@ -19,9 +21,9 @@ import org.apache.spark.sql.functions._
   *    collect; 6dp rounding of the co-moments before eigen makes the model
   *    bit-stable across partition orders.
   *  - DISTRIBUTED: projection = one scan with k codegen'd literal-array
-  *    dot accumulators per row (no join, no k-shuffle), minus the constant
-  *    centering offset — so X is never densified even though centering
-  *    would fill every implicit zero.
+  *    dot accumulators per row, grouped over [[ZMatrix.byRow]] (no join,
+  *    no k-shuffle), minus the constant centering offset — so X is never
+  *    densified even though centering would fill every implicit zero.
   */
 object Pca {
 
@@ -46,7 +48,7 @@ object Pca {
     // shuffle on i — then one CoMomentAgg global aggregate accumulates the
     // dense upper triangle AND the column sums per task and ships exactly
     // one (triLen + ncols)-double buffer per task to the driver.
-    val packed = m.cells.groupBy(col("i"))
+    val packed = m.byRow.groupBy(col("i"))
       .agg(collect_list(struct(col("j"), col("v"))).as("row"))
       .agg(CoMomentAgg.comoments(col("row"), ncols).as("gs"))
       .head().getSeq[Double](0)
@@ -93,7 +95,7 @@ object Pca {
     }
     val scores = (0 until k).map(c =>
       (round(col(s"_c$c") - model.offsets(c), 6) + 0.0).as(s"_s$c"))
-    ZMatrix(m.cells.groupBy(col("i")).agg(aggs.head, aggs.tail: _*)
+    ZMatrix(m.byRow.groupBy(col("i")).agg(aggs.head, aggs.tail: _*)
       .select(col("i") +: scores: _*)
       .select(col("i"), posexplode(array((0 until k).map(c => col(s"_s$c")): _*))
         .as(Seq("j", "v")))

@@ -1,6 +1,7 @@
 package graft.array
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Coordinate-form distributed 2-D matrix: a DataFrame of cells
@@ -12,6 +13,12 @@ import org.apache.spark.sql.functions._
   *  - elementwise ufuncs are Catalyst column expressions (whole-stage
   *    codegen, no UDFs);
   *  - axis reductions are hash aggregates with map-side partial agg;
+  *  - row ops (scanpy filter_cells, normalize_per_cell, the PCA row
+  *    grouping) read [[byRow]], the cells hash-partitioned on `i` to an
+  *    explicit count, and take row sums as a window over it — zappy's
+  *    per-row-chunk block ops in coordinate form. A chain of row ops
+  *    shares that one exchange: `EnsureRequirements` drops a repartition
+  *    whose input already has the same partitioning;
   *  - NumPy-style vector broadcasting is a broadcast join against a tiny
   *    (ncols- or nrows-sized) vector table;
   *  - boolean indexing / slicing are filters that push to the scan;
@@ -25,6 +32,24 @@ import org.apache.spark.sql.functions._
 final case class ZMatrix(cells: DataFrame) {
 
   private def sel(v: Column): DataFrame = cells.select(col("i"), col("j"), v.as("v"))
+
+  /** The cells hash-partitioned on `i` into [[graft.Shuffle.width]]
+    * partitions: the one input of every row op. The explicit count makes
+    * the shuffle `REPARTITION_BY_NUM`, so AQE neither coalesces it into
+    * one task nor re-plans a row op's aggregate + join-back as a broadcast
+    * of the cell table. The layout is not taken from the source
+    * (`readSparse` builds cells chunk by chunk): a `localCheckpoint`ed
+    * frame reports `UnknownPartitioning`, so a repartition there is lost
+    * at the first checkpoint, and here it is paid once per plan. */
+  private[graft] def byRow: DataFrame =
+    cells.repartition(graft.Shuffle.width(cells.sparkSession), col("i"))
+
+  /** [[byRow]] plus `_rs`, each cell's row sum, as a window over the row —
+    * no aggregate to join back. Cells with a null `i` are dropped, as an
+    * inner or semi join on `i` drops them. */
+  private def withRowSum: DataFrame =
+    byRow.filter(col("i").isNotNull)
+      .withColumn("_rs", sum(col("v")).over(Window.partitionBy(col("i"))))
 
   // ---- elementwise ufuncs (zappy: log1p/expm1/exp/sqrt/abs/negative) ----
   def mapValues(f: Column => Column): ZMatrix = ZMatrix(sel(f(col("v"))))
@@ -231,7 +256,6 @@ final case class ZMatrix(cells: DataFrame) {
     * partial sums, so stored-position values equal the dense cumsum at the
     * same coordinates. */
   def cumsumAxis1: ZMatrix = {
-    import org.apache.spark.sql.expressions.Window
     ZMatrix(cells.select(col("i"), col("j"),
       sum(col("v")).over(Window.partitionBy(col("i")).orderBy(col("j"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("v")))
@@ -246,10 +270,8 @@ final case class ZMatrix(cells: DataFrame) {
     * division rounds identically in both engines (PARITY class 2). */
   def rollingMeanAxis1(window: Int): DataFrame = {
     require(window >= 1, s"window must be >= 1, got $window")
-    import org.apache.spark.sql.expressions.Window
     cells.select(col("i"), col("j"),
-      (round(avg(col("v")).over(org.apache.spark.sql.expressions.Window
-        .partitionBy(col("i")).orderBy(col("j"))
+      (round(avg(col("v")).over(Window.partitionBy(col("i")).orderBy(col("j"))
         .rowsBetween(-(window - 1), Window.currentRow)), 4) + 0.0).as("v"))
   }
 
@@ -258,7 +280,6 @@ final case class ZMatrix(cells: DataFrame) {
     * row). Exact double subtraction on identical inputs — bit-stable in
     * both engines. */
   def diffAxis1: DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     cells.select(col("i"), col("j"),
         (col("v") - lag(col("v"), 1).over(
           Window.partitionBy(col("i")).orderBy(col("j")))).as("v"))
@@ -280,7 +301,6 @@ final case class ZMatrix(cells: DataFrame) {
     * result is identical to the single-window rank (same oracle). */
   def rankAxis0(nBuckets: Int = 32,
                 twoLevelBound: Long = 64L << 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // SIZE-CONDITIONAL (the q43 rule): with many small columns the plain
     // per-column window is already parallel and cheapest; the two-level
     // form pays off only once one column's cells exceed a task-sized
@@ -314,7 +334,6 @@ final case class ZMatrix(cells: DataFrame) {
     * task-bounded at ANY corpus size — rows scale in count, not width;
     * no two-level form needed (contrast [[rankAxis0]]). */
   def rankAxis1(): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     cells.select(col("i"), col("j"),
       row_number().over(Window.partitionBy(col("i"))
         .orderBy(col("v"), col("j"))).cast("long").as("rk"))
@@ -333,7 +352,6 @@ final case class ZMatrix(cells: DataFrame) {
     * semantics at any cost use a 1-block size. */
   def cumsumAxis0(blockRows: Long = 65536L,
                   twoLevelBound: Long = 64L << 20): ZMatrix = {
-    import org.apache.spark.sql.expressions.Window
     val maxCol = cells.groupBy(col("j")).count()
       .agg(coalesce(max(col("count")), lit(0L))).head().getLong(0)
     if (maxCol <= twoLevelBound)
@@ -415,12 +433,12 @@ final case class ZMatrix(cells: DataFrame) {
 
   // ---- indexing (zappy X[mask, :], slices) ----
   /** Boolean row indexing where the mask is derived from a row aggregate
-    * (scanpy filter_cells): left-semi join against the qualifying row ids. */
-  def filterRowsBySum(pred: Column => Column): ZMatrix = {
-    val keep = cells.groupBy(col("i")).agg(sum(col("v")).as("_rs"))
-      .filter(pred(col("_rs"))).select(col("i"))
-    ZMatrix(cells.join(keep, Seq("i"), "left_semi"))
-  }
+    * (scanpy filter_cells): the row sum is a window over [[byRow]], so
+    * the cells are filtered where they sit, with no row-id table to join
+    * back. The output keeps the `i`-partitioning, so a following row op
+    * plans no second exchange. */
+  def filterRowsBySum(pred: Column => Column): ZMatrix =
+    ZMatrix(withRowSum.filter(pred(col("_rs"))).drop("_rs"))
 
   /** Boolean column indexing from a column aggregate (scanpy filter_genes):
     * the qualifying-column set is tiny (ncols), so the semi-join broadcasts. */
@@ -444,7 +462,6 @@ final case class ZMatrix(cells: DataFrame) {
     * 6dp BEFORE ranking so the selection can never flip on unordered-sum
     * float noise (the determinism rule every model-producing op follows). */
   def filterColsTopVar(k: Int, nrows: Long): ZMatrix = {
-    import org.apache.spark.sql.expressions.Window
     val n = lit(nrows.toDouble)
     val stats = cells.groupBy(col("j")).agg(
         sum(col("v")).as("_s"), sum(col("v") * col("v")).as("_ss"))
@@ -469,7 +486,6 @@ final case class ZMatrix(cells: DataFrame) {
     * greatest()/zero-σ guards, same `dp` output grid — the generated
     * arr_recipe_full oracle re-derives the composed form and stays green. */
   def hvgScale(k: Int, nrows: Long, dp: Int = 6): ZMatrix = {
-    import org.apache.spark.sql.expressions.Window
     val n = lit(nrows.toDouble)
     val stats = cells.groupBy(col("j")).agg(
         sum(col("v")).as("_s"), count(lit(1)).as("_n"),
@@ -594,7 +610,6 @@ final case class ZMatrix(cells: DataFrame) {
     * fraction of group rows with a nonzero stored value. Output
     * `(g, j, z, lfc, pts, pts_rest)`, one row per (group, column). */
   def rankGenesGroups(labels: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val lab = labels.select(col("i"), col("g"))
     val sizes = lab.groupBy(col("g")).agg(count(lit(1)).as("_ng"))
     val n = lab.count()
@@ -676,7 +691,6 @@ final case class ZMatrix(cells: DataFrame) {
     * pass through; zero results drop out of the coordinate form. One
     * row-keyed shuffle (window over i); all arithmetic exact integers. */
   def downsampleCounts(target: Long): ZMatrix = {
-    import org.apache.spark.sql.expressions.Window
     require(target > 0, s"target must be positive, got $target")
     val c = cells.select(col("i"), col("j"), col("v").cast("long").as("_vi"))
     val wI = Window.partitionBy(col("i"))
@@ -1028,33 +1042,34 @@ final case class ZMatrix(cells: DataFrame) {
     * coordinate-form contract; at an implicit zero the residual is
     * −μ/sqrt(μ+μ²/θ), derivable from the same marginals).
     *
-    * Plan shape: row sums co-key with the cells on i (ONE fact shuffle);
-    * column sums are an ncols-row broadcast; the grand total and the clip
-    * bound enter as literals. Every marginal is an exact integer-valued
-    * double on this data, and μ/σ/residual use one fixed expression order
-    * shared with the SQL twin, so the 6dp output is bit-stable. */
+    * Plan shape: row sums are a window over [[byRow]] (ONE fact shuffle,
+    * no join back); column sums are an ncols-row broadcast; the grand
+    * total and the clip bound enter as literals. Every marginal is an
+    * exact integer-valued double on this data, and μ/σ/residual use one
+    * fixed expression order shared with the SQL twin, so the 6dp output
+    * is bit-stable. */
   def pearsonResiduals(nrows: Long, theta: Double = 100.0): ZMatrix = {
-    val rs = cells.groupBy(col("i")).agg(sum(col("v")).as("_rs"))
     val cs = cells.groupBy(col("j")).agg(sum(col("v")).as("_cs"))
     val total = lit(cells.agg(sum(col("v"))).head().getDouble(0))
     val clip = lit(math.sqrt(nrows.toDouble))
     val mu = col("_rs") * col("_cs") / total
     val r = (col("v") - mu) / sqrt(mu + mu * mu / theta)
-    ZMatrix(cells.join(rs, Seq("i")).join(broadcast(cs), Seq("j"))
+    ZMatrix(withRowSum.join(broadcast(cs), Seq("j"))
       .select(col("i"), col("j"),
         (round(least(greatest(r, -clip), clip), 6) + 0.0).as("v")))
   }
 
-  /** scanpy normalize_per_cell: each row scaled by its own sum. One shuffle
-    * on i shared by the aggregate and the re-join (AQE reuses exchange). */
-  def rowNormalize: ZMatrix = {
-    val rs = cells.groupBy(col("i")).agg(sum(col("v")).as("_rs"))
+  /** scanpy normalize_per_cell: each row scaled by its own sum, taken as a
+    * window over [[byRow]]. An aggregate joined back on `i` is not one
+    * shuffle at run time: AQE re-plans the join as a broadcast of the
+    * whole cell side, probed from a row-sum shuffle it has coalesced into
+    * one task. The window has no join for AQE to turn around. */
+  def rowNormalize: ZMatrix =
     // try_divide: a zero-sum row (possible for signed matrices) yields
     // null cells — matching the DuckDB twin's x/0 = NULL exactly; a plain
     // divide would be an ANSI hard error
-    ZMatrix(cells.join(rs, Seq("i"))
+    ZMatrix(withRowSum
       .select(col("i"), col("j"), round(try_divide(col("v"), col("_rs")), 6).as("v")))
-  }
 }
 
 object ZMatrix {

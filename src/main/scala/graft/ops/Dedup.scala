@@ -204,9 +204,7 @@ object Dedup {
     * one or two tasks and run the CPU-bound sort on one core, and at scale
     * the count never drops below the session's shuffle setting. */
   private def rarestFirst(ht: DataFrame): DataFrame = {
-    val spark = ht.sparkSession
-    val n = math.max(spark.sparkContext.defaultParallelism,
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val n = graft.Shuffle.width(ht.sparkSession)
     val byDoc = Window.partitionBy(col("doc_id"))
     ht.repartition(n, col("h"))
       .withColumn("_f", count(lit(1)).over(Window.partitionBy(col("h"))))

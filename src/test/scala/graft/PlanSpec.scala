@@ -186,6 +186,63 @@ class PlanSpec extends AnyFunSuite {
     assert(exchanges(plan) <= 5, s"added exchange in:\n$plan")
   }
 
+  test("scanpy row ops over a checkpointed input: one explicit i-exchange, no cell broadcast") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, REPARTITION_BY_NUM, ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.functions.log1p
+    import graft.array.ZMatrix
+    // perfbench's shape: the chain reads checkpointed cells, which carry
+    // no partitioning of their own
+    val x = ZMatrix(ZMatrix.fromLineitem(spark, TestSpark.sf).cells.localCheckpoint())
+    val df = x.filterRowsBySum(_ >= 20.0).filterColsByMean(_ > 1.0).rowNormalize
+      .mapValues(c => log1p(c * 10000)).cells
+    df.collect()
+    val root = df.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec].executedPlan
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case s: QueryStageExec => Seq(s.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case _ => p.children
+    }
+    // every operator the plan computes: a reused exchange ran where it was built
+    def computed(p: SparkPlan): Seq[SparkPlan] =
+      p +: (if (p.isInstanceOf[ReusedExchangeExec]) Nil else kids(p).flatMap(computed))
+    // the exchange a stage (or a reuse of one) reads
+    def exchangeOf(p: SparkPlan): Option[ShuffleExchangeExec] = p match {
+      case e: ShuffleExchangeExec => Some(e)
+      case _: QueryStageExec | _: ReusedExchangeExec => kids(p).headOption.flatMap(exchangeOf)
+      case _ => None
+    }
+    def onI(p: SparkPlan): Boolean = exchangeOf(p).exists(_.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name } == Seq("i")
+      case _ => false
+    })
+    val ops = computed(root)
+    val plan = root.treeString
+    val iEx = ops.collect { case e: ShuffleExchangeExec if onI(e) => e }
+    assert(iEx.size == 1, s"expected one i-exchange, got ${iEx.size} in:\n$plan")
+    assert(iEx.head.shuffleOrigin == REPARTITION_BY_NUM, s"i-exchange is not an explicit count in:\n$plan")
+    // the column-stats branch reads the same exchange back
+    assert(ops.exists(p => p.isInstanceOf[ReusedExchangeExec] && onI(p)),
+      s"column-stats branch does not reuse the i-exchange in:\n$plan")
+    val iReads = ops.collect { case r: AQEShuffleReadExec if onI(r.child) => r }
+    assert(iReads.forall(!_.hasCoalescedPartition), s"i-exchange coalesced in:\n$plan")
+    // nothing below a broadcast reaches the cell scan without an aggregate
+    assert(ops.exists(_.isInstanceOf[RDDScanExec]), s"fixture: no checkpointed cell scan in:\n$plan")
+    def reachesCells(p: SparkPlan): Boolean = p match {
+      case _: BaseAggregateExec => false
+      case _: RDDScanExec => true
+      case _ => kids(p).exists(reachesCells)
+    }
+    val cellBroadcasts = ops.collect { case b: BroadcastExchangeExec if reachesCells(b.child) => b }
+    assert(cellBroadcasts.isEmpty, s"the cell table is broadcast in:\n$plan")
+    val width = df.queryExecution.executedPlan.execute().getNumPartitions
+    assert(width >= spark.sparkContext.defaultParallelism, s"result runs on $width partitions:\n$plan")
+  }
+
   test("zarr_pushdown_read: the i-range prunes to exactly the covered chunk bands") {
     import org.apache.spark.sql.functions.col
     // run the query (writes the store), then re-read with the same filter

@@ -882,6 +882,59 @@ class ZMatrixSpec extends AnyFunSuite {
     assert(got3.values.forall(v => math.abs(v) <= c2))
   }
 
+  test("row ops over rows split across partitions match a local reference (zero-sum row, null i)") {
+    import spark.implicits._
+    import graft.Num.r6
+    type Cell = (Option[Long], Long, Double)
+    // column-major, so every multi-cell row spans the 3 input partitions;
+    // row 2 is signed and sums to 0; one cell has no row
+    val cells: Seq[Cell] = Seq(
+      (Some(0L), 0L, 1.0), (Some(1L), 0L, 4.0), (Some(2L), 0L, 2.0), (None, 0L, 5.0),
+      (Some(0L), 1L, 2.0), (Some(1L), 1L, 5.0), (Some(2L), 1L, -2.0), (Some(3L), 1L, 7.0),
+      (Some(0L), 2L, 3.0), (Some(3L), 2L, 1.0), (Some(3L), 3L, 4.0), (Some(4L), 3L, 1.0))
+    // the identity map re-types the RDD as a plain tuple: toDF's encoder is
+    // not derived for the method-local alias
+    def matrix(cs: Seq[Cell]) = ZMatrix(spark.sparkContext
+      .parallelize(cs.map { case (i, j, v) => (i, j, v) }, 3).toDF("i", "j", "v"))
+    val x = matrix(cells)
+    val spans = x.cells.rdd.mapPartitionsWithIndex((p, it) =>
+        it.filter(!_.isNullAt(0)).map(r => r.getLong(0) -> p))
+      .collect().groupBy(_._1).values.map(_.map(_._2).distinct.length)
+    assert(x.cells.rdd.getNumPartitions == 3 && spans.max == 3, "fixture: a row must span the partitions")
+    def got(m: ZMatrix): Seq[(Long, Long, Option[Double])] = m.cells.collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) None else Some(r.getDouble(2))))
+      .sortBy(c => (c._1, c._2))
+    // the reference: cells with a null i belong to no row
+    def rowSums(cs: Seq[Cell]): Map[Long, Double] =
+      cs.collect { case (Some(i), _, v) => i -> v }.groupMapReduce(_._1)(_._2)(_ + _)
+    def ref(cs: Seq[Cell])(f: (Long, Long, Double) => Option[Double]) =
+      cs.collect { case (Some(i), j, v) => (i, j, f(i, j, v)) }.sortBy(c => (c._1, c._2))
+    val rs = rowSums(cells)
+    // the null-i cells' sum (5) passes >= 5, the zero-sum row passes <= 1
+    type Col = org.apache.spark.sql.Column
+    for ((pred, keep) <- Seq[(Col => Col, Double => Boolean)]((_ >= 5.0, _ >= 5.0), (_ <= 1.0, _ <= 1.0))) {
+      val want = ref(cells.filter(_._1.exists(i => keep(rs(i)))))((_, _, v) => Some(v))
+      assert(got(x.filterRowsBySum(pred)) == want)
+    }
+    // a zero-sum row normalizes to nulls (try_divide), not an error
+    assert(got(x.rowNormalize) ==
+      ref(cells)((i, _, v) => if (rs(i) == 0.0) None else Some(r6(v / rs(i)))))
+    // pearson: the column sums and the total count every cell, the null-i
+    // one too; a zero-sum row has μ = 0 and divides by zero, an ANSI error
+    val err = intercept[Exception](x.pearsonResiduals(5).cells.collect())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("DIVIDE_BY_ZERO")), err.toString)
+    val counts = cells.filterNot(_._1.contains(2L))
+    val crs = rowSums(counts)
+    val cs = counts.groupMapReduce(_._2)(_._3)(_ + _)
+    val total = counts.map(_._3).sum
+    val clip = math.sqrt(4.0)
+    assert(got(matrix(counts).pearsonResiduals(4)) == ref(counts) { (i, j, v) =>
+      val mu = crs(i) * cs(j) / total
+      Some(r6(math.min(math.max((v - mu) / math.sqrt(mu + mu * mu / 100.0), -clip), clip)))
+    })
+  }
+
   test("Linkage.average matches hand-computed UPGMA with scipy's id contract") {
     import graft.array.Linkage
     val dist = Map((0, 1) -> 1.0, (0, 2) -> 4.0, (0, 3) -> 5.0,
