@@ -13,12 +13,13 @@ import org.apache.spark.sql.functions._
   *  - elementwise ufuncs are Catalyst column expressions (whole-stage
   *    codegen, no UDFs);
   *  - axis reductions are hash aggregates with map-side partial agg;
-  *  - row ops (scanpy filter_cells, normalize_per_cell, the PCA row
-  *    grouping) read [[byRow]], the cells hash-partitioned on `i` to an
-  *    explicit count, and take row sums as a window over it — zappy's
-  *    per-row-chunk block ops in coordinate form. A chain of row ops
-  *    shares that one exchange: `EnsureRequirements` drops a repartition
-  *    whose input already has the same partitioning;
+  *  - row ops (scanpy filter_cells, normalize_per_cell, Pearson
+  *    residuals, the PCA row grouping) read [[byRow]], the cells
+  *    hash-partitioned on `i` to an explicit count, and take row sums as
+  *    a window over it — zappy's per-row-chunk block ops in coordinate
+  *    form. A chain of row ops shares that one exchange:
+  *    `EnsureRequirements` drops a repartition whose input already has
+  *    the same partitioning;
   *  - NumPy-style vector broadcasting is a broadcast join against a tiny
   *    (ncols- or nrows-sized) vector table;
   *  - boolean indexing / slicing are filters that push to the scan;
@@ -34,13 +35,13 @@ final case class ZMatrix(cells: DataFrame) {
   private def sel(v: Column): DataFrame = cells.select(col("i"), col("j"), v.as("v"))
 
   /** The cells hash-partitioned on `i` into [[graft.Shuffle.width]]
-    * partitions: the one input of every row op. The explicit count makes
-    * the shuffle `REPARTITION_BY_NUM`, so AQE neither coalesces it into
-    * one task nor re-plans a row op's aggregate + join-back as a broadcast
-    * of the cell table. The layout is not taken from the source
-    * (`readSparse` builds cells chunk by chunk): a `localCheckpoint`ed
-    * frame reports `UnknownPartitioning`, so a repartition there is lost
-    * at the first checkpoint, and here it is paid once per plan. */
+    * partitions: the input of the row-sum ops below and of the PCA row
+    * grouping ([[Pca]]). The explicit count makes the shuffle
+    * `REPARTITION_BY_NUM`, which AQE does not coalesce into one task.
+    * The layout is not taken from the source (`readSparse` builds cells
+    * chunk by chunk): a `localCheckpoint`ed frame reports
+    * `UnknownPartitioning`, so a repartition there is lost at the first
+    * checkpoint; here it is paid once per plan. */
   private[graft] def byRow: DataFrame =
     cells.repartition(graft.Shuffle.width(cells.sparkSession), col("i"))
 
