@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,12 @@ object Verify {
     // optional extra args: only run queries whose name contains one of them
     // (local iteration aid; the driver always passes exactly two args)
     val only = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // a fresh durable model store per run, outside outDir (every
     // subdirectory there is read back as a query result): every model an
     // oracle embeds is fit in THIS run, none loaded from an earlier one
     val models = Files.createTempDirectory("graft_verify_models")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.models.dir", models.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus, "WARN", Map("spark.graft.models.dir" -> models.toString))
     try {
       new java.io.File(outDir).mkdirs()
       val ran = SparkEntry.queries

@@ -1038,7 +1038,8 @@ final case class ZMatrix(cells: DataFrame) {
     * Pearson residuals, Lause/Berens/Kobak 2021): under the NB model with
     * μ_ij = rs_i·cs_j / T (row sums × column sums over the grand total)
     * the residual is (x − μ) / sqrt(μ + μ²/θ), clipped to ±sqrt(n).
-    * θ = 100 (scanpy's default), n = `nrows` (the dense height).
+    * θ = 100 (scanpy's default), n = `nrows` (the dense height). A cell
+    * in a zero-sum row or column has μ = 0 and a null residual.
     * Residuals are emitted at the stored coordinates (the [[regressOut]]
     * coordinate-form contract; at an implicit zero the residual is
     * −μ/sqrt(μ+μ²/θ), derivable from the same marginals).
@@ -1053,11 +1054,14 @@ final case class ZMatrix(cells: DataFrame) {
     val cs = cells.groupBy(col("j")).agg(sum(col("v")).as("_cs"))
     val total = lit(cells.agg(sum(col("v"))).head().getDouble(0))
     val clip = lit(math.sqrt(nrows.toDouble))
-    val mu = col("_rs") * col("_cs") / total
-    val r = (col("v") - mu) / sqrt(mu + mu * mu / theta)
+    // try_divide: a zero-sum row or column (μ = 0) yields null residuals,
+    // as rowNormalize's zero-sum rows do, where a plain divide is an ANSI
+    // error; the clip is guarded because greatest(null, -clip) is -clip
+    val mu = try_divide(col("_rs") * col("_cs"), total)
+    val r = try_divide(col("v") - mu, sqrt(mu + mu * mu / theta))
     ZMatrix(withRowSum.join(broadcast(cs), Seq("j"))
       .select(col("i"), col("j"),
-        (round(least(greatest(r, -clip), clip), 6) + 0.0).as("v")))
+        (round(when(r.isNotNull, least(greatest(r, -clip), clip)), 6) + 0.0).as("v")))
   }
 
   /** scanpy normalize_per_cell: each row scaled by its own sum, taken as a

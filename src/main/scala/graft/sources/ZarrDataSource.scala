@@ -278,13 +278,7 @@ class ZarrWriteBuilder(path: String, info: LogicalWriteInfo)
     val dtype = Option(opts.get("dtype")).getOrElse("<f8")
     require(Zarr.Dtypes.contains(dtype), s"unsupported dtype $dtype")
     val comp = Option(opts.get("comp")).getOrElse("")
-    require(comp == "" || comp == "blosc" || comp == "zstd",
-      s"unsupported comp '$comp' (\"\", \"blosc\" or \"zstd\")")
-    // one compressor per store: blosc/zstd would silently win on encode
-    // while the zlib flag survived into append validation, so a later
-    // append with the SAME options would fail the geometry check
-    require(!(comp != "" && Option(opts.get("zlib")).exists(_.toBoolean)),
-      "pick one of zlib / blosc / zstd, not both")
+    Zarr.requireCodec(Option(opts.get("zlib")).exists(_.toBoolean), comp)
     val format = Option(opts.get("zarrFormat")).map(_.toInt).getOrElse(2)
     require(format == 2 || format == 3, s"zarrFormat must be 2 or 3, got $format")
     // chunk-key layout: the format default unless overridden — v2 may also

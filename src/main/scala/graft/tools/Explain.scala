@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan/audit tool: `runMain graft.tools.Explain <sfDir> [query...]`
   * prints the formatted physical plan for each named query (all if none
   * given) — used to audit pushdown / broadcast / codegen spans.
@@ -17,15 +15,7 @@ object Explain {
     val jobsMode = modes.contains("--jobs")
     val names = if (names0.isEmpty) graft.SparkEntry.queries.keys.toSeq.sorted else names0.toSeq
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession(32)
 
     if (jobsMode) {
       import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures [[graft.ops.Sampling.stratifiedSplit]] under DELIBERATE
@@ -16,14 +15,7 @@ import org.apache.spark.sql.functions._
 object SkewProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession(32)
     // 90% of docs collapse into one hot stratum; the rest keep their source
     val docs = graft.Tables.documents(spark, sfDir)
       .withColumn("source",

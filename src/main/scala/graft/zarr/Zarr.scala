@@ -3,7 +3,11 @@ package graft.zarr
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.{Deflater, Inflater}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import com.github.luben.zstd.Zstd
+
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.array.ZMatrix
@@ -19,6 +23,9 @@ import graft.array.ZMatrix
   * string/time readers, each checking the kind and rank it serves) and
   * writes it only through `writeMetaFile`. Format is detected on read;
   * chosen on write via `format = 2|3` / `.option("zarrFormat", ...)`.
+  * Chunk bytes are likewise framed in one place: `frame`/`unframe` pick
+  * blosc, zstd, zlib (v2), gzip (v3) or none from the array's metadata
+  * for every element kind — numeric, vlen string and datetime.
   *
   * Scale design: the chunk grid IS the partitioning.
   *  - write: one declared exchange (RequiresDistributionAndOrdering on the
@@ -551,51 +558,110 @@ object Zarr {
     None
   }
 
-  /** Decompress a zstd frame whose length is only known from the frame
-    * header (vlen-string / time chunks). Simple-API writers (numcodecs
-    * Zstd, our own chunks) always stamp the content size; streaming
-    * writers that omit it are rejected loudly rather than guessed at. */
-  private[zarr] def zstdDecompressSelfSized(b: Array[Byte]): Array[Byte] = {
-    val n = com.github.luben.zstd.Zstd.getFrameContentSize(b)
-    require(n >= 0 && n <= Int.MaxValue,
-      s"zstd frame lacks a usable content size (got $n)")
-    com.github.luben.zstd.Zstd.decompress(b, n.toInt)
+  // ---- the chunk frame ----
+  // A chunk's bytes carry one compression frame, chosen by the array's
+  // `comp`/`zlib`/`format`: a blosc(lz4, shuffle) frame, a zstd frame, v2
+  // zlib, v3 gzip, or none. `frame`/`unframe` are the only code that makes
+  // that choice; every chunk writer and reader of every element kind
+  // (numeric at any rank, vlen string, datetime) goes through them.
+
+  /** The compressor options a writer accepts: `comp` is "", "blosc" or
+    * "zstd", and a store carries one compressor — blosc/zstd would win on
+    * encode while the zlib flag survived into append validation, so a
+    * later append with the SAME options would fail the geometry check. */
+  private[graft] def requireCodec(zlib: Boolean, comp: String): Unit = {
+    require(comp == "" || comp == "blosc" || comp == "zstd",
+      s"unsupported comp '$comp' (\"\", \"blosc\" or \"zstd\")")
+    require(!(zlib && comp != ""), "pick one of zlib / blosc / zstd, not both")
   }
 
-  private[zarr] def deflate(b: Array[Byte]): Array[Byte] = {
-    val d = new Deflater(1); d.setInput(b); d.finish()
-    val out = new java.io.ByteArrayOutputStream(b.length / 2)
-    val buf = new Array[Byte](8192)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end(); out.toByteArray
-  }
-
-  private[zarr] def gzip(b: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(b.length / 2)
-    // level 1, matching the "level": 1 the v3 metadata declares (the
-    // GZIPOutputStream default would be 6 — metadata must describe the bytes)
-    val gz = new java.util.zip.GZIPOutputStream(out) { `def`.setLevel(1) }
-    gz.write(b); gz.close()
-    out.toByteArray
-  }
-
-  private[zarr] def gunzip(b: Array[Byte], outLen: Int): Array[Byte] = {
-    val in = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(b))
-    val out = new Array[Byte](outLen)
-    var off = 0
-    while (off < outLen) {
-      val n = in.read(out, off, outLen - off)
-      require(n > 0, "truncated gzip chunk")
-      off += n
+  /** Frame a chunk's raw bytes; `width` is the element byte width (blosc's
+    * shuffle typesize). zlib and gzip run at level 1, the level the v3
+    * gzip metadata declares. */
+  private[zarr] def frame(raw: Array[Byte], width: Int, zlib: Boolean, format: Int,
+                          comp: String): Array[Byte] =
+    if (comp == "blosc") Blosc.compress(raw, width)
+    else if (comp == "zstd") Zstd.compress(raw, 1)
+    else if (!zlib) raw
+    else {
+      val out = new java.io.ByteArrayOutputStream(raw.length / 2)
+      if (format == 3) {
+        // GZIPOutputStream's own default level would be 6
+        val gz = new java.util.zip.GZIPOutputStream(out) { `def`.setLevel(1) }
+        gz.write(raw); gz.close()
+      } else {
+        val d = new Deflater(1); d.setInput(raw); d.finish()
+        val buf = new Array[Byte](8192)
+        while (!d.finished()) out.write(buf, 0, d.deflate(buf))
+        d.end()
+      }
+      out.toByteArray
     }
-    in.close(); out
-  }
 
-  /** Encode a row-major double buffer as raw chunk bytes in `dtype`
-    * (integral dtypes truncate toward zero, the NumPy C-cast rule).
-    * Compression framing: `comp == "blosc"` → a blosc(lz4, shuffle)
-    * frame in either format; else the format default selected by `zlib`
-    * (v2 zlib, v3 gzip — the v3 spec's codec). */
+  /** The `outLen` of a chunk whose decoded size the geometry does not fix
+    * (vlen strings): [[unframe]] takes it from the frame itself. */
+  private[zarr] val SelfSized = -1
+
+  /** Undo [[frame]]. A known `outLen` (chunk shape × element width) is
+    * checked against what every codec decodes: the blosc header's nbytes
+    * and cbytes, the zstd decoded length, the zlib stream's progress and
+    * the gzip stream's length; a raw chunk passes through for its decoder
+    * to check. With [[SelfSized]] the size comes from the frame: the blosc
+    * header (capped, see `Blosc.decompressSelfSized`), the zstd content
+    * size (a frame without one is refused, not guessed at), or the end of
+    * the zlib/gzip stream. */
+  private[graft] def unframe(bytes: Array[Byte], zlib: Boolean, format: Int, comp: String,
+                             outLen: Int): Array[Byte] =
+    if (comp == "blosc")
+      if (outLen == SelfSized) Blosc.decompressSelfSized(bytes) else Blosc.decompress(bytes, outLen)
+    else if (comp == "zstd") {
+      val n = if (outLen != SelfSized) outLen else {
+        val c = Zstd.getFrameContentSize(bytes)
+        require(c >= 0 && c <= Int.MaxValue, s"zstd frame lacks a usable content size (got $c)")
+        c.toInt
+      }
+      val out = new Array[Byte](n)
+      val got = Zstd.decompressByteArray(out, 0, n, bytes, 0, bytes.length)
+      require(got == n, s"zstd chunk decoded $got of $n bytes")
+      out
+    }
+    else if (!zlib) bytes
+    else if (outLen == SelfSized) {
+      val src = new java.io.ByteArrayInputStream(bytes)
+      val in =
+        if (format == 3) new java.util.zip.GZIPInputStream(src)
+        else new java.util.zip.InflaterInputStream(src)
+      try in.readAllBytes() finally in.close()
+    } else if (format == 3) {
+      val in = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(bytes))
+      val out = new Array[Byte](outLen)
+      var off = 0
+      try while (off < outLen) {
+        val n = in.read(out, off, outLen - off)
+        require(n > 0, "truncated gzip chunk")
+        off += n
+      } finally in.close()
+      out
+    } else {
+      val inf = new Inflater(); inf.setInput(bytes)
+      val out = new Array[Byte](outLen)
+      var off = 0
+      try while (off < outLen && !inf.finished()) {
+        val n = inf.inflate(out, off, outLen - off)
+        // zero progress before stream end = truncated/corrupt input; without
+        // this check the loop would spin forever and hang the executor task
+        if (n == 0 && !inf.finished())
+          throw new IllegalArgumentException(
+            s"truncated or corrupt zlib chunk (decoded $off of $outLen bytes)")
+        off += n
+      } finally inf.end()
+      require(off == outLen, s"zlib chunk decoded $off of $outLen bytes")
+      out
+    }
+
+  /** Encode a row-major double buffer as one chunk in `dtype` (integral
+    * dtypes truncate toward zero, the NumPy C-cast rule), framed by
+    * [[frame]] — blosc, zstd, or the format's zlib (v2) / gzip (v3). */
   def encodeChunk(buf: Array[Double], dtype: String, zlib: Boolean,
                   format: Int = 2, comp: String = ""): Array[Byte] = {
     // r21 fused blosc path for the 8-byte dtypes (f8 data, i8 index
@@ -621,29 +687,18 @@ object Zarr {
       case "i1" => buf.foreach(v => bb.put(v.toByte))
       case "b1" => buf.foreach(v => bb.put(if (v != 0.0) 1.toByte else 0.toByte))
     }
-    val raw = bb.array()
-    if (comp == "blosc") Blosc.compress(raw, elemSize(dtype))
-    else if (comp == "zstd") com.github.luben.zstd.Zstd.compress(raw, 1)
-    else if (!zlib) raw else if (format == 3) gzip(raw) else deflate(raw)
+    frame(bb.array(), elemSize(dtype), zlib, format, comp)
   }
 
   /** Decode one chunk file's bytes into row-major doubles. */
   def decodeChunk(bytes0: Array[Byte], nElems: Int, zlib: Boolean,
                   dtype: String = "<f8", format: Int = 2,
-                  comp: String = ""): Array[Double] = {
-    val outLen = nElems * elemSize(dtype)
-    val bytes =
-      if (comp == "blosc") Blosc.decompress(bytes0, outLen)
-      else if (comp == "zstd") {
-        val out = new Array[Byte](outLen)
-        val n = com.github.luben.zstd.Zstd.decompressByteArray(
-          out, 0, outLen, bytes0, 0, bytes0.length)
-        require(n == outLen, s"zstd chunk decoded $n of $outLen bytes")
-        out
-      }
-      else if (!zlib) bytes0
-      else if (format == 3) gunzip(bytes0, outLen) else inflate(bytes0, outLen)
-    val bb = ByteBuffer.wrap(bytes).order(byteOrder(dtype))
+                  comp: String = ""): Array[Double] =
+    decodeValues(unframe(bytes0, zlib, format, comp, nElems * elemSize(dtype)), nElems, dtype)
+
+  /** `nElems` elements of an unframed chunk as doubles. */
+  private def decodeValues(raw: Array[Byte], nElems: Int, dtype: String): Array[Double] = {
+    val bb = ByteBuffer.wrap(raw).order(byteOrder(dtype))
     dtype.substring(1) match {
       case "f8" => Array.fill(nElems)(bb.getDouble)
       case "f4" => Array.fill(nElems)(bb.getFloat.toDouble)
@@ -658,22 +713,13 @@ object Zarr {
     }
   }
 
-  private[zarr] def inflate(b: Array[Byte], outLen: Int): Array[Byte] = {
-    val inf = new Inflater(); inf.setInput(b)
-    val out = new Array[Byte](outLen)
-    var off = 0
-    while (off < outLen && !inf.finished()) {
-      val n = inf.inflate(out, off, outLen - off)
-      // zero progress before stream end = truncated/corrupt input; without
-      // this check the loop would spin forever and hang the executor task
-      if (n == 0 && !inf.finished())
-        throw new IllegalArgumentException(
-          s"truncated or corrupt zlib chunk (decoded $off of $outLen bytes)")
-      off += n
-    }
-    inf.end()
-    require(off == outLen, s"zlib chunk decoded $off of $outLen bytes")
-    out
+  /** The first `n` elements of an unframed chunk of 8-byte integers —
+    * `i8`, or a datetime64/timedelta64 dtype — as exact longs: the double
+    * path of [[decodeChunk]] is lossy above 2^53. */
+  private[graft] def decodeLongs(raw: Array[Byte], n: Int, dtype: String): Array[Long] = {
+    require(raw.length >= n * 8, s"chunk holds ${raw.length} bytes, need ${n * 8}")
+    val bb = ByteBuffer.wrap(raw).order(byteOrder(dtype))
+    Array.fill(n)(bb.getLong)
   }
 
   /** Encode a whole shard (row-major `shardRows`×`shardCols` buffer) as the
@@ -1270,6 +1316,91 @@ object Zarr {
     math.max(base, math.min((nChunks + 7) / 8, 65536L).toInt)
   }
 
+  /** The one rank-1 chunk writer, behind [[writeStringVector]],
+    * [[writeTimeVector]] and the sparse group's data+indices pair. `rows`
+    * (i, item) are repartitioned by chunk and sorted within each
+    * partition, so each task streams out whole chunks: a chunk's items
+    * land in a `fill`-initialized buffer of the full chunk shape (tail
+    * chunks too — the zarr chunk rule), which `encode` turns into one
+    * framed chunk per store of `stores` (address, metadata; they share one
+    * geometry). Each chunk is written to an attempt-scoped temp file and
+    * renamed over its key, so speculative attempts are safe; an index
+    * outside [0, n) fails the task (`what` names the vector), since a
+    * silently dropped row would desynchronize obs from X. The metadata
+    * documents, group levels and consolidated maps commit after the data. */
+  private def writeRank1[T: ClassTag](rows: Dataset[(Long, T)], stores: Seq[(String, Meta)],
+                                      fill: T, what: String)
+                                     (encode: Array[T] => Seq[Array[Byte]]): Unit = {
+    val geom = stores.head._2
+    val (n, chunk, keyEnc) = (geom.rows, geom.chunkRows, geom.keyEnc)
+    require(n > 0 && chunk > 0, s"need n > 0 and chunk > 0, got n=$n chunk=$chunk")
+    val nodes = stores.map { case (p, _) =>
+      val (root, frag) = splitKey(p)
+      (root, frag.map(validKeySegments).getOrElse(Nil))
+    }
+    val dirs = nodes.map { case (root, segs) => (root +: segs).mkString("/") }
+    dirs.foreach(delete(_, recursive = true))
+    rows.repartition(vectorWriteParts(rows.sparkSession, n, chunk),
+        (col("i").cast("long") / chunk).cast("long"))
+      .sortWithinPartitions(col("i"))
+      .foreachPartition { (it: Iterator[(Long, T)]) =>
+        val attempt = Option(org.apache.spark.TaskContext.get())
+          .map(_.taskAttemptId()).getOrElse(0L)
+        var curCi = -1L
+        var buf: Array[T] = null
+        def flush(): Unit = if (buf != null) {
+          encode(buf).zip(dirs).foreach { case (bytes, dir) =>
+            val f = chunkPath(dir, curCi, 0, keyEnc, rank1 = true)
+            val tmp = s"$f.__tmp-$attempt"
+            writeBytes(tmp, bytes)
+            renameOver(tmp, f)
+          }
+          buf = null
+        }
+        it.foreach { case (i, item) =>
+          require(i >= 0 && i < n, s"$what index $i outside [0, $n)")
+          val ci = i / chunk
+          if (ci != curCi) {
+            flush()
+            curCi = ci
+            buf = Array.fill(chunk)(fill)
+          }
+          buf((i - ci * chunk).toInt) = item
+        }
+        flush()
+      }
+    for (((_, m), (root, segs), dir) <- stores.lazyZip(nodes).lazyZip(dirs)) {
+      writeMetaFile(dir, m)
+      if (segs.nonEmpty) ensureGroupMeta(root, segs, m.format)
+      refreshConsolidatedAbove(dir)
+    }
+  }
+
+  /** The one per-chunk read of every rank-1 reader: chunk `ci` of `arr`
+    * (`m` its metadata) unframed to `outLen` bytes (or [[SelfSized]]) and
+    * decoded, or — when the chunk file is absent — its valid length of
+    * `fill`. */
+  private def readRank1Chunk[T: ClassTag](arr: String, m: Meta, ci: Long, fill: T, outLen: Int)
+                                         (decode: Array[Byte] => Array[T]): Array[T] = {
+    val f = chunkPath(arr, ci, 0, m.keyEnc, rank1 = true)
+    if (exists(f)) decode(unframe(readBytes(f), m.zlib, m.format, m.comp, outLen))
+    else Array.fill(math.min(m.chunkRows.toLong, m.rows - ci * m.chunkRows).toInt)(fill)
+  }
+
+  /** A numeric rank-1 chunk as doubles (absent → fill). */
+  private def readValueChunk(arr: String, m: Meta, ci: Long): Array[Double] =
+    readRank1Chunk(arr, m, ci, m.fill, m.chunkRows * elemSize(m.dtype))(
+      decodeValues(_, m.chunkRows, m.dtype))
+
+  /** An integer rank-1 chunk (indptr, indices) as exact longs: `i8`
+    * straight off the bytes, narrower dtypes through doubles, which hold
+    * them exactly. */
+  private def readIndexChunk(arr: String, m: Meta, ci: Long): Array[Long] =
+    if (m.dtype.endsWith("i8"))
+      readRank1Chunk(arr, m, ci, m.fill.toLong, m.chunkRows * 8)(
+        decodeLongs(_, m.chunkRows, m.dtype))
+    else readValueChunk(arr, m, ci).map(_.toLong)
+
   def writeVector(vec: DataFrame, path: String, n: Long, chunk: Int,
                   zlib: Boolean = false, fill: Double = 0.0,
                   dtype: String = "<f8", format: Int = 2,
@@ -1452,18 +1583,8 @@ object Zarr {
           val ciHi = (hi - 1) / chunk
           while (ci <= ciHi) {
             val cLen = math.min(chunk.toLong, m.rows - ci * chunk).toInt
-            val f = chunkPath(ps.arr, ci, 0, m.keyEnc, rank1 = true)
-            val items: Array[String] =
-              if (!exists(f)) Array.fill(cLen)("")
-              else {
-                val raw0 = readBytes(f)
-                val raw =
-                  if (m.comp == "blosc") Blosc.decompressSelfSized(raw0)
-                  else if (m.comp == "zstd") zstdDecompressSelfSized(raw0)
-                  else if (m.zlib) inflateUnsized(raw0, gzipped = m.format == 3)
-                  else raw0
-                vlenDecode(raw, chunk, expectedAlt = cLen)
-              }
+            val items = readRank1Chunk(ps.arr, m, ci, "", SelfSized)(
+              vlenDecode(_, chunk, expectedAlt = cLen))
             val from = math.max(lo, ci * chunk)
             val until = math.min(hi, ci * chunk + cLen)
             var r = from
@@ -1479,10 +1600,7 @@ object Zarr {
           var ci = lo / m.chunkRows
           val ciHi = (hi - 1) / m.chunkRows
           while (ci <= ciHi) {
-            val f = chunkPath(pc.arr, ci, 0, m.keyEnc, rank1 = true)
-            val vals =
-              if (!exists(f)) Array.fill(m.chunkRows)(m.fill)
-              else decodeChunk(readBytes(f), m.chunkRows, m.zlib, m.dtype, m.format, m.comp)
+            val vals = readValueChunk(pc.arr, m, ci)
             val from = math.max(lo, ci * m.chunkRows)
             val until = math.min(hi, (ci + 1) * m.chunkRows)
             var r = from
@@ -1532,11 +1650,7 @@ object Zarr {
           def dataAt(k: Long): Double = {
             val c = k / dm.chunkRows
             if (c != loaded) {
-              val f = chunkPath(psp.datArr, c, 0, dm.keyEnc, rank1 = true)
-              buf =
-                if (!exists(f)) Array.fill(dm.chunkRows)(dm.fill)
-                else decodeChunk(readBytes(f), dm.chunkRows, dm.zlib, dm.dtype,
-                  dm.format, dm.comp)
+              buf = readValueChunk(psp.datArr, dm, c)
               loaded = c
             }
             buf((k % dm.chunkRows).toInt)
@@ -1629,17 +1743,10 @@ object Zarr {
     val ptrArr = resolveArray(s"$node/indptr")
     val pm = readMeta(ptrArr)
     val indptr = new Array[Long](pm.rows.toInt)
-    var ci = 0L
-    var outPos = 0
-    while (outPos < indptr.length) {
-      val len = math.min(pm.chunkRows.toLong, pm.rows - ci * pm.chunkRows).toInt
-      val f = chunkPath(ptrArr, ci, 0, pm.keyEnc, rank1 = true)
-      val vals =
-        if (!exists(f)) Array.fill(len)(pm.fill)
-        else decodeChunk(readBytes(f), pm.chunkRows, pm.zlib, pm.dtype, pm.format, pm.comp)
-      var e = 0
-      while (e < len) { indptr(outPos) = vals(e).toLong; outPos += 1; e += 1 }
-      ci += 1
+    for (ci <- 0L until pm.nChunks) {
+      val at = (ci * pm.chunkRows).toInt
+      System.arraycopy(readIndexChunk(ptrArr, pm, ci), 0, indptr, at,
+        math.min(pm.chunkRows, indptr.length - at))
     }
     require(indptr.length >= 1 && indptr.head == 0L,
       s"$node indptr must start at 0, got ${indptr.headOption}")
@@ -1660,13 +1767,8 @@ object Zarr {
     val cells = spark.range(nChunks).as[Long].flatMap { c =>
       val base = c * chunk
       val len = math.min(chunk.toLong, nnz - base).toInt
-      def chunkOf(arr: String, m: Meta): Array[Double] = {
-        val f = chunkPath(arr, c, 0, m.keyEnc, rank1 = true)
-        if (!exists(f)) Array.fill(m.chunkRows)(m.fill)
-        else decodeChunk(readBytes(f), m.chunkRows, m.zlib, m.dtype, m.format, m.comp)
-      }
-      val dat = chunkOf(datArr, datMeta)
-      val idx = chunkOf(idxArr, idxMeta)
+      val dat = readValueChunk(datArr, datMeta, c)
+      val idx = readIndexChunk(idxArr, idxMeta, c)
       val ptr = bptr.value
       // binary-search the first major whose span contains `base`, then
       // walk — indptr is monotone, so the walk is O(1) amortized
@@ -1681,7 +1783,7 @@ object Zarr {
       (0 until len).iterator.map { e =>
         val k = base + e
         while (ptr(major + 1) <= k) major += 1
-        (major.toLong, idx(e).toLong, dat(e))
+        (major.toLong, idx(e), dat(e))
       }
     }.toDF("major", "minor", "v")
     ZMatrix(
@@ -1691,65 +1793,19 @@ object Zarr {
 
   /** Write TWO position-aligned rank-1 arrays from one (i, v1, v2) frame
     * in a single repartition-by-chunk pass — the sparse group's
-    * data+indices shape. Same distributed mechanics as
-    * [[writeStringVector]] (speculation-safe temp+rename per chunk, rows
-    * beyond [0, n) fail the task, missing positions fill 0). */
+    * data+indices shape ([[writeRank1]]; missing positions fill 0). */
   private def writeVectorPair(vec: DataFrame, pathA: String, pathB: String,
                               n: Long, chunk: Int, dtypeA: String, dtypeB: String,
                               format: Int, comp: String): Unit = {
-    require(n > 0 && chunk > 0, s"need n > 0 and chunk > 0, got n=$n chunk=$chunk")
-    def target(p: String): String = {
-      val (r, f) = splitKey(p)
-      (r +: f.map(validKeySegments).getOrElse(Nil)).mkString("/")
-    }
-    val (tA, tB) = (target(pathA), target(pathB))
-    delete(tA, recursive = true); delete(tB, recursive = true)
-    val keyEnc = writeKeyEnc(format)
-    val spark = vec.sparkSession
-    import spark.implicits._
-    vec.select(col("i").cast("long"), col("v1").cast("double"), col("v2").cast("double"))
-      .as[(Long, Double, Double)]
-      .repartition(vectorWriteParts(spark, n, chunk),
-        (col("i").cast("long") / chunk).cast("long"))
-      .sortWithinPartitions(col("i"))
-      .foreachPartition { (it: Iterator[(Long, Double, Double)]) =>
-        val attempt = Option(org.apache.spark.TaskContext.get())
-          .map(_.taskAttemptId()).getOrElse(0L)
-        var curCi = -1L
-        var bufA: Array[Double] = null
-        var bufB: Array[Double] = null
-        def flushOne(buf: Array[Double], dtype: String, t: String): Unit = {
-          val bytes = encodeChunk(buf, dtype, zlib = false, format, comp)
-          val f = chunkPath(t, curCi, 0, keyEnc, rank1 = true)
-          val tmp = s"$f.__tmp-$attempt"
-          writeBytes(tmp, bytes)
-          renameOver(tmp, f)
-        }
-        def flush(): Unit = if (bufA != null) {
-          flushOne(bufA, dtypeA, tA); flushOne(bufB, dtypeB, tB)
-          bufA = null; bufB = null
-        }
-        it.foreach { case (i, a, b) =>
-          require(i >= 0 && i < n, s"vector-pair index $i outside [0, $n)")
-          val ci = i / chunk
-          if (ci != curCi) {
-            flush()
-            curCi = ci
-            bufA = new Array[Double](chunk) // tail chunks full-shape, 0-filled
-            bufB = new Array[Double](chunk)
-          }
-          val at = (i - ci * chunk).toInt
-          bufA(at) = a; bufB(at) = b
-        }
-        flush()
-      }
-    for ((t, p, dtype) <- Seq((tA, pathA, dtypeA), (tB, pathB, dtypeB))) {
-      writeMetaFile(t, Meta(n, 1, chunk, 1, zlib = false, fill = 0.0,
-        dtype = dtype, format = format, keyEnc = keyEnc, rank1 = true, comp = comp))
-      val (root, frag) = splitKey(p)
-      val segs = frag.map(validKeySegments).getOrElse(Nil)
-      if (segs.nonEmpty) ensureGroupMeta(root, segs, format)
-      refreshConsolidatedAbove(t)
+    def meta(dtype: String) = Meta(n, 1, chunk, 1, zlib = false, fill = 0.0,
+      dtype = dtype, format = format, keyEnc = writeKeyEnc(format), rank1 = true, comp = comp)
+    import vec.sparkSession.implicits._
+    writeRank1(vec.select(col("i").cast("long"),
+        struct(col("v1").cast("double").as("_1"), col("v2").cast("double").as("_2")))
+        .as[(Long, (Double, Double))],
+      Seq(pathA -> meta(dtypeA), pathB -> meta(dtypeB)), (0.0, 0.0), "vector-pair") { buf =>
+      Seq(encodeChunk(buf.map(_._1), dtypeA, zlib = false, format, comp),
+        encodeChunk(buf.map(_._2), dtypeB, zlib = false, format, comp))
     }
   }
 
@@ -1897,20 +1953,6 @@ object Zarr {
     }
   }
 
-  /** Inflate a zlib/gzip stream of UNKNOWN output size (vlen chunks have
-    * no geometry-derived length) into a growing buffer. */
-  private def inflateUnsized(b: Array[Byte], gzipped: Boolean): Array[Byte] = {
-    val in: java.io.InputStream =
-      if (gzipped) new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(b))
-      else new java.util.zip.InflaterInputStream(new java.io.ByteArrayInputStream(b))
-    val out = new java.io.ByteArrayOutputStream(b.length * 4)
-    val buf = new Array[Byte](8192)
-    var n = in.read(buf)
-    while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-    in.close()
-    out.toByteArray
-  }
-
   /** Metadata of a rank-1 array whose element kind `ok` accepts (`what`
     * names the kind) — the string and time readers' view of
     * [[readArrayMeta]]. */
@@ -1923,66 +1965,20 @@ object Zarr {
   }
 
   /** Write a rank-1 vlen string array from a long-form (i, s) frame —
-    * the anndata obs/var index shape, readable by zarr-python as-is.
-    * One write task per shuffle partition streams its chunks out
-    * speculation-safely (attempt-scoped temp + rename), so the write is
-    * as distributed as the numeric DSv2 path; rows beyond [0, n) fail the
-    * task (a silently dropped index row would desynchronize obs from X).
-    * Missing positions fill with "". */
+    * the anndata obs/var index shape, readable by zarr-python as-is,
+    * through [[writeRank1]], so the write is as distributed as the
+    * numeric DSv2 path. Missing positions fill with "". */
   def writeStringVector(vec: DataFrame, path: String, n: Long, chunk: Int,
                         zlib: Boolean = false, format: Int = 2,
                         comp: String = ""): Unit = {
-    require(n > 0 && chunk > 0, s"need n > 0 and chunk > 0, got n=$n chunk=$chunk")
     require(format == 2 || format == 3, s"zarrFormat must be 2 or 3, got $format")
-    require(comp == "" || comp == "blosc" || comp == "zstd",
-      s"unsupported comp '$comp'")
-    require(!(zlib && comp != ""), "pick one of zlib / blosc / zstd")
-    val (root, frag) = splitKey(path)
-    val segs = frag.map(validKeySegments).getOrElse(Nil)
-    val target = (root +: segs).mkString("/")
-    delete(target, recursive = true)
-    val keyEnc = writeKeyEnc(format)
-    val spark = vec.sparkSession
-    import spark.implicits._
-    vec.select(col("i").cast("long"), col("s").cast("string")).as[(Long, String)]
-      .repartition(vectorWriteParts(spark, n, chunk),
-        (col("i").cast("long") / chunk).cast("long"))
-      .sortWithinPartitions(col("i"))
-      .foreachPartition { (it: Iterator[(Long, String)]) =>
-        val attempt = Option(org.apache.spark.TaskContext.get())
-          .map(_.taskAttemptId()).getOrElse(0L)
-        var curCi = -1L
-        var buf: Array[String] = null
-        def flush(): Unit = if (buf != null) {
-          val raw = vlenEncode(buf)
-          val bytes =
-            if (comp == "blosc") Blosc.compress(raw, 1)
-            else if (comp == "zstd") com.github.luben.zstd.Zstd.compress(raw, 1)
-            else if (!zlib) raw
-            else if (format == 3) gzip(raw) else deflate(raw)
-          val f = chunkPath(target, curCi, 0, keyEnc, rank1 = true)
-          val tmp = s"$f.__tmp-$attempt"
-          writeBytes(tmp, bytes)
-          renameOver(tmp, f)
-          buf = null
-        }
-        it.foreach { case (i, s) =>
-          require(i >= 0 && i < n, s"string vector index $i outside [0, $n)")
-          val ci = i / chunk
-          if (ci != curCi) {
-            flush()
-            curCi = ci
-            // tail chunks still allocate the FULL chunk shape (fill-padded)
-            buf = Array.fill(chunk)("")
-          }
-          buf((i - ci * chunk).toInt) = if (s == null) "" else s
-        }
-        flush()
-      }
-    writeMetaFile(target, Meta(n, 1, chunk, 1, zlib, 0.0, ZarrMeta.StringDtype,
-      format, keyEnc = keyEnc, rank1 = true, comp = comp))
-    if (segs.nonEmpty) ensureGroupMeta(root, segs, format)
-    refreshConsolidatedAbove(target)
+    requireCodec(zlib, comp)
+    import vec.sparkSession.implicits._
+    writeRank1(vec.select(col("i").cast("long"), col("s").cast("string")).as[(Long, String)],
+      Seq(path -> Meta(n, 1, chunk, 1, zlib, 0.0, ZarrMeta.StringDtype, format,
+        keyEnc = writeKeyEnc(format), rank1 = true, comp = comp)), "", "string vector") {
+      buf => Seq(frame(vlenEncode(buf), 1, zlib, format, comp))
+    }
   }
 
   /** Read a rank-1 vlen string array back as (i: long, s: string) —
@@ -1992,22 +1988,10 @@ object Zarr {
     val arr = resolveArray(path, Some(key).filter(_.nonEmpty))
     val m = vectorMeta(arr, "string")(_.isString)
     val (n, chunk) = (m.rows, m.chunkRows)
-    val nChunks = (n + chunk - 1) / chunk
     import spark.implicits._
-    spark.range(nChunks).as[Long].flatMap { ci =>
+    spark.range(m.nChunks).as[Long].flatMap { ci =>
       val len = math.min(chunk.toLong, n - ci * chunk).toInt
-      val f = chunkPath(arr, ci, 0, m.keyEnc, rank1 = true)
-      val items: Array[String] =
-        if (!exists(f)) Array.fill(len)("")
-        else {
-          val raw0 = readBytes(f)
-          val raw =
-            if (m.comp == "blosc") Blosc.decompressSelfSized(raw0)
-            else if (m.comp == "zstd") zstdDecompressSelfSized(raw0)
-            else if (m.zlib) inflateUnsized(raw0, gzipped = m.format == 3)
-            else raw0
-          vlenDecode(raw, chunk, expectedAlt = len)
-        }
+      val items = readRank1Chunk(arr, m, ci, "", SelfSized)(vlenDecode(_, chunk, expectedAlt = len))
       (0 until len).iterator.map(k => (ci * chunk + k, items(k)))
     }.toDF("i", "s")
   }
@@ -2022,71 +2006,24 @@ object Zarr {
   // zarr-python "numpy.datetime64" extension data_type.
 
   /** Write a rank-1 datetime64[ns]/timedelta64[ns] array from a long-form
-    * (i, v: epoch-nanos long) frame. Same distributed mechanics as
-    * [[writeStringVector]]: one write task per shuffle partition streams
-    * its chunks out speculation-safely; rows beyond [0, n) fail the task;
-    * missing positions take `fill` (0 = epoch; use Long.MinValue for
-    * NaT). */
+    * (i, v: epoch-nanos long) frame through [[writeRank1]]; missing
+    * positions take `fill` (0 = epoch; use Long.MinValue for NaT). */
   def writeTimeVector(vec: DataFrame, path: String, n: Long, chunk: Int,
                       dtype: String = "<M8[ns]", format: Int = 2,
                       comp: String = "", zlib: Boolean = false,
                       fill: Long = 0L): Unit = {
-    require(n > 0 && chunk > 0, s"need n > 0 and chunk > 0, got n=$n chunk=$chunk")
     require(ZarrMeta.TimeDtypes.contains(dtype),
       s"unsupported time dtype '$dtype' (one of ${ZarrMeta.TimeDtypes.mkString(", ")})")
     require(format == 2 || format == 3, s"zarrFormat must be 2 or 3, got $format")
-    require(comp == "" || comp == "blosc" || comp == "zstd",
-      s"unsupported comp '$comp'")
-    require(!(zlib && comp != ""), "pick one of zlib / blosc / zstd")
-    val (root, frag) = splitKey(path)
-    val segs = frag.map(validKeySegments).getOrElse(Nil)
-    val target = (root +: segs).mkString("/")
-    delete(target, recursive = true)
-    val keyEnc = writeKeyEnc(format)
-    val big = dtype.startsWith(">")
-    val spark = vec.sparkSession
-    import spark.implicits._
-    vec.select(col("i").cast("long"), col("v").cast("long")).as[(Long, Long)]
-      .repartition(vectorWriteParts(spark, n, chunk),
-        (col("i").cast("long") / chunk).cast("long"))
-      .sortWithinPartitions(col("i"))
-      .foreachPartition { (it: Iterator[(Long, Long)]) =>
-        val attempt = Option(org.apache.spark.TaskContext.get())
-          .map(_.taskAttemptId()).getOrElse(0L)
-        var curCi = -1L
-        var buf: Array[Long] = null
-        def flush(): Unit = if (buf != null) {
-          val bb = ByteBuffer.allocate(buf.length * 8)
-            .order(if (big) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
-          buf.foreach(bb.putLong)
-          val raw = bb.array()
-          val bytes =
-            if (comp == "blosc") Blosc.compress(raw, 8)
-            else if (comp == "zstd") com.github.luben.zstd.Zstd.compress(raw, 1)
-            else if (!zlib) raw
-            else if (format == 3) gzip(raw) else deflate(raw)
-          val f = chunkPath(target, curCi, 0, keyEnc, rank1 = true)
-          val tmp = s"$f.__tmp-$attempt"
-          writeBytes(tmp, bytes)
-          renameOver(tmp, f)
-          buf = null
-        }
-        it.foreach { case (i, v) =>
-          require(i >= 0 && i < n, s"time vector index $i outside [0, $n)")
-          val ci = i / chunk
-          if (ci != curCi) {
-            flush()
-            curCi = ci
-            buf = Array.fill(chunk)(fill) // tail chunks stay full-shape, fill-padded
-          }
-          buf((i - ci * chunk).toInt) = v
-        }
-        flush()
-      }
-    writeMetaFile(target, Meta(n, 1, chunk, 1, zlib, 0.0, dtype, format,
-      keyEnc = keyEnc, rank1 = true, comp = comp).copy(timeFill = fill))
-    if (segs.nonEmpty) ensureGroupMeta(root, segs, format)
-    refreshConsolidatedAbove(target)
+    requireCodec(zlib, comp)
+    import vec.sparkSession.implicits._
+    writeRank1(vec.select(col("i").cast("long"), col("v").cast("long")).as[(Long, Long)],
+      Seq(path -> Meta(n, 1, chunk, 1, zlib, 0.0, dtype, format, keyEnc = writeKeyEnc(format),
+        rank1 = true, comp = comp).copy(timeFill = fill)), fill, "time vector") { buf =>
+      val bb = ByteBuffer.allocate(buf.length * 8).order(byteOrder(dtype))
+      buf.foreach(bb.putLong)
+      Seq(frame(bb.array(), 8, zlib, format, comp))
+    }
   }
 
   /** Read a rank-1 datetime64/timedelta64[ns] array back as
@@ -2095,28 +2032,11 @@ object Zarr {
   def readTimeVector(spark: SparkSession, path: String, key: String = ""): DataFrame = {
     val arr = resolveArray(path, Some(key).filter(_.nonEmpty))
     val m = vectorMeta(arr, "datetime64/timedelta64")(_.isTime)
-    val (n, chunk, fill) = (m.rows, m.chunkRows, m.timeFill)
-    val big = m.dtype.startsWith(">")
-    val nChunks = (n + chunk - 1) / chunk
+    val (n, chunk) = (m.rows, m.chunkRows)
     import spark.implicits._
-    spark.range(nChunks).as[Long].flatMap { ci =>
+    spark.range(m.nChunks).as[Long].flatMap { ci =>
       val len = math.min(chunk.toLong, n - ci * chunk).toInt
-      val f = chunkPath(arr, ci, 0, m.keyEnc, rank1 = true)
-      val items: Array[Long] =
-        if (!exists(f)) Array.fill(len)(fill)
-        else {
-          val raw0 = readBytes(f)
-          val raw =
-            if (m.comp == "blosc") Blosc.decompress(raw0, chunk * 8)
-            else if (m.comp == "zstd") zstdDecompressSelfSized(raw0)
-            else if (!m.zlib) raw0
-            else if (m.format == 3) gunzip(raw0, chunk * 8) else inflate(raw0, chunk * 8)
-          require(raw.length >= len * 8,
-            s"time chunk $f holds ${raw.length} bytes, need ${len * 8}")
-          val bb = ByteBuffer.wrap(raw)
-            .order(if (big) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
-          Array.fill(math.min(chunk, raw.length / 8))(bb.getLong)
-        }
+      val items = readRank1Chunk(arr, m, ci, m.timeFill, chunk * 8)(decodeLongs(_, len, m.dtype))
       (0 until len).iterator.map(k => (ci * chunk + k, items(k)))
     }.toDF("i", "v")
   }

@@ -25,8 +25,9 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   * are fill-padded, so all chunk objects have identical decoded length;
   * C-order within the chunk; missing chunk reads as fill; keys follow the
   * store's key encoding (v2 "2.0.1" / "2/0/1", v3 "c/2/0/1" / "c.2.0.1").
-  * Compressors: the shared codec set (null/zlib/blosc-lz4/zstd via
-  * [[Zarr.encodeChunk]]/[[Zarr.decodeChunk]]); numeric dtypes only.
+  * Compressors: the shared chunk frame (none/zlib/gzip/blosc-lz4/zstd),
+  * chosen only in [[Zarr.frame]]/[[Zarr.unframe]] and reached through
+  * [[Zarr.encodeChunk]]/[[Zarr.decodeChunk]]; numeric dtypes only.
   */
 object ZarrNd {
 

@@ -920,19 +920,27 @@ class ZMatrixSpec extends AnyFunSuite {
     assert(got(x.rowNormalize) ==
       ref(cells)((i, _, v) => if (rs(i) == 0.0) None else Some(r6(v / rs(i)))))
     // pearson: the column sums and the total count every cell, the null-i
-    // one too; a zero-sum row has μ = 0 and divides by zero, an ANSI error
-    val err = intercept[Exception](x.pearsonResiduals(5).cells.collect())
-    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
-      .exists(e => String.valueOf(e.getMessage).contains("DIVIDE_BY_ZERO")), err.toString)
+    // one too; a cell of a zero-sum row or column has μ = 0 and a null
+    // residual (as rowNormalize's), not an ANSI error and not a clipped value
+    def pearsonRef(cs0: Seq[Cell], n: Double) = {
+      val crs = rowSums(cs0)
+      val cs = cs0.groupMapReduce(_._2)(_._3)(_ + _)
+      val total = cs0.map(_._3).sum
+      val clip = math.sqrt(n)
+      ref(cs0) { (i, j, v) =>
+        val mu = crs(i) * cs(j) / total
+        if (mu == 0.0) None
+        else Some(r6(math.min(math.max((v - mu) / math.sqrt(mu + mu * mu / 100.0), -clip), clip)))
+      }
+    }
+    assert(got(x.pearsonResiduals(5)) == pearsonRef(cells, 5))
     val counts = cells.filterNot(_._1.contains(2L))
-    val crs = rowSums(counts)
-    val cs = counts.groupMapReduce(_._2)(_._3)(_ + _)
-    val total = counts.map(_._3).sum
-    val clip = math.sqrt(4.0)
-    assert(got(matrix(counts).pearsonResiduals(4)) == ref(counts) { (i, j, v) =>
-      val mu = crs(i) * cs(j) / total
-      Some(r6(math.min(math.max((v - mu) / math.sqrt(mu + mu * mu / 100.0), -clip), clip)))
-    })
+    assert(got(matrix(counts).pearsonResiduals(4)) == pearsonRef(counts, 4))
+    // column 0 sums to zero
+    val zeroCol: Seq[Cell] = Seq((Some(0L), 0L, 1.0), (Some(1L), 0L, -1.0),
+      (Some(0L), 1L, 2.0), (Some(1L), 1L, 3.0))
+    val zc = got(matrix(zeroCol).pearsonResiduals(2))
+    assert(zc == pearsonRef(zeroCol, 2) && zc.count(_._3.isEmpty) == 2, zc)
   }
 
   test("Linkage.average matches hand-computed UPGMA with scipy's id contract") {

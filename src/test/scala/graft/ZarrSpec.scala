@@ -1743,6 +1743,132 @@ class ZarrSpec extends AnyFunSuite {
     Zarr.write(m, pNone, 6, 4, 3, 2)
     assert(Zarr.readXarrayDims(pNone).isEmpty)
   }
+
+  // independent compressors for hand-built chunk files
+  private def deflateBytes(raw: Array[Byte]): Array[Byte] = {
+    val d = new java.util.zip.Deflater(1); d.setInput(raw); d.finish()
+    val out = new java.io.ByteArrayOutputStream()
+    val buf = new Array[Byte](8192)
+    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
+    d.end(); out.toByteArray
+  }
+  private def gzipBytes(raw: Array[Byte]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val gz = new java.util.zip.GZIPOutputStream(out); gz.write(raw); gz.close()
+    out.toByteArray
+  }
+  private def longBytes(vals: Seq[Long], order: java.nio.ByteOrder): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(vals.length * 8).order(order)
+    vals.foreach(bb.putLong); bb.array()
+  }
+
+  test("i8 chunks decode exactly beyond 2^53 under every codec, both byte orders") {
+    import java.nio.ByteOrder
+    import com.github.luben.zstd.Zstd
+    import graft.zarr.Blosc
+    val big = (1L << 53) + 1
+    assert(big.toDouble.toLong != big, "probe value must be double-unrepresentable")
+    val vals = Seq(big, -big, 0L, Long.MaxValue, Long.MinValue, 42L)
+    for (order <- Seq(ByteOrder.LITTLE_ENDIAN, ByteOrder.BIG_ENDIAN)) {
+      val dtype = if (order == ByteOrder.BIG_ENDIAN) ">i8" else "<i8"
+      val raw = longBytes(vals, order)
+      for ((codec, bytes, zlib, format, comp) <- Seq(
+          ("raw", raw, false, 2, ""), ("zlib v2", deflateBytes(raw), true, 2, ""),
+          ("gzip v3", gzipBytes(raw), true, 3, ""), ("blosc", Blosc.compress(raw, 8), false, 2, "blosc"),
+          ("zstd", Zstd.compress(raw, 1), false, 3, "zstd"))) {
+        val got = Zarr.decodeLongs(Zarr.unframe(bytes, zlib, format, comp, raw.length),
+          vals.length, dtype)
+        assert(got.toSeq == vals, s"$dtype $codec")
+      }
+    }
+    // through a store: a CSR group's i8 indices chunk holding minor
+    // indices past 2^53 reads back exactly
+    import spark.implicits._
+    val cells = ZMatrix(Seq((0L, 0L, 1.0), (0L, 1L, 2.0), (1L, 0L, 3.0)).toDF("i", "j", "v"))
+    val idx = Seq(big, 1L, big + 2, 0L)
+    for ((format, comp) <- Seq((2, ""), (2, "blosc"), (3, "zstd"))) {
+      val root = s"/root/repo/target/tmp/zarr_test_i8_idx_${format}_$comp"
+      Zarr.delete(root, recursive = true)
+      Zarr.writeSparse(cells, s"$root#X", 2, 2, chunk = 4, format = format, comp = comp)
+      val raw = longBytes(idx, ByteOrder.LITTLE_ENDIAN)
+      val framed =
+        if (comp == "blosc") Blosc.compress(raw, 8) else if (comp == "zstd") Zstd.compress(raw, 1) else raw
+      java.nio.file.Files.write(java.nio.file.Paths.get(Zarr.chunkPath(s"$root/X/indices", 0, 0,
+        Zarr.writeKeyEnc(format), rank1 = true)), framed)
+      val got = Zarr.readSparse(spark, root, "X").cells.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(got == Set((0L, big, 1.0), (0L, 1L, 2.0), (1L, big + 2, 3.0)), s"v$format $comp: $got")
+    }
+  }
+
+  test("damaged chunks fail loudly in every reader kind (numeric, string, time)") {
+    import java.nio.{ByteBuffer, ByteOrder}
+    import com.github.luben.zstd.Zstd
+    import graft.zarr.Blosc
+    import spark.implicits._
+    def loud(what: String)(body: => Any): Unit = {
+      scala.util.Try(body).foreach(v => fail(s"$what: damaged chunk decoded silently to $v"))
+    }
+    def truncated(b: Array[Byte]) = b.take(b.length / 2)
+    def grown(b: Array[Byte]) = b :+ 0.toByte
+    def withNBytes(frame: Array[Byte], n: Int) = {
+      val f = frame.clone()
+      ByteBuffer.wrap(f, 4, 4).order(ByteOrder.LITTLE_ENDIAN).putInt(n); f
+    }
+    // a zstd frame with no content size: the streaming writer never pledges one
+    def zstdUnsized(raw: Array[Byte]) = {
+      val out = new java.io.ByteArrayOutputStream()
+      val z = new com.github.luben.zstd.ZstdOutputStream(out); z.write(raw); z.close()
+      val f = out.toByteArray
+      assert(Zstd.getFrameContentSize(f) < 0, "fixture: frame must lack a content size"); f
+    }
+    val overCap = (256 << 20) + 8
+
+    // numeric: decodeChunk with the size the geometry gives (100 f8)
+    val vals = Array.tabulate(100)(i => i * 1.5)
+    val img = ByteBuffer.allocate(800).order(ByteOrder.LITTLE_ENDIAN)
+    vals.foreach(img.putDouble)
+    val raw = img.array()
+    loud("numeric truncated zlib")(Zarr.decodeChunk(truncated(deflateBytes(raw)), 100, zlib = true))
+    loud("numeric truncated gzip")(Zarr.decodeChunk(truncated(gzipBytes(raw)), 100, zlib = true, format = 3))
+    loud("numeric blosc nbytes")(Zarr.decodeChunk(Blosc.compress(raw, 8), 50, zlib = false, comp = "blosc"))
+    loud("numeric blosc cbytes")(Zarr.decodeChunk(grown(Blosc.compress(raw, 8)), 100, zlib = false, comp = "blosc"))
+    loud("numeric zstd short")(Zarr.decodeChunk(Zstd.compress(raw.take(400), 1), 100, zlib = false, comp = "zstd"))
+
+    // string and time vectors: a written store whose chunk 0 is replaced
+    def damage(path: String, format: Int, bytes: Array[Byte]): Unit =
+      java.nio.file.Files.write(java.nio.file.Paths.get(
+        Zarr.chunkPath(path, 0, 0, Zarr.writeKeyEnc(format), rank1 = true)), bytes)
+    val strs = Seq((0L, "alpha"), (1L, "beta"), (2L, "gamma"), (3L, "delta"))
+    val vlen = Zarr.vlenEncode(strs.map(_._2).toArray)
+    val times = Seq((0L, (1L << 53) + 1), (1L, 2L), (2L, 3L), (3L, 4L))
+    val tRaw = longBytes(times.map(_._2), ByteOrder.LITTLE_ENDIAN)
+    val cases: Seq[(String, Int, String, Boolean, Array[Byte], Array[Byte])] = Seq(
+      // (damage, format, comp, zlib, string chunk, time chunk)
+      ("truncated zlib", 2, "", true, truncated(deflateBytes(vlen)), truncated(deflateBytes(tRaw))),
+      ("truncated gzip", 3, "", true, truncated(gzipBytes(vlen)), truncated(gzipBytes(tRaw))),
+      ("blosc nbytes", 2, "blosc", false, withNBytes(Blosc.compress(vlen, 1), vlen.length + 64),
+        Blosc.compress(tRaw.take(16), 8)),
+      ("blosc cbytes", 3, "blosc", false, grown(Blosc.compress(vlen, 1)), grown(Blosc.compress(tRaw, 8))),
+      ("zstd short", 2, "zstd", false, truncated(Zstd.compress(vlen, 1)), Zstd.compress(tRaw.take(8), 1)),
+      ("zstd unsized", 3, "zstd", false, zstdUnsized(vlen), null),
+      ("blosc over the self-sized cap", 2, "blosc", false,
+        withNBytes(Blosc.compress(vlen, 1), overCap), null))
+    for ((what, format, comp, zlib, sChunk, tChunk) <- cases) {
+      val sp = s"/root/repo/target/tmp/zarr_test_damaged_str_${format}_${comp}_$zlib"
+      Zarr.writeStringVector(strs.toDF("i", "s"), sp, n = 4, chunk = 4, zlib = zlib,
+        format = format, comp = comp)
+      damage(sp, format, sChunk)
+      loud(s"string $what")(Zarr.readStringVector(spark, sp).collect())
+      if (tChunk != null) {
+        val tp = s"/root/repo/target/tmp/zarr_test_damaged_time_${format}_${comp}_$zlib"
+        Zarr.writeTimeVector(times.toDF("i", "v"), tp, n = 4, chunk = 4, format = format,
+          comp = comp, zlib = zlib)
+        damage(tp, format, tChunk)
+        loud(s"time $what")(Zarr.readTimeVector(spark, tp).collect())
+      }
+    }
+  }
 }
 
 object ZarrSpec {
