@@ -1787,7 +1787,7 @@ class ZarrSpec extends AnyFunSuite {
     val cells = ZMatrix(Seq((0L, 0L, 1.0), (0L, 1L, 2.0), (1L, 0L, 3.0)).toDF("i", "j", "v"))
     val idx = Seq(big, 1L, big + 2, 0L)
     for ((format, comp) <- Seq((2, ""), (2, "blosc"), (3, "zstd"))) {
-      val root = s"/root/repo/target/tmp/zarr_test_i8_idx_${format}_$comp"
+      val root = s"target/tmp/zarr_test_i8_idx_${format}_$comp"
       Zarr.delete(root, recursive = true)
       Zarr.writeSparse(cells, s"$root#X", 2, 2, chunk = 4, format = format, comp = comp)
       val raw = longBytes(idx, ByteOrder.LITTLE_ENDIAN)
@@ -1855,13 +1855,13 @@ class ZarrSpec extends AnyFunSuite {
       ("blosc over the self-sized cap", 2, "blosc", false,
         withNBytes(Blosc.compress(vlen, 1), overCap), null))
     for ((what, format, comp, zlib, sChunk, tChunk) <- cases) {
-      val sp = s"/root/repo/target/tmp/zarr_test_damaged_str_${format}_${comp}_$zlib"
+      val sp = s"target/tmp/zarr_test_damaged_str_${format}_${comp}_$zlib"
       Zarr.writeStringVector(strs.toDF("i", "s"), sp, n = 4, chunk = 4, zlib = zlib,
         format = format, comp = comp)
       damage(sp, format, sChunk)
       loud(s"string $what")(Zarr.readStringVector(spark, sp).collect())
       if (tChunk != null) {
-        val tp = s"/root/repo/target/tmp/zarr_test_damaged_time_${format}_${comp}_$zlib"
+        val tp = s"target/tmp/zarr_test_damaged_time_${format}_${comp}_$zlib"
         Zarr.writeTimeVector(times.toDF("i", "v"), tp, n = 4, chunk = 4, format = format,
           comp = comp, zlib = zlib)
         damage(tp, format, tChunk)
