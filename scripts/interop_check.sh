@@ -12,7 +12,10 @@
 #
 # Each family also prints `sha256 <store> <digest>`: one sha256 over every
 # file of the store (relative path + content), so checking that two builds
-# write byte-identical stores is a diff of two runs' outputs.
+# write byte-identical stores is a diff of two runs' outputs. The sparse
+# and anndata stores (zarrcsr_, zarrcsc_, anndata_: CSR/CSC groups, vlen
+# string, categorical and rank-1 arrays) get digest lines too, without a
+# third-engine read.
 #
 # Usage: interop_check.sh [sf_dir]     (default /root/testdata/sf0.01)
 set -e
@@ -35,6 +38,9 @@ echo "== zarrcube_${SFNAME} (rank-3)"
 python3 "$(dirname "$0")/zarrnd_pycheck.py" "$TMP/zarrcube_${SFNAME}" "$SF"
 digest "zarrcube_${SFNAME}"
 echo "interop: 4/4 store families read by the independent engine"
+for store in "zarrcsr_" "zarrcsc_" "anndata_"; do
+  digest "${store}${SFNAME}"
+done
 
 # Third-engine check of the two xxhash64 queries the DuckDB oracle cannot
 # express: pure-python XXH64 (public spec) re-derives both minhash-LSH

@@ -318,6 +318,12 @@ object SparkEntry {
     }
   }
 
+  /** `anndata_roundtrip` writes its four store components as concurrent
+    * jobs up to this many obs rows (8M, ~64 MB of indptr) and one after
+    * another beyond it. It bounds write-side task memory; the read has one
+    * plan at every size. */
+  private val AnndataConcurrentWriteMaxObs = 8L << 20
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- relational core ----
     "q1_pricing_summary" -> Relational.q1PricingSummary _,
@@ -877,7 +883,7 @@ object SparkEntry {
     // the SPARSE X shape real anndata stores persist (csr_matrix group:
     // data/indices/indptr + encoding attrs): the lineitem matrix written
     // as CSR — distributed prefix-sum indptr, major/minor-ordered flat
-    // arrays — and re-expanded to coordinates by the span-join reader
+    // arrays — and re-expanded to coordinates by the chunk-scan reader
     "zarr_csr_roundtrip" -> ((s, d) => {
       val m = mat(s, d)
       val dims = m.cells.agg(max(col("i")), max(col("j"))).head()
@@ -925,16 +931,15 @@ object SparkEntry {
       Zarr.delete(path, recursive = true)
       // the four store components are DISJOINT subtrees and their shared
       // inputs (m, orders) are already eagerly checkpointed — submit the
-      // four writes as concurrent jobs on broadcast-class stores (Spark's
-      // scheduler interleaves them over the one executor pool; each write
-      // alone underfills 32 slots, so overlap is near-free wall-clock).
-      // Past the same obs bound the READ side switches regimes on, the
-      // writes run sequentially instead: 4 concurrent fact-scale jobs
-      // multiply peak task memory ~4x and the sf10 gate's stats aggregate
-      // OOMs under the harness heap — concurrency is a small-store
-      // latency trick, not the at-scale plan. Group metadata is
-      // pre-created so the writers' ensure-step never races on the same
-      // root .zgroup file.
+      // four writes as concurrent jobs on small stores (Spark's scheduler
+      // interleaves them over the one executor pool; each write alone
+      // underfills 32 slots, so overlap is near-free wall-clock). Past
+      // AnndataConcurrentWriteMaxObs the writes run sequentially instead:
+      // 4 concurrent fact-scale jobs multiply peak task memory ~4x and the
+      // sf10 gate's stats aggregate OOMs under the harness heap —
+      // concurrency is a small-store latency trick, not the at-scale plan.
+      // Group metadata is pre-created so the writers' ensure-step never
+      // races on the same root .zgroup file.
       Zarr.ensureGroupMeta(path, Seq("obs", "index"), 2)
       Zarr.ensureGroupMeta(path, Seq("obsm", "X_stats"), 2)
       locally {
@@ -968,52 +973,29 @@ object SparkEntry {
             chunkRows = 4096, chunkCols = 2)
         }
         val writes = Seq(wX, wIdx, wPrio, wStats)
-        if (nObs + 1 <= Zarr.IndptrBroadcastMax) {
+        if (nObs + 1 <= AnndataConcurrentWriteMaxObs) {
           import scala.concurrent.{Await, Future}
           import scala.concurrent.ExecutionContext.Implicits.global
           import scala.concurrent.duration.Duration
           writes.map(w => Future(w())).foreach(Await.result(_, Duration.Inf))
         } else writes.foreach(_())
       }
-      // read EVERYTHING back from the store and compose — in ONE aligned
-      // pass when the obs axis is broadcast-class (indptr within the
-      // readSparse fast-path bound): each task reads its obs-range slice
-      // of ALL FOUR components (index strings, priority codes, X row
-      // sums via the CSR indptr walk, the obsm column) and emits the
-      // composed rows directly. Zero joins, zero shuffles, one job — vs
-      // the four scans + a groupBy + three joins this replaced (the r15
-      // structural >2x-floor finding). Row set is identical: qty is NULL
-      // exactly where the COO groupBy had no group, n_lines != 0 is the
-      // same dense-value predicate, and the qty sums stay exact (integer
-      // quantities, order-free under double addition).
-      if (nObs + 1 <= Zarr.IndptrBroadcastMax) {
-        Zarr.readObsAligned(s, path, Seq(
-            Zarr.ObsString("obs/index", "name"),
-            Zarr.ObsCategorical("obs/priority", "priority"),
-            Zarr.ObsSparseSum("X", "qty"),
-            Zarr.ObsDense("obsm/X_stats", 1, "n_lines")))
-          .filter(col("qty").isNotNull && col("n_lines") =!= 0.0)
-          .select(col("i"), col("name"), col("priority"), col("qty"), col("n_lines"))
-      } else {
-        // obs axis past the indptr broadcast bound: the fully
-        // distributed per-component plan. These zarr reads descend from
-        // range().flatMap leaves whose Catalyst size estimate is near
-        // zero, so the unhinted planner would BROADCAST a corpus-sized
-        // side (OOM at the sf10 gate: ~15M obs rows ≈ 0.5 GB build) —
-        // pin every join to merge at this scale.
-        val rowSum = Zarr.readSparse(s, path, "X").cells
-          .groupBy(col("i")).agg(sum(col("v")).as("qty"))
-        val idx = Zarr.readStringVector(s, path, "obs/index")
-          .select(col("i"), col("s").as("name"))
-        val prio = Zarr.readCategorical(s, path, "obs/priority")
-          .select(col("i"), col("label").as("priority"))
-        val nLines = Zarr.read(s, path, "obsm/X_stats").cells
-          .filter(col("j") === 1 && col("v") =!= 0.0)
-          .select(col("i"), col("v").as("n_lines"))
-        idx.join(prio.hint("merge"), "i").join(rowSum.hint("merge"), "i")
-          .join(nLines.hint("merge"), "i")
-          .select(col("i"), col("name"), col("priority"), col("qty"), col("n_lines"))
-      }
+      // read EVERYTHING back from the store and compose in ONE aligned
+      // pass: each task reads its obs-range slice of ALL FOUR components
+      // (index strings, priority codes, X row sums via its indptr slice,
+      // the obsm column) and emits the composed rows directly: zero joins,
+      // zero shuffles, one job. The row set matches the oracle's join of
+      // the four components: qty is NULL exactly where a COO groupBy has
+      // no group, n_lines != 0 is the same dense-value predicate, and the
+      // qty sums stay exact (integer quantities, order-free under double
+      // addition).
+      Zarr.readObsAligned(s, path, Seq(
+          Zarr.ObsString("obs/index", "name"),
+          Zarr.ObsCategorical("obs/priority", "priority"),
+          Zarr.ObsSparseSum("X", "qty"),
+          Zarr.ObsDense("obsm/X_stats", 1, "n_lines")))
+        .filter(col("qty").isNotNull && col("n_lines") =!= 0.0)
+        .select(col("i"), col("name"), col("priority"), col("qty"), col("n_lines"))
     }),
     // rank-1 store roundtrip (anndata obs-column shape): per-order quantity
     // totals written as a TRUE 1-D Zarr array (1-element shape/chunks,

@@ -902,20 +902,28 @@ object Zarr {
             fill: Double = 0.0, dtype: String = "<f8", format: Int = 2,
             innerRows: Int = 0, innerCols: Int = 0, fOrder: Boolean = false,
             comp: String = "", keyEnc: String = ""): Unit =
-    m.cells.select(
+    save(m.cells.select(
         (col("i") / chunkRows).cast("long").as("ci"),
         (col("j") / chunkCols).cast("long").as("cj"),
         col("i").cast("long").as("i"), col("j").cast("long").as("j"),
-        col("v").cast("double").as("v"))
-      .write.format("zarr")
-      .option("chunkRows", chunkRows.toString).option("chunkCols", chunkCols.toString)
-      .option("rows", rows.toString).option("cols", cols.toString)
-      .option("dtype", dtype).option("zlib", zlib.toString).option("fill", fill.toString)
-      .option("zarrFormat", format.toString)
-      .option("innerRows", innerRows.toString).option("innerCols", innerCols.toString)
-      .option("fOrder", fOrder.toString).option("comp", comp)
-      .option("keyEnc", keyEnc)
-      .mode("overwrite").save(path)
+        col("v").cast("double").as("v")),
+      path, Meta(rows, cols, chunkRows, chunkCols, zlib, fill, dtype, format,
+        innerRows, innerCols, fOrder, keyEnc, comp = comp), "overwrite")
+
+  /** The one call into the DSv2 sink: `cells` (ci, cj, i, j, v) written
+    * to `path` with every write option taken from `m` — geometry, dtype,
+    * codec, fill, sharding, order, rank and chunk-key layout ("" = the
+    * format default) — under save mode `mode`. */
+  private def save(cells: DataFrame, path: String, m: Meta, mode: String): Unit =
+    cells.write.format("zarr")
+      .option("chunkRows", m.chunkRows.toString).option("chunkCols", m.chunkCols.toString)
+      .option("rows", m.rows.toString).option("cols", m.cols.toString)
+      .option("dtype", m.dtype).option("zlib", m.zlib.toString).option("fill", m.fill.toString)
+      .option("zarrFormat", m.format.toString)
+      .option("innerRows", m.innerRows.toString).option("innerCols", m.innerCols.toString)
+      .option("fOrder", m.fOrder.toString).option("rank1", m.rank1.toString)
+      .option("comp", m.comp).option("keyEnc", m.keyEnc)
+      .mode(mode).save(path)
 
   /** zarr-python region assignment (`z[rowStart:rowStart+bandRows, :] = x`)
     * for a CHUNK-ALIGNED full-width row band: the band's replacement
@@ -975,23 +983,12 @@ object Zarr {
           s"i in [${r.getLong(2)}, ${r.getLong(3)}], " +
           s"j in [${r.getLong(4)}, ${r.getLong(5)}]")
     }
-    m.cells.select(
+    save(m.cells.select(
         ((col("i") + rowStart) / meta.chunkRows).cast("long").as("ci"),
         (col("j") / meta.chunkCols).cast("long").as("cj"),
         (col("i") + rowStart).cast("long").as("i"),
-        col("j").cast("long").as("j"), col("v").cast("double").as("v"))
-      .write.format("zarr")
-      .option("chunkRows", meta.chunkRows.toString)
-      .option("chunkCols", meta.chunkCols.toString)
-      .option("rows", meta.rows.toString).option("cols", meta.cols.toString)
-      .option("dtype", meta.dtype).option("zlib", meta.zlib.toString)
-      .option("fill", meta.fill.toString)
-      .option("zarrFormat", meta.format.toString)
-      .option("innerRows", meta.innerRows.toString)
-      .option("innerCols", meta.innerCols.toString)
-      .option("fOrder", meta.fOrder.toString).option("comp", meta.comp)
-      .option("keyEnc", meta.keyEnc)
-      .mode("append").save(path)
+        col("j").cast("long").as("j"), col("v").cast("double").as("v")),
+      path, meta, "append")
     // Stale sweep: any chunk in the band rectangle the slab left all-fill
     // got no replacement file, but the assignment says its rows are now
     // fill - delete the old chunk so reads see fill (missing-chunk
@@ -1043,23 +1040,12 @@ object Zarr {
         .select((col("i") - lit(bandStart)).as("i"), col("j"), col("v"))
         .unionByName(shifted)
     growShape(path, newTotal)
-    band.select(
+    save(band.select(
         ((col("i") + bandStart) / meta.chunkRows).cast("long").as("ci"),
         (col("j") / meta.chunkCols).cast("long").as("cj"),
         (col("i") + bandStart).cast("long").as("i"),
-        col("j").cast("long").as("j"), col("v").cast("double").as("v"))
-      .write.format("zarr")
-      .option("chunkRows", meta.chunkRows.toString)
-      .option("chunkCols", meta.chunkCols.toString)
-      .option("rows", newTotal.toString).option("cols", meta.cols.toString)
-      .option("dtype", meta.dtype).option("zlib", meta.zlib.toString)
-      .option("fill", meta.fill.toString)
-      .option("zarrFormat", meta.format.toString)
-      .option("innerRows", meta.innerRows.toString)
-      .option("innerCols", meta.innerCols.toString)
-      .option("fOrder", meta.fOrder.toString).option("comp", meta.comp)
-      .option("keyEnc", meta.keyEnc)
-      .mode("append").save(path)
+        col("j").cast("long").as("j"), col("v").cast("double").as("v")),
+      path, meta.copy(shape = List(newTotal, meta.cols)), "append")
   }
 
   /** Z33: the rank-1 face of [[appendRows]] — `append` on an anndata
@@ -1084,22 +1070,14 @@ object Zarr {
         .select((col("i") - lit(bandStart)).as("i"), col("v"))
         .unionByName(shifted)
     growShape(path, newTotal)
-    band.select(
+    // the store's own metadata carries its chunk-key layout: a store with
+    // a non-default one (e.g. a migrated-in-place v2-keyed v3 tree) must
+    // append under ITS encoding, not the writer's default
+    save(band.select(
         ((col("i") + bandStart) / meta.chunkRows).cast("long").as("ci"),
         lit(0L).as("cj"), (col("i") + bandStart).cast("long").as("i"),
-        lit(0L).as("j"), col("v").cast("double").as("v"))
-      .write.format("zarr")
-      .option("chunkRows", meta.chunkRows.toString).option("chunkCols", "1")
-      .option("rows", newTotal.toString).option("cols", "1")
-      .option("dtype", meta.dtype).option("zlib", meta.zlib.toString)
-      .option("fill", meta.fill.toString)
-      .option("zarrFormat", meta.format.toString)
-      .option("rank1", "true").option("comp", meta.comp)
-      // mirror appendRows: a store carrying a non-default chunk-key
-      // layout (e.g. a migrated-in-place v2-keyed v3 tree) must append
-      // under ITS encoding, not the writer's default
-      .option("keyEnc", meta.keyEnc)
-      .mode("append").save(path)
+        lit(0L).as("j"), col("v").cast("double").as("v")),
+      path, meta.copy(shape = List(newTotal)), "append")
   }
 
   /** Z34: zarr-python `resize` DOWN along axis 0 — the shrink face of
@@ -1285,11 +1263,6 @@ object Zarr {
     else (0 until node.size()).map(node.get(_).asText())
   }
 
-  /** Write a 1-D array (anndata obs/var column, zappy 1-D ndarray) from a
-    * long-form (i, v) frame. Stored as a true rank-1 Zarr array — 1-element
-    * shape/chunks, single-component chunk keys — which zarr-python reads as
-    * an ordinary 1-D dataset. Group addressing (`root#obs/ids`) works as
-    * for matrices. */
   /** A side of roughly this many rows (~120 MB at 30 B/row) is the
     * largest build a broadcast-hash join should ever attempt; above it,
     * estimate-less frames (range().flatMap lineage) must be pinned to
@@ -1401,21 +1374,21 @@ object Zarr {
         decodeLongs(_, m.chunkRows, m.dtype))
     else readValueChunk(arr, m, ci).map(_.toLong)
 
+  /** Write a 1-D array (anndata obs/var column, zappy 1-D ndarray) from a
+    * long-form (i, v) frame. Stored as a true rank-1 Zarr array — 1-element
+    * shape/chunks, single-component chunk keys — which zarr-python reads as
+    * an ordinary 1-D dataset. Group addressing (`root#obs/ids`) works as
+    * for matrices. */
   def writeVector(vec: DataFrame, path: String, n: Long, chunk: Int,
                   zlib: Boolean = false, fill: Double = 0.0,
                   dtype: String = "<f8", format: Int = 2,
                   comp: String = ""): Unit =
-    vec.select(
+    save(vec.select(
         (col("i") / chunk).cast("long").as("ci"), lit(0L).as("cj"),
         col("i").cast("long").as("i"), lit(0L).as("j"),
-        col("v").cast("double").as("v"))
-      .write.format("zarr")
-      .option("chunkRows", chunk.toString).option("chunkCols", "1")
-      .option("rows", n.toString).option("cols", "1")
-      .option("dtype", dtype).option("zlib", zlib.toString).option("fill", fill.toString)
-      .option("zarrFormat", format.toString).option("rank1", "true")
-      .option("comp", comp)
-      .mode("overwrite").save(path)
+        col("v").cast("double").as("v")),
+      path, Meta(n, 1, chunk, 1, zlib, fill, dtype, format, keyEnc = "", rank1 = true,
+        comp = comp), "overwrite")
 
   /** Read a 1-D array back as (i, v) — errors on a 2-D store (a silent
     * j-drop would alias columns). */
@@ -1478,9 +1451,7 @@ object Zarr {
                                 labels: IndexedSeq[String], out: String) extends ObsPlan
   private final case class PDense(arr: String, m: Meta, j: Long,
                                   out: String) extends ObsPlan
-  private final case class PSparse(datArr: String, dm: Meta,
-                                   bptr: org.apache.spark.broadcast.Broadcast[Array[Long]],
-                                   out: String) extends ObsPlan
+  private final case class PSparse(g: SparseParts, out: String) extends ObsPlan
 
   /** ONE-PASS aligned read of several obs-axis components of a group
     * store into a composed per-row table — the anndata "obs table" shape
@@ -1494,12 +1465,12 @@ object Zarr {
     * plan, whose near-zero size estimates also force conditional join
     * hints (range().flatMap leaves carry no stats).
     *
-    * CSR row sums ride the broadcast-indptr walk of [[readSparse]]'s fast
-    * path, so this reader requires indptr ≤ [[IndptrBroadcastMax]]
-    * entries; callers with a larger obs axis keep the per-component
-    * join plan (the same fast/fallback split readSparse itself makes).
-    * Boundary data chunks shared by adjacent obs ranges are read by both
-    * tasks — at most one extra chunk per partition edge. */
+    * CSR row sums read the contiguous indptr slice `[lo, hi]` of the
+    * task's obs range off the store, then the data chunks it spans, as
+    * [[readSparse]] does: nothing is broadcast, so the obs axis has no
+    * size bound. Boundary data and indptr chunks shared by adjacent obs
+    * ranges are read by both tasks — at most one extra chunk of each per
+    * partition edge. */
   def readObsAligned(spark: SparkSession, root: String, cols: Seq[ObsCol]): DataFrame = {
     import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
     require(cols.nonEmpty, "readObsAligned needs at least one component")
@@ -1531,22 +1502,13 @@ object Zarr {
         val enc = readAttrs(r0, rel).path("encoding-type").asText("")
         require(enc == "csr_matrix",
           s"$node: obs-aligned row sums need a csr_matrix group, got '$enc'")
-        val datArr = resolveArray(s"$node/data")
-        val dm = readMeta(datArr)
-        require(dm.rank1, s"$node/data must be rank-1")
-        val indptr = readIndptrDriver(node)
-        require(indptr.length.toLong <= IndptrBroadcastMax,
-          s"$node indptr (${indptr.length}) exceeds the broadcast bound — " +
-            "use the per-component join plan at this scale")
-        require(indptr.last == dm.rows,
-          s"$node indptr covers ${indptr.last} entries but data holds ${dm.rows}")
-        PSparse(datArr, dm, spark.sparkContext.broadcast(indptr), out)
+        PSparse(sparseParts(node), out)
     }
     val nObsList: Seq[Long] = plans.map {
       case p: PString => p.m.rows
       case p: PCat    => p.m.rows
       case p: PDense  => p.m.rows
-      case p: PSparse => p.bptr.value.length - 1L
+      case p: PSparse => p.g.majorDim
     }
     val nObs = nObsList.head
     require(nObsList.forall(_ == nObs),
@@ -1643,22 +1605,22 @@ object Zarr {
           a
         case psp: PSparse =>
           val a = new Array[Any](len)
-          val ptr = psp.bptr.value
-          val dm = psp.dm
+          val g = psp.g
+          val ptr = new IndexCursor(g.ptr, g.pm)
           var loaded = -1L
           var buf: Array[Double] = null
           def dataAt(k: Long): Double = {
-            val c = k / dm.chunkRows
+            val c = k / g.dm.chunkRows
             if (c != loaded) {
-              buf = readValueChunk(psp.datArr, dm, c)
+              buf = readValueChunk(g.dat, g.dm, c)
               loaded = c
             }
-            buf((k % dm.chunkRows).toInt)
+            buf((k % g.dm.chunkRows).toInt)
           }
           var r = lo
+          var s0 = ptr(lo)
           while (r < hi) {
-            val s0 = ptr(r.toInt)
-            val s1 = ptr((r + 1).toInt)
+            val s1 = ptr(r + 1)
             if (s0 == s1) a((r - lo).toInt) = null
             else {
               var sum = 0.0
@@ -1666,6 +1628,7 @@ object Zarr {
               while (k < s1) { sum += dataAt(k); k += 1 }
               a((r - lo).toInt) = sum
             }
+            s0 = s1
             r += 1
           }
           a
@@ -1686,28 +1649,18 @@ object Zarr {
   // expanding CSR is exactly COO conversion, and only STORED entries ever
   // materialize — sparse stays sparse end to end.
 
-  /** Flat-position threshold under which `indptr` (majorDim+1 longs)
-    * ships as a broadcast instead of joining: 8M entries = 64 MB, the
-    * same class of executor traffic as a broadcast join side. AnnData
-    * obs/var counts sit far below it. */
-  private[graft] val IndptrBroadcastMax = 8L << 20
-
   /** Read an anndata-style sparse matrix group into coordinate form.
     * Only STORED entries ever materialize — a 1%-dense 100 TB matrix
-    * costs nnz rows, not rows×cols. Two plans:
-    *
-    * FAST PATH (the common store: `data` and `indices` chunked alike,
-    * indptr ≤ [[IndptrBroadcastMax]]): ONE zero-shuffle scan. Each task
-    * decodes its aligned data+indices chunks and assigns majors by
-    * WALKING a broadcast indptr (binary-search the chunk's first flat
-    * position, then advance — O(1) amortized per entry). No joins, no
-    * exchanges; the coordinate stream feeds downstream group-bys at scan
-    * parallelism.
-    *
-    * FALLBACK (mismatched chunking or an indptr too large to broadcast):
-    * fully distributed joins — indptr expands into per-line spans by
-    * joining consecutive entries, spans explode into flat positions, and
-    * positions join `indices` and `data` by position. */
+    * costs nnz rows, not rows×cols. One plan for every layout: a
+    * zero-shuffle scan with one task per `data` chunk. Each task decodes
+    * its data chunk and reads the `indices` chunks covering the same flat
+    * range, whatever their chunking, as exact longs. It finds the major
+    * of its first entry by binary search over indptr chunks read from the
+    * store (log₂ of the indptr chunk count in reads, one when indptr is a
+    * single chunk), then walks forward — O(1) amortized per entry —
+    * reading the next indptr chunk when the walk crosses into it. No
+    * joins, no exchanges, nothing broadcast: the driver reads only the
+    * first and last indptr chunks (the [[sparseParts]] checks). */
   def readSparse(spark: SparkSession, path: String, key: String = ""): ZMatrix = {
     val (root, frag) = splitKey(path)
     val rel = Some(key).filter(_.nonEmpty).orElse(frag)
@@ -1722,73 +1675,89 @@ object Zarr {
     require(shape.isArray && shape.size() == 2,
       s"$node lacks the 2-element 'shape' attribute of a sparse group")
     val csr = enc == "csr_matrix"
-    val datArr = resolveArray(s"$node/data")
-    val idxArr = resolveArray(s"$node/indices")
-    val datMeta = readMeta(datArr)
-    val idxMeta = readMeta(idxArr)
-    val ptrMeta = readMeta(resolveArray(s"$node/indptr"))
-    require(datMeta.rank1 && idxMeta.rank1 && ptrMeta.rank1,
-      s"$node sparse components must be rank-1 arrays")
-    if (datMeta.chunkRows == idxMeta.chunkRows && datMeta.rows == idxMeta.rows &&
-        ptrMeta.rows <= IndptrBroadcastMax)
-      readSparseAligned(spark, node, csr, datArr, idxArr, datMeta, idxMeta)
-    else readSparseJoin(spark, node, csr, ptrMeta.rows - 1)
-  }
-
-  /** Fast path: aligned chunk scan + broadcast indptr walk (see
-    * [[readSparse]]). */
-  /** Driver-side indptr read: majorDim+1 longs, chunk loop off the store.
-    * Callers guard the size against [[IndptrBroadcastMax]]. */
-  private def readIndptrDriver(node: String): Array[Long] = {
-    val ptrArr = resolveArray(s"$node/indptr")
-    val pm = readMeta(ptrArr)
-    val indptr = new Array[Long](pm.rows.toInt)
-    for (ci <- 0L until pm.nChunks) {
-      val at = (ci * pm.chunkRows).toInt
-      System.arraycopy(readIndexChunk(ptrArr, pm, ci), 0, indptr, at,
-        math.min(pm.chunkRows, indptr.length - at))
-    }
-    require(indptr.length >= 1 && indptr.head == 0L,
-      s"$node indptr must start at 0, got ${indptr.headOption}")
-    indptr
-  }
-
-  private def readSparseAligned(spark: SparkSession, node: String, csr: Boolean,
-                                datArr: String, idxArr: String,
-                                datMeta: Meta, idxMeta: Meta): ZMatrix = {
-    val indptr = readIndptrDriver(node)
-    val nnz = indptr.last
-    require(nnz == datMeta.rows,
-      s"$node indptr covers $nnz entries but data holds ${datMeta.rows}")
-    val bptr = spark.sparkContext.broadcast(indptr)
-    val chunk = datMeta.chunkRows
-    val nChunks = (datMeta.rows + chunk - 1) / chunk
+    val g = sparseParts(node)
+    val chunk = g.dm.chunkRows
     import spark.implicits._
-    val cells = spark.range(nChunks).as[Long].flatMap { c =>
+    val cells = spark.range(g.dm.nChunks).as[Long].flatMap { c =>
       val base = c * chunk
-      val len = math.min(chunk.toLong, nnz - base).toInt
-      val dat = readValueChunk(datArr, datMeta, c)
-      val idx = readIndexChunk(idxArr, idxMeta, c)
-      val ptr = bptr.value
-      // binary-search the first major whose span contains `base`, then
-      // walk — indptr is monotone, so the walk is O(1) amortized
-      var major = {
-        var lo = 0; var hi = ptr.length - 2
-        while (lo < hi) {
-          val mid = (lo + hi + 1) >>> 1
-          if (ptr(mid) <= base) lo = mid else hi = mid - 1
-        }
-        lo
-      }
+      val len = math.min(chunk.toLong, g.dm.rows - base).toInt
+      val dat = readValueChunk(g.dat, g.dm, c)
+      val idx = new IndexCursor(g.idx, g.im)
+      val ptr = new IndexCursor(g.ptr, g.pm)
+      var major = ptr.lastAtMost(base)
       (0 until len).iterator.map { e =>
         val k = base + e
         while (ptr(major + 1) <= k) major += 1
-        (major.toLong, idx(e), dat(e))
+        (major, idx(k), dat(e))
       }
     }.toDF("major", "minor", "v")
     ZMatrix(
       if (csr) cells.select(col("major").as("i"), col("minor").as("j"), col("v"))
       else cells.select(col("minor").as("i"), col("major").as("j"), col("v")))
+  }
+
+  /** A sparse group's three rank-1 components: array dir and metadata of
+    * `data`, `indices` and `indptr`. */
+  private final case class SparseParts(dat: String, dm: Meta, idx: String, im: Meta,
+                                       ptr: String, pm: Meta) {
+    def majorDim: Long = pm.rows - 1
+  }
+
+  /** Resolve the components of the sparse group at `node` and check its
+    * lengths from the first and last indptr chunks alone: indptr starts
+    * at 0 and ends at the stored-entry count, which `data` and `indices`
+    * both hold. A malformed group fails here, before any task runs. */
+  private def sparseParts(node: String): SparseParts = {
+    def part(name: String): (String, Meta) = {
+      val arr = resolveArray(s"$node/$name")
+      (arr, readMeta(arr))
+    }
+    val (dat, dm) = part("data")
+    val (idx, im) = part("indices")
+    val (ptr, pm) = part("indptr")
+    require(dm.rank1 && im.rank1 && pm.rank1,
+      s"$node sparse components must be rank-1 arrays")
+    require(im.rows == dm.rows,
+      s"$node indices holds ${im.rows} entries but data holds ${dm.rows}")
+    require(pm.rows >= 1, s"$node indptr is empty")
+    val p = new IndexCursor(ptr, pm)
+    require(p(0) == 0L, s"$node indptr must start at 0, got ${p(0)}")
+    val nnz = p(pm.rows - 1)
+    require(nnz == dm.rows, s"$node indptr covers $nnz entries but data holds ${dm.rows}")
+    SparseParts(dat, dm, idx, im, ptr, pm)
+  }
+
+  /** Element access to an integer rank-1 array `arr` (`m` its metadata)
+    * as exact longs, through a one-chunk cache: a forward walk reads each
+    * chunk once. Built where it is used (task-local state). */
+  private final class IndexCursor(arr: String, m: Meta) {
+    private var loaded = -1L
+    private var buf: Array[Long] = _
+
+    def apply(k: Long): Long = {
+      val c = k / m.chunkRows
+      if (c != loaded) { buf = readIndexChunk(arr, m, c); loaded = c }
+      buf((k - c * m.chunkRows).toInt)
+    }
+
+    /** The last position whose value is <= `v`, in a non-decreasing array
+      * whose first value is <= `v`: binary search over the chunks' first
+      * values (one chunk read per probe), then inside the chunk found. */
+    def lastAtMost(v: Long): Long = {
+      var lo = 0L
+      var hi = m.nChunks - 1
+      while (lo < hi) {
+        val mid = (lo + hi + 1) >>> 1
+        if (apply(mid * m.chunkRows) <= v) lo = mid else hi = mid - 1
+      }
+      lo *= m.chunkRows
+      hi = math.min(m.rows, lo + m.chunkRows) - 1
+      while (lo < hi) {
+        val mid = (lo + hi + 1) >>> 1
+        if (apply(mid) <= v) lo = mid else hi = mid - 1
+      }
+      lo
+    }
   }
 
   /** Write TWO position-aligned rank-1 arrays from one (i, v1, v2) frame
@@ -1807,37 +1776,6 @@ object Zarr {
       Seq(encodeChunk(buf.map(_._1), dtypeA, zlib = false, format, comp),
         encodeChunk(buf.map(_._2), dtypeB, zlib = false, format, comp))
     }
-  }
-
-  /** Fallback: the fully distributed join plan (see [[readSparse]]). */
-  private def readSparseJoin(spark: SparkSession, node: String, csr: Boolean,
-                             majorDim: Long): ZMatrix = {
-    // every frame here is DATA-PROPORTIONAL but descends from a
-    // range().flatMap leaf whose Catalyst size estimate is near zero —
-    // unhinted, the planner picks broadcast-hash for these joins and the
-    // build side OOMs a task at scale (observed at the sf10 gate: a 15M-
-    // entry indptr side). Above the broadcast-safe size the merge hints
-    // pin sort-merge, the only plan that survives arbitrary majorDim;
-    // below it the planner's broadcast choice is both safe and faster,
-    // so the hint stays off (majorDim is a driver-known scalar — the
-    // decision costs nothing).
-    val mh = mergeHintIfBig(majorDim) _
-    val ptr = readVector(spark, node, "indptr")
-      .select(col("i").as("p"), col("v").cast("long").as("off"))
-    val spans = mh(ptr.as("a"))
-      .join(mh(ptr.as("b")), col("b.p") === col("a.p") + 1)
-      .select(col("a.p").as("major"), col("a.off").as("start"), col("b.off").as("end"))
-      .filter(col("end") > col("start"))
-    val positions = spans.select(col("major"),
-      explode(sequence(col("start"), col("end") - 1)).as("k"))
-    val idx = readVector(spark, node, "indices")
-      .select(col("i").as("k"), col("v").cast("long").as("minor"))
-    val dat = readVector(spark, node, "data")
-      .select(col("i").as("k"), col("v"))
-    val joined = positions.join(mh(idx), "k").join(mh(dat), "k")
-    ZMatrix(
-      if (csr) joined.select(col("major").as("i"), col("minor").as("j"), col("v"))
-      else joined.select(col("minor").as("i"), col("major").as("j"), col("v")))
   }
 
   /** Write coordinate-form cells as an anndata sparse group (the layout
@@ -1864,7 +1802,7 @@ object Zarr {
     // conditional merge hints on the majorDim-sized joins: the range
     // leaf and the checkpointed offsets frame both carry near-zero size
     // estimates, so above the broadcast-safe size the unhinted planner
-    // can elect a corpus-sized broadcast build (the readSparseJoin OOM
+    // can elect a corpus-sized broadcast build (the sf10-gate OOM
     // class); below it broadcast stays allowed (it's faster there)
     val mh = mergeHintIfBig(majorDim) _
     val dense = spark.range(majorDim).toDF("major")

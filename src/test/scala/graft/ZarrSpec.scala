@@ -1508,31 +1508,94 @@ class ZarrSpec extends AnyFunSuite {
     assert(err.getMessage.nonEmpty)
   }
 
-  test("sparse fast path plans ZERO shuffles; mismatched chunking falls back to joins") {
+  test("sparse reads plan ZERO shuffles and no join, mismatched indices chunking included") {
     import spark.implicits._
     val coo = Seq((0L, 1L, 2.0), (1L, 0L, 1.0), (3L, 2L, 4.5))
     val m = ZMatrix(coo.toDF("i", "j", "v"))
     val path = "/root/repo/target/tmp/zarr_test_sparse_fastpath"
     Zarr.delete(path, recursive = true)
     Zarr.writeSparse(m, s"$path#X", rows = 4, cols = 3, chunk = 2)
-    // aligned chunks + small indptr → the one-scan plan: no Exchange at all
-    val fast = Zarr.readSparse(spark, path, "X")
-    val plan = fast.cells.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"sparse fast path shuffled:\n$plan")
-    assert(fast.cells.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSet == coo.toSet)
-    // re-chunk `indices` only (chunk 3 vs data's 2): reader must take the
-    // join fallback and still produce the same cells
+    def assertOneScan(what: String): Unit = {
+      val back = Zarr.readSparse(spark, path, "X")
+      val plan = back.cells.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange") && !plan.contains("Join"),
+        s"$what: sparse read shuffled or joined:\n$plan")
+      assert(back.cells.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .toSet == coo.toSet, what)
+    }
+    assertOneScan("aligned chunks")
+    // re-chunk `indices` only (chunk 3 vs data's 2): the same chunk scan,
+    // each data chunk reading the indices chunks that cover its range
     val idx = Zarr.readVector(spark, s"$path/X", "indices")
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     Zarr.writeVector(idx.toDF("i", "v"), s"$path#X/indices",
       n = 3, chunk = 3, dtype = "<i8")
-    val fb = Zarr.readSparse(spark, path, "X")
-    val fbPlan = fb.cells.queryExecution.executedPlan.toString
-    assert(fbPlan.contains("Exchange") || fbPlan.contains("Join"),
-      s"expected the join fallback:\n$fbPlan")
-    assert(fb.cells.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSet == coo.toSet)
+    assertOneScan("indices chunk 3, data chunk 2")
+  }
+
+  test("sparse chunk scan: multi-chunk indptr, unlike chunkings, empty lines on chunk edges") {
+    import spark.implicits._
+    // per-major entry counts 0,2,1,0,0,3,0,2,1,0 → indptr
+    // [0,0,2,3,3,3,6,6,8,9,9]. With indptr chunk 2, data chunk 3 and
+    // indices chunk 2: the empty majors 2-3 sit on data edge 3 and span
+    // indptr chunk edge 4, major 5 ends on data edge 6 and the empty
+    // major 6 starts at indptr chunk 3 there, major 8 ends on data edge 9,
+    // the leading and trailing majors are empty, and indptr, data and
+    // indices all end in partial chunks
+    val coo = Seq((1L, 0L, 1.0), (1L, 3L, 2.0), (2L, 2L, 3.0), (5L, 0L, 4.0),
+      (5L, 1L, 5.0), (5L, 3L, 6.0), (7L, 1L, 7.0), (7L, 2L, 8.0), (8L, 3L, 9.0))
+    val (nMajor, nMinor) = (10L, 4L)
+    for (csc <- Seq(false, true); (format, comp) <- Seq((2, ""), (3, "blosc"))) {
+      val what = s"${if (csc) "csc" else "csr"} v$format $comp"
+      val cells = if (csc) coo.map { case (i, j, v) => (j, i, v) } else coo
+      val (rows, cols) = if (csc) (nMinor, nMajor) else (nMajor, nMinor)
+      val path = s"target/tmp/zarr_test_sparse_edges_${if (csc) "csc" else "csr"}_v$format$comp"
+      Zarr.delete(path, recursive = true)
+      Zarr.writeSparse(ZMatrix(cells.toDF("i", "j", "v")), s"$path#X", rows, cols,
+        chunk = 2, csc = csc, format = format, comp = comp)
+      val dat = Zarr.readVector(spark, s"$path/X", "data")
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      Zarr.writeVector(dat.toDF("i", "v"), s"$path#X/data", n = coo.size, chunk = 3,
+        format = format, comp = comp)
+      assert(Zarr.readMeta(s"$path/X/data").chunkRows == 3 &&
+        Zarr.readMeta(s"$path/X/indices").chunkRows == 2 &&
+        Zarr.readMeta(s"$path/X/indptr").nChunks == 6, what)
+      val back = Zarr.readSparse(spark, path, "X").cells
+      val plan = back.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange") && !plan.contains("Join"), s"$what:\n$plan")
+      val got = back.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      assert(got.length == cells.size && got.toSet == cells.toSet, s"$what: ${got.toSeq}")
+      if (!csc) {
+        // obs-aligned row sums over the same store: a string column of
+        // chunk 4 sets the obs grain, so each task's indptr slice [lo, hi]
+        // crosses indptr chunk edges
+        Zarr.writeStringVector((0L until nMajor).map(i => (i, s"r$i")).toDF("i", "s"),
+          s"$path#obs/index", nMajor, chunk = 4, format = format)
+        val fused = Zarr.readObsAligned(spark, path, Seq(
+          Zarr.ObsString("obs/index", "name"), Zarr.ObsSparseSum("X", "q")))
+        assert(!fused.queryExecution.executedPlan.toString.contains("Exchange"), what)
+        val sums = fused.collect().map(r =>
+          (r.getLong(0), r.getString(1), if (r.isNullAt(2)) None else Some(r.getDouble(2))))
+          .sortBy(_._1).toSeq
+        val want = (0L until nMajor).map { i =>
+          val vs = coo.filter(_._1 == i).map(_._3)
+          (i, s"r$i", if (vs.isEmpty) None else Some(vs.sum))
+        }
+        assert(sums == want, s"$what row sums: $sums")
+      }
+    }
+    // a group whose indices length differs from data's is refused, in
+    // both readers
+    val path = "target/tmp/zarr_test_sparse_edges_csr_v2"
+    val idx = Zarr.readVector(spark, s"$path/X", "indices")
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).filter(_._1 < coo.size - 1).toSeq
+    Zarr.writeVector(idx.toDF("i", "v"), s"$path#X/indices", n = coo.size - 1, chunk = 2,
+      dtype = "<i8")
+    val e = intercept[IllegalArgumentException](Zarr.readSparse(spark, path, "X"))
+    assert(e.getMessage.contains("indices holds 8 entries but data holds 9"), e.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      Zarr.readObsAligned(spark, path, Seq(Zarr.ObsSparseSum("X", "q"))))
+    assert(e2.getMessage.contains("indices holds 8"), e2.getMessage)
   }
 
   test("readObsAligned == per-component reads + joins (differential), zero shuffles") {
@@ -1781,23 +1844,31 @@ class ZarrSpec extends AnyFunSuite {
         assert(got.toSeq == vals, s"$dtype $codec")
       }
     }
-    // through a store: a CSR group's i8 indices chunk holding minor
-    // indices past 2^53 reads back exactly
+    // through a store: a CSR group's i8 indices chunks holding minor
+    // indices past 2^53 read back exactly — with indices chunked like
+    // data (one chunk of 4) and unlike it (two chunks of 2)
     import spark.implicits._
     val cells = ZMatrix(Seq((0L, 0L, 1.0), (0L, 1L, 2.0), (1L, 0L, 3.0)).toDF("i", "j", "v"))
     val idx = Seq(big, 1L, big + 2, 0L)
-    for ((format, comp) <- Seq((2, ""), (2, "blosc"), (3, "zstd"))) {
-      val root = s"target/tmp/zarr_test_i8_idx_${format}_$comp"
+    for ((format, comp) <- Seq((2, ""), (2, "blosc"), (3, "zstd")); idxChunk <- Seq(4, 2)) {
+      val root = s"target/tmp/zarr_test_i8_idx_${format}_${comp}_$idxChunk"
       Zarr.delete(root, recursive = true)
       Zarr.writeSparse(cells, s"$root#X", 2, 2, chunk = 4, format = format, comp = comp)
-      val raw = longBytes(idx, ByteOrder.LITTLE_ENDIAN)
-      val framed =
-        if (comp == "blosc") Blosc.compress(raw, 8) else if (comp == "zstd") Zstd.compress(raw, 1) else raw
-      java.nio.file.Files.write(java.nio.file.Paths.get(Zarr.chunkPath(s"$root/X/indices", 0, 0,
-        Zarr.writeKeyEnc(format), rank1 = true)), framed)
+      if (idxChunk != 4)
+        Zarr.writeVector(Seq((0L, 0.0), (1L, 1.0), (2L, 0.0)).toDF("i", "v"),
+          s"$root#X/indices", n = 3, chunk = idxChunk, dtype = "<i8", format = format,
+          comp = comp)
+      idx.grouped(idxChunk).zipWithIndex.foreach { case (part, ci) =>
+        val raw = longBytes(part, ByteOrder.LITTLE_ENDIAN)
+        val framed =
+          if (comp == "blosc") Blosc.compress(raw, 8) else if (comp == "zstd") Zstd.compress(raw, 1) else raw
+        java.nio.file.Files.write(java.nio.file.Paths.get(Zarr.chunkPath(s"$root/X/indices", ci, 0,
+          Zarr.writeKeyEnc(format), rank1 = true)), framed)
+      }
       val got = Zarr.readSparse(spark, root, "X").cells.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(got == Set((0L, big, 1.0), (0L, 1L, 2.0), (1L, big + 2, 3.0)), s"v$format $comp: $got")
+      assert(got == Set((0L, big, 1.0), (0L, 1L, 2.0), (1L, big + 2, 3.0)),
+        s"v$format $comp indices chunk $idxChunk: $got")
     }
   }
 
