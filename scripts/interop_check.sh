@@ -14,8 +14,9 @@
 # file of the store (relative path + content), so checking that two builds
 # write byte-identical stores is a diff of two runs' outputs. The sparse
 # and anndata stores (zarrcsr_, zarrcsc_, anndata_: CSR/CSC groups, vlen
-# string, categorical and rank-1 arrays) get digest lines too, without a
-# third-engine read.
+# string, categorical and rank-1 arrays) and the rank-3 store that
+# stream_tensor_ingest builds band by band (tensor_ingest_store_) get
+# digest lines too, without a third-engine read.
 #
 # Usage: interop_check.sh [sf_dir]     (default /root/testdata/sf0.01)
 set -e
@@ -38,7 +39,7 @@ echo "== zarrcube_${SFNAME} (rank-3)"
 python3 "$(dirname "$0")/zarrnd_pycheck.py" "$TMP/zarrcube_${SFNAME}" "$SF"
 digest "zarrcube_${SFNAME}"
 echo "interop: 4/4 store families read by the independent engine"
-for store in "zarrcsr_" "zarrcsc_" "anndata_"; do
+for store in "zarrcsr_" "zarrcsc_" "anndata_" "tensor_ingest_store_"; do
   digest "${store}${SFNAME}"
 done
 

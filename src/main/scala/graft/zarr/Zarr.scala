@@ -7,7 +7,7 @@ import com.github.luben.zstd.Zstd
 
 import scala.reflect.ClassTag
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.array.ZMatrix
@@ -903,8 +903,7 @@ object Zarr {
             innerRows: Int = 0, innerCols: Int = 0, fOrder: Boolean = false,
             comp: String = "", keyEnc: String = ""): Unit =
     save(m.cells.select(
-        (col("i") / chunkRows).cast("long").as("ci"),
-        (col("j") / chunkCols).cast("long").as("cj"),
+        idiv(col("i"), chunkRows).as("ci"), idiv(col("j"), chunkCols).as("cj"),
         col("i").cast("long").as("i"), col("j").cast("long").as("j"),
         col("v").cast("double").as("v")),
       path, Meta(rows, cols, chunkRows, chunkCols, zlib, fill, dtype, format,
@@ -969,8 +968,8 @@ object Zarr {
     // silently corrupt neighbours) and give the touched-chunk set for the
     // stale sweep below. Chunk-count-sized collect (metadata, not data).
     val perChunk = m.cells.select(
-        ((col("i") + rowStart) / meta.chunkRows).cast("long").as("ci"),
-        (col("j") / meta.chunkCols).cast("long").as("cj"),
+        idiv(col("i") + rowStart, meta.chunkRows).as("ci"),
+        idiv(col("j"), meta.chunkCols).as("cj"),
         col("i").cast("long").as("i"), col("j").cast("long").as("j"))
       .groupBy(col("ci"), col("cj"))
       .agg(min(col("i")).as("ni"), max(col("i")).as("mi"),
@@ -984,8 +983,8 @@ object Zarr {
           s"j in [${r.getLong(4)}, ${r.getLong(5)}]")
     }
     save(m.cells.select(
-        ((col("i") + rowStart) / meta.chunkRows).cast("long").as("ci"),
-        (col("j") / meta.chunkCols).cast("long").as("cj"),
+        idiv(col("i") + rowStart, meta.chunkRows).as("ci"),
+        idiv(col("j"), meta.chunkCols).as("cj"),
         (col("i") + rowStart).cast("long").as("i"),
         col("j").cast("long").as("j"), col("v").cast("double").as("v")),
       path, meta, "append")
@@ -1041,8 +1040,8 @@ object Zarr {
         .unionByName(shifted)
     growShape(path, newTotal)
     save(band.select(
-        ((col("i") + bandStart) / meta.chunkRows).cast("long").as("ci"),
-        (col("j") / meta.chunkCols).cast("long").as("cj"),
+        idiv(col("i") + bandStart, meta.chunkRows).as("ci"),
+        idiv(col("j"), meta.chunkCols).as("cj"),
         (col("i") + bandStart).cast("long").as("i"),
         col("j").cast("long").as("j"), col("v").cast("double").as("v")),
       path, meta.copy(shape = List(newTotal, meta.cols)), "append")
@@ -1074,7 +1073,7 @@ object Zarr {
     // a non-default one (e.g. a migrated-in-place v2-keyed v3 tree) must
     // append under ITS encoding, not the writer's default
     save(band.select(
-        ((col("i") + bandStart) / meta.chunkRows).cast("long").as("ci"),
+        idiv(col("i") + bandStart, meta.chunkRows).as("ci"),
         lit(0L).as("cj"), (col("i") + bandStart).cast("long").as("i"),
         lit(0L).as("j"), col("v").cast("double").as("v")),
       path, meta.copy(shape = List(newTotal)), "append")
@@ -1275,70 +1274,121 @@ object Zarr {
   private def mergeHintIfBig(majorDim: Long)(df: DataFrame): DataFrame =
     if (majorDim > MergeHintMajors) df.hint("merge") else df
 
-  /** Partition count for the chunk-clustered vector writes: one task per
-    * ~8 chunk groups, never below the session's shuffle parallelism. The
-    * unbounded form (hash over ci into numShufflePartitions tasks) gave
-    * each task an n/32-row sort whose memory grew WITH THE STORE — at
-    * the sf10 gate 32 concurrent ~470k-row sorts exhausted the Tungsten
-    * execution pool (UNABLE_TO_ACQUIRE_MEMORY). Scaling the task count
-    * with the chunk count pins per-task sort size to ~8 chunks no matter
-    * how large the array grows; small stores still use the full pool. */
-  private def vectorWriteParts(spark: SparkSession, n: Long, chunk: Int): Int = {
-    val nChunks = (n + chunk - 1) / chunk
+  /** Partition count for the chunk writer: one task per ~8 chunks, never
+    * below the session's shuffle parallelism. The unbounded form (hash
+    * over the chunk id into numShufflePartitions tasks) gave each task a
+    * sort whose memory grew WITH THE STORE — at the sf10 gate 32
+    * concurrent ~470k-row sorts exhausted the Tungsten execution pool
+    * (UNABLE_TO_ACQUIRE_MEMORY). Scaling the task count with the chunk
+    * count pins per-task sort size to ~8 chunks no matter how large the
+    * array grows; small stores still use the full pool. */
+  private def chunkWriteParts(spark: SparkSession, nChunks: Long): Int = {
     val base = spark.sessionState.conf.numShufflePartitions
     math.max(base, math.min((nChunks + 7) / 8, 65536L).toInt)
   }
 
-  /** The one rank-1 chunk writer, behind [[writeStringVector]],
-    * [[writeTimeVector]] and the sparse group's data+indices pair. `rows`
-    * (i, item) are repartitioned by chunk and sorted within each
-    * partition, so each task streams out whole chunks: a chunk's items
-    * land in a `fill`-initialized buffer of the full chunk shape (tail
-    * chunks too — the zarr chunk rule), which `encode` turns into one
-    * framed chunk per store of `stores` (address, metadata; they share one
-    * geometry). Each chunk is written to an attempt-scoped temp file and
-    * renamed over its key, so speculative attempts are safe; an index
-    * outside [0, n) fails the task (`what` names the vector), since a
-    * silently dropped row would desynchronize obs from X. The metadata
+  /** Exact integer division of a coordinate column by `d` — `div` on the
+    * long value, never `/` + cast: double division rounds past 2^53, so a
+    * high coordinate could be routed to one chunk while exact Long
+    * arithmetic puts it in another (two tasks writing one chunk object).
+    * Every writer computes its chunk ids through here. */
+  private[zarr] def idiv(c: Column, d: Long): Column =
+    call_function("div", c.cast("long"), lit(d))
+
+  /** The (chunk id, in-chunk offset) of the cell at `coords` (one column
+    * per dimension of `m`): the id row-major over `m`'s chunk grid, the
+    * offset row-major (C order) inside the chunk. */
+  private[zarr] def cellAddress(coords: Seq[Column], m: Meta): (Column, Column) = {
+    val grid = m.grid
+    val ci = coords.indices.map(d => idiv(coords(d), m.chunks(d)))
+    val local = coords.indices.map(d => coords(d).cast("long") - ci(d) * m.chunks(d))
+    val rest = coords.indices.tail
+    (rest.foldLeft(ci.head)((a, d) => a * grid(d) + ci(d)),
+      rest.foldLeft(local.head)((a, d) => a * m.chunks(d) + local(d)).cast("int"))
+  }
+
+  /** The inverse of [[cellAddress]]: the coordinate columns `i0 …
+    * i{N−1}` of the cell at offset `off` of chunk `cid`. */
+  private[zarr] def cellCoords(cid: Column, off: Column, m: Meta): Seq[Column] = {
+    val grid = m.grid
+    m.chunks.indices.map { d =>
+      val ci = idiv(cid, grid.drop(d + 1).product) % grid(d)
+      val local = idiv(off, m.chunks.drop(d + 1).map(_.toLong).product) % m.chunks(d)
+      (ci * m.chunks(d) + local).as(s"i$d")
+    }
+  }
+
+  /** The one chunk writer, every rank and element kind: behind
+    * [[ZarrNd.write]], [[ZarrNd.appendBand]], [[writeStringVector]],
+    * [[writeTimeVector]] and the sparse group's data+indices pair. Each
+    * cell of `cells` (coordinates `coords`, value `item`) is addressed in
+    * Catalyst by [[cellAddress]], repartitioned by chunk id
+    * ([[chunkWriteParts]] tasks) and sorted within each partition, so each
+    * task streams out whole chunks: a chunk's items land in a
+    * `fill`-initialized buffer of the full chunk shape (edge chunks too —
+    * the zarr chunk rule), which `encode` turns into one framed chunk per
+    * store of `stores` (address, metadata; they share one geometry). Each
+    * chunk is written to an attempt-scoped temp file and renamed over its
+    * key, so speculative attempts are safe and a reader never sees a
+    * half-written chunk. The stores are deleted first, unless `band`
+    * [lo, hi) publishes an axis-0 band into existing stores: chunks its
+    * cells do not touch then stay as they are. A cell outside the shape —
+    * or outside the band on axis 0 — fails the task (`what` names the
+    * array), since a silently dropped cell is data loss. The metadata
     * documents, group levels and consolidated maps commit after the data. */
-  private def writeRank1[T: ClassTag](rows: Dataset[(Long, T)], stores: Seq[(String, Meta)],
-                                      fill: T, what: String)
-                                     (encode: Array[T] => Seq[Array[Byte]]): Unit = {
+  private[zarr] def writeChunks[T](cells: DataFrame, coords: Seq[Column], item: Column,
+                                   stores: Seq[(String, Meta)], fill: T, what: String,
+                                   band: Option[(Long, Long)] = None)
+                                  (encode: Array[T] => Seq[Array[Byte]])
+                                  (implicit ct: ClassTag[T], enc: Encoder[(Long, Int, T)]): Unit = {
     val geom = stores.head._2
-    val (n, chunk, keyEnc) = (geom.rows, geom.chunkRows, geom.keyEnc)
-    require(n > 0 && chunk > 0, s"need n > 0 and chunk > 0, got n=$n chunk=$chunk")
+    require(geom.shape.forall(_ > 0) && geom.chunks.forall(_ > 0),
+      s"$what: need a non-empty shape and chunk, got ${geom.shape.mkString("x")} " +
+        s"in chunks of ${geom.chunks.mkString("x")}")
+    require(geom.chunkElems.toLong == geom.chunks.map(_.toLong).product,
+      "chunk too large: elements must fit one Int-addressable buffer")
+    val (lo0, hi0) = band.getOrElse((0L, geom.rows))
+    val bounds = (lo0, hi0) +: geom.shape.tail.map((0L, _))
+    val inside = coords.zip(bounds)
+      .map { case (c, (lo, hi)) => c.cast("long") >= lo && c.cast("long") < hi }.reduce(_ && _)
+    val region = bounds.map { case (lo, hi) => s"[$lo, $hi)" }.mkString(" x ")
+    val (cid, off) = cellAddress(coords, geom)
     val nodes = stores.map { case (p, _) =>
       val (root, frag) = splitKey(p)
       (root, frag.map(validKeySegments).getOrElse(Nil))
     }
     val dirs = nodes.map { case (root, segs) => (root +: segs).mkString("/") }
-    dirs.foreach(delete(_, recursive = true))
-    rows.repartition(vectorWriteParts(rows.sparkSession, n, chunk),
-        (col("i").cast("long") / chunk).cast("long"))
-      .sortWithinPartitions(col("i"))
-      .foreachPartition { (it: Iterator[(Long, T)]) =>
+    if (band.isEmpty) dirs.foreach(delete(_, recursive = true))
+    val (grid, elems, keyEnc) = (geom.grid, geom.chunkElems, geom.keyEnc)
+    cells.select(when(inside, cid).otherwise(-1L).as("_1"), off.as("_2"), item.as("_3"))
+      .repartition(chunkWriteParts(cells.sparkSession, geom.nChunks), col("_1"))
+      .sortWithinPartitions(col("_1"))
+      .as[(Long, Int, T)]
+      .foreachPartition { (it: Iterator[(Long, Int, T)]) =>
         val attempt = Option(org.apache.spark.TaskContext.get())
           .map(_.taskAttemptId()).getOrElse(0L)
-        var curCi = -1L
+        var cur = -1L
         var buf: Array[T] = null
         def flush(): Unit = if (buf != null) {
+          val coord = new Array[Long](grid.length)
+          var rem = cur
+          for (d <- grid.indices.reverse) { coord(d) = rem % grid(d); rem /= grid(d) }
           encode(buf).zip(dirs).foreach { case (bytes, dir) =>
-            val f = chunkPath(dir, curCi, 0, keyEnc, rank1 = true)
+            val f = chunkKey(dir, coord, keyEnc)
             val tmp = s"$f.__tmp-$attempt"
             writeBytes(tmp, bytes)
             renameOver(tmp, f)
           }
           buf = null
         }
-        it.foreach { case (i, item) =>
-          require(i >= 0 && i < n, s"$what index $i outside [0, $n)")
-          val ci = i / chunk
-          if (ci != curCi) {
+        it.foreach { case (id, o, x) =>
+          require(id >= 0, s"$what: a cell lies outside $region")
+          if (id != cur) {
             flush()
-            curCi = ci
-            buf = Array.fill(chunk)(fill)
+            cur = id
+            buf = Array.fill(elems)(fill)
           }
-          buf((i - ci * chunk).toInt) = item
+          buf(o) = x
         }
         flush()
       }
@@ -1349,30 +1399,30 @@ object Zarr {
     }
   }
 
-  /** The one per-chunk read of every rank-1 reader: chunk `ci` of `arr`
-    * (`m` its metadata) unframed to `outLen` bytes (or [[SelfSized]]) and
-    * decoded, or — when the chunk file is absent — its valid length of
-    * `fill`. */
-  private def readRank1Chunk[T: ClassTag](arr: String, m: Meta, ci: Long, fill: T, outLen: Int)
-                                         (decode: Array[Byte] => Array[T]): Array[T] = {
-    val f = chunkPath(arr, ci, 0, m.keyEnc, rank1 = true)
+  /** The one per-chunk read of every chunk reader: chunk `coord` (any
+    * rank) of `arr` (`m` its metadata) unframed to `outLen` bytes (or
+    * [[SelfSized]]) and decoded, or — when the chunk file is absent — a
+    * full chunk of `fill` (the spec's missing-chunk rule). */
+  private def readChunk[T: ClassTag](arr: String, m: Meta, coord: Array[Long], fill: T,
+                                     outLen: Int)(decode: Array[Byte] => Array[T]): Array[T] = {
+    val f = chunkKey(arr, coord, m.keyEnc)
     if (exists(f)) decode(unframe(readBytes(f), m.zlib, m.format, m.comp, outLen))
-    else Array.fill(math.min(m.chunkRows.toLong, m.rows - ci * m.chunkRows).toInt)(fill)
+    else Array.fill(m.chunkElems)(fill)
   }
 
-  /** A numeric rank-1 chunk as doubles (absent → fill). */
-  private def readValueChunk(arr: String, m: Meta, ci: Long): Array[Double] =
-    readRank1Chunk(arr, m, ci, m.fill, m.chunkRows * elemSize(m.dtype))(
-      decodeValues(_, m.chunkRows, m.dtype))
+  /** A numeric chunk of any rank as row-major doubles (absent → fill). */
+  private[zarr] def readValueChunk(arr: String, m: Meta, coord: Array[Long]): Array[Double] =
+    readChunk(arr, m, coord, m.fill, m.chunkElems * elemSize(m.dtype))(
+      decodeValues(_, m.chunkElems, m.dtype))
 
   /** An integer rank-1 chunk (indptr, indices) as exact longs: `i8`
     * straight off the bytes, narrower dtypes through doubles, which hold
     * them exactly. */
   private def readIndexChunk(arr: String, m: Meta, ci: Long): Array[Long] =
     if (m.dtype.endsWith("i8"))
-      readRank1Chunk(arr, m, ci, m.fill.toLong, m.chunkRows * 8)(
+      readChunk(arr, m, Array(ci), m.fill.toLong, m.chunkRows * 8)(
         decodeLongs(_, m.chunkRows, m.dtype))
-    else readValueChunk(arr, m, ci).map(_.toLong)
+    else readValueChunk(arr, m, Array(ci)).map(_.toLong)
 
   /** Write a 1-D array (anndata obs/var column, zappy 1-D ndarray) from a
     * long-form (i, v) frame. Stored as a true rank-1 Zarr array — 1-element
@@ -1384,7 +1434,7 @@ object Zarr {
                   dtype: String = "<f8", format: Int = 2,
                   comp: String = ""): Unit =
     save(vec.select(
-        (col("i") / chunk).cast("long").as("ci"), lit(0L).as("cj"),
+        idiv(col("i"), chunk).as("ci"), lit(0L).as("cj"),
         col("i").cast("long").as("i"), lit(0L).as("j"),
         col("v").cast("double").as("v")),
       path, Meta(n, 1, chunk, 1, zlib, fill, dtype, format, keyEnc = "", rank1 = true,
@@ -1545,7 +1595,7 @@ object Zarr {
           val ciHi = (hi - 1) / chunk
           while (ci <= ciHi) {
             val cLen = math.min(chunk.toLong, m.rows - ci * chunk).toInt
-            val items = readRank1Chunk(ps.arr, m, ci, "", SelfSized)(
+            val items = readChunk(ps.arr, m, Array(ci), "", SelfSized)(
               vlenDecode(_, chunk, expectedAlt = cLen))
             val from = math.max(lo, ci * chunk)
             val until = math.min(hi, ci * chunk + cLen)
@@ -1562,7 +1612,7 @@ object Zarr {
           var ci = lo / m.chunkRows
           val ciHi = (hi - 1) / m.chunkRows
           while (ci <= ciHi) {
-            val vals = readValueChunk(pc.arr, m, ci)
+            val vals = readValueChunk(pc.arr, m, Array(ci))
             val from = math.max(lo, ci * m.chunkRows)
             val until = math.min(hi, (ci + 1) * m.chunkRows)
             var r = from
@@ -1583,21 +1633,15 @@ object Zarr {
           val m = pd.m
           val cj = pd.j / m.chunkCols
           val jin = (pd.j % m.chunkCols).toInt
-          val cElems = m.chunkRows * m.chunkCols
           var ci = lo / m.chunkRows
           val ciHi = (hi - 1) / m.chunkRows
           while (ci <= ciHi) {
-            val f = chunkPath(pd.arr, ci, cj, m.keyEnc)
-            val vals =
-              if (!exists(f)) null
-              else decodeChunk(readBytes(f), cElems, m.zlib, m.dtype, m.format, m.comp)
+            val vals = readValueChunk(pd.arr, m, Array(ci, cj))
             val from = math.max(lo, ci * m.chunkRows)
             val until = math.min(hi, (ci + 1) * m.chunkRows)
             var r = from
             while (r < until) {
-              a((r - lo).toInt) =
-                if (vals == null) m.fill
-                else vals(((r - ci * m.chunkRows) * m.chunkCols + jin).toInt)
+              a((r - lo).toInt) = vals(((r - ci * m.chunkRows) * m.chunkCols + jin).toInt)
               r += 1
             }
             ci += 1
@@ -1612,7 +1656,7 @@ object Zarr {
           def dataAt(k: Long): Double = {
             val c = k / g.dm.chunkRows
             if (c != loaded) {
-              buf = readValueChunk(g.dat, g.dm, c)
+              buf = readValueChunk(g.dat, g.dm, Array(c))
               loaded = c
             }
             buf((k % g.dm.chunkRows).toInt)
@@ -1681,7 +1725,7 @@ object Zarr {
     val cells = spark.range(g.dm.nChunks).as[Long].flatMap { c =>
       val base = c * chunk
       val len = math.min(chunk.toLong, g.dm.rows - base).toInt
-      val dat = readValueChunk(g.dat, g.dm, c)
+      val dat = readValueChunk(g.dat, g.dm, Array(c))
       val idx = new IndexCursor(g.idx, g.im)
       val ptr = new IndexCursor(g.ptr, g.pm)
       var major = ptr.lastAtMost(base)
@@ -1762,16 +1806,15 @@ object Zarr {
 
   /** Write TWO position-aligned rank-1 arrays from one (i, v1, v2) frame
     * in a single repartition-by-chunk pass — the sparse group's
-    * data+indices shape ([[writeRank1]]; missing positions fill 0). */
+    * data+indices shape ([[writeChunks]]; missing positions fill 0). */
   private def writeVectorPair(vec: DataFrame, pathA: String, pathB: String,
                               n: Long, chunk: Int, dtypeA: String, dtypeB: String,
                               format: Int, comp: String): Unit = {
     def meta(dtype: String) = Meta(n, 1, chunk, 1, zlib = false, fill = 0.0,
       dtype = dtype, format = format, keyEnc = writeKeyEnc(format), rank1 = true, comp = comp)
     import vec.sparkSession.implicits._
-    writeRank1(vec.select(col("i").cast("long"),
-        struct(col("v1").cast("double").as("_1"), col("v2").cast("double").as("_2")))
-        .as[(Long, (Double, Double))],
+    writeChunks(vec, Seq(col("i")),
+        struct(col("v1").cast("double").as("_1"), col("v2").cast("double").as("_2")),
       Seq(pathA -> meta(dtypeA), pathB -> meta(dtypeB)), (0.0, 0.0), "vector-pair") { buf =>
       Seq(encodeChunk(buf.map(_._1), dtypeA, zlib = false, format, comp),
         encodeChunk(buf.map(_._2), dtypeB, zlib = false, format, comp))
@@ -1904,7 +1947,7 @@ object Zarr {
 
   /** Write a rank-1 vlen string array from a long-form (i, s) frame —
     * the anndata obs/var index shape, readable by zarr-python as-is,
-    * through [[writeRank1]], so the write is as distributed as the
+    * through [[writeChunks]], so the write is as distributed as the
     * numeric DSv2 path. Missing positions fill with "". */
   def writeStringVector(vec: DataFrame, path: String, n: Long, chunk: Int,
                         zlib: Boolean = false, format: Int = 2,
@@ -1912,7 +1955,7 @@ object Zarr {
     require(format == 2 || format == 3, s"zarrFormat must be 2 or 3, got $format")
     requireCodec(zlib, comp)
     import vec.sparkSession.implicits._
-    writeRank1(vec.select(col("i").cast("long"), col("s").cast("string")).as[(Long, String)],
+    writeChunks(vec, Seq(col("i")), col("s").cast("string"),
       Seq(path -> Meta(n, 1, chunk, 1, zlib, 0.0, ZarrMeta.StringDtype, format,
         keyEnc = writeKeyEnc(format), rank1 = true, comp = comp)), "", "string vector") {
       buf => Seq(frame(vlenEncode(buf), 1, zlib, format, comp))
@@ -1929,7 +1972,7 @@ object Zarr {
     import spark.implicits._
     spark.range(m.nChunks).as[Long].flatMap { ci =>
       val len = math.min(chunk.toLong, n - ci * chunk).toInt
-      val items = readRank1Chunk(arr, m, ci, "", SelfSized)(vlenDecode(_, chunk, expectedAlt = len))
+      val items = readChunk(arr, m, Array(ci), "", SelfSized)(vlenDecode(_, chunk, expectedAlt = len))
       (0 until len).iterator.map(k => (ci * chunk + k, items(k)))
     }.toDF("i", "s")
   }
@@ -1944,7 +1987,7 @@ object Zarr {
   // zarr-python "numpy.datetime64" extension data_type.
 
   /** Write a rank-1 datetime64[ns]/timedelta64[ns] array from a long-form
-    * (i, v: epoch-nanos long) frame through [[writeRank1]]; missing
+    * (i, v: epoch-nanos long) frame through [[writeChunks]]; missing
     * positions take `fill` (0 = epoch; use Long.MinValue for NaT). */
   def writeTimeVector(vec: DataFrame, path: String, n: Long, chunk: Int,
                       dtype: String = "<M8[ns]", format: Int = 2,
@@ -1955,7 +1998,7 @@ object Zarr {
     require(format == 2 || format == 3, s"zarrFormat must be 2 or 3, got $format")
     requireCodec(zlib, comp)
     import vec.sparkSession.implicits._
-    writeRank1(vec.select(col("i").cast("long"), col("v").cast("long")).as[(Long, Long)],
+    writeChunks(vec, Seq(col("i")), col("v").cast("long"),
       Seq(path -> Meta(n, 1, chunk, 1, zlib, 0.0, dtype, format, keyEnc = writeKeyEnc(format),
         rank1 = true, comp = comp).copy(timeFill = fill)), fill, "time vector") { buf =>
       val bb = ByteBuffer.allocate(buf.length * 8).order(byteOrder(dtype))
@@ -1974,7 +2017,7 @@ object Zarr {
     import spark.implicits._
     spark.range(m.nChunks).as[Long].flatMap { ci =>
       val len = math.min(chunk.toLong, n - ci * chunk).toInt
-      val items = readRank1Chunk(arr, m, ci, m.timeFill, chunk * 8)(decodeLongs(_, len, m.dtype))
+      val items = readChunk(arr, m, Array(ci), m.timeFill, chunk * 8)(decodeLongs(_, len, m.dtype))
       (0 until len).iterator.map(k => (ci * chunk + k, items(k)))
     }.toDF("i", "v")
   }

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 import graft.zarr.ZarrNd
 
 /** Rank-N (≥3) dense zarr v2 arrays: roundtrips across codecs and key
@@ -235,29 +237,65 @@ class ZarrNdSpec extends AnyFunSuite {
     }
   }
 
-  test("grouped-slice reads: tasks iterating MANY chunks equal partition-per-chunk") {
-    // the 100 TB read path: when the selected chunk count exceeds the
-    // task-count ceiling, each task lazily decodes a RANGE of selection
-    // ordinals — force the ceiling down so a 12-chunk read runs through
-    // the multi-chunk-per-task ordinal decode, and prove bit-equality
-    // against the one-task-per-chunk plan
+  test("grouped-slice reads: tasks iterating MANY chunks equal the input cube") {
+    // the 100 TB read path: the read is one range over the selected chunk
+    // ordinals, so on the 4-slot test session a 36-chunk store is read by
+    // fewer tasks than chunks, each task lazily decoding a RANGE of
+    // ordinals — full and windowed reads must still equal the input
     val path = s"${GraftPaths.tmpRoot}/zarrnd_grouped"
-    val df = cube(7, 5, 6) // chunks (4,3,4) -> grid 2x2x2 = 8 full + edges
+    val df = cube(7, 5, 6)
     ZarrNd.write(df, path, Seq(7L, 5L, 6L), Seq(2, 2, 2)) // grid 4x3x3 = 36 chunks
-    val full = ZarrNd.read(spark, path).orderBy("i0", "i1", "i2").collect()
-    try {
-      spark.conf.set("spark.graft.zarrnd.maxSlices", "3")
-      val grouped = ZarrNd.read(spark, path)
-      assert(grouped.rdd.getNumPartitions == 3,
-        s"expected 3 grouped slices, got ${grouped.rdd.getNumPartitions}")
-      assert(grouped.orderBy("i0", "i1", "i2").collect().sameElements(full))
-      // a pruned window through the grouped path stays exact too
-      val win = ZarrNd.readRange(spark, path, Seq((1L, 6L), (0L, 3L)))
-        .orderBy("i0", "i1", "i2").collect()
-      val want = df.filter(col("i0") >= 1 && col("i0") < 6 && col("i1") < 3)
-        .orderBy("i0", "i1", "i2").collect()
-      assert(win.sameElements(want))
-    } finally spark.conf.unset("spark.graft.zarrnd.maxSlices")
+    val grouped = ZarrNd.read(spark, path)
+    val tasks = grouped.rdd.getNumPartitions
+    assert(tasks < 36, s"expected fewer tasks than the 36 chunks, got $tasks")
+    assert(grouped.orderBy("i0", "i1", "i2").collect()
+      .sameElements(df.orderBy("i0", "i1", "i2").collect()))
+    // a pruned window through the grouped path stays exact too
+    val win = ZarrNd.readRange(spark, path, Seq((1L, 6L), (0L, 3L)))
+      .orderBy("i0", "i1", "i2").collect()
+    val want = df.filter(col("i0") >= 1 && col("i0") < 6 && col("i1") < 3)
+      .orderBy("i0", "i1", "i2").collect()
+    assert(win.sameElements(want))
+  }
+
+  test("appendBand replay (a restarted ingest) republishes whole chunks, byte-identical") {
+    import spark.implicits._
+    val path = s"${GraftPaths.tmpRoot}/zarrnd_replay"
+    graft.zarr.Zarr.delete(path, recursive = true)
+    def band(lo: Int, hi: Int) = cube(hi, 5, 6).filter(col("i0") >= lo)
+    def files(): Map[String, Seq[Byte]] = {
+      val root = java.nio.file.Paths.get(path)
+      val it = java.nio.file.Files.walk(root)
+      try it.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => root.relativize(f).toString ->
+          java.nio.file.Files.readAllBytes(f).toSeq).toMap
+      finally it.close()
+    }
+    for (format <- Seq(2, 3)) {
+      graft.zarr.Zarr.delete(path, recursive = true)
+      def append(df: org.apache.spark.sql.DataFrame, lo: Long, hi: Long): Unit =
+        ZarrNd.appendBand(df, path, lo, hi, Seq(5L, 6L), Seq(4, 3, 4),
+          nested = format == 3, format = format)
+      append(band(0, 4), 0, 4)
+      append(band(4, 7), 4, 7)
+      val before = files()
+      // the replay re-publishes the first band: chunk files and metadata
+      // come out byte-identical
+      append(band(0, 4), 0, 4)
+      assert(files() == before, s"v$format replay changed the store")
+      // a replay with fewer cells replaces each chunk whole: the cells it
+      // omits read as fill, not as the previous publish's values
+      append(band(0, 4).filter(col("i2") =!= 1L), 0, 4)
+      val got = ZarrNd.read(spark, path).as[(Long, Long, Long, Double)].collect()
+      assert(got.length == 7 * 5 * 6)
+      got.foreach { case (i, j, k, v) =>
+        val want = if (i < 4 && k == 1) 0.0 else (i * 10000 + j * 100 + k).toDouble
+        assert(v == want, s"v$format ($i, $j, $k) = $v, want $want")
+      }
+      // every chunk went through a temp file and a rename; none is left
+      val temps = files().keys.filter(_.contains(".__tmp-"))
+      assert(temps.isEmpty, temps.mkString(", "))
+    }
   }
 
   test("out-of-shape coordinates fail fast instead of dropping cells") {
