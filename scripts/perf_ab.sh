@@ -11,9 +11,15 @@
 # alternates from seed to seed (the parent for the 1st, 3rd, ... seed), so
 # neither side always runs second. Each run uses BENCHMARK.json's
 # run_seconds, untraced. Prints per seed, for both sides, every end-to-end
-# metric BENCHMARK.json lists plus fail_ratio; then per metric the two
-# medians, the pairs the change wins (by the metric's "better" direction;
-# ties count for neither side) and the IQR of the parent's runs. Writes
+# metric BENCHMARK.json lists plus fail_ratio; then per metric a verdict,
+# the two medians and quartiles, the pairs the change wins (by the
+# metric's "better" direction; ties count for neither side) and the IQR of
+# the parent's runs. The verdict, checked in this order: "gain" when the
+# change wins at least 9 of 10 pairs and the medians differ by more than
+# the parent's IQR; "worse" when the change's median is worse than the
+# parent's by more than the metric's BENCHMARK.json bound (a fraction of
+# the parent's median; any rise for fail_ratio); "unresolved" when the
+# parent's IQR is wider than that bound; "flat" otherwise. Writes
 # nothing tracked: the working tree's build and runs land under
 # perfbench/target/ as for any perfbench run.
 set -e
@@ -72,17 +78,38 @@ done
 python3 - "$RESULTS" "$HERE/BENCHMARK.json" $METRICS <<'EOF'
 import json, statistics, sys
 names = sys.argv[3:]
-better = {m["name"]: m["better"] for m in json.load(open(sys.argv[2]))["end_to_end"]}
-better["fail_ratio"] = "lower"
+spec = {m["name"]: m for m in json.load(open(sys.argv[2]))["end_to_end"]}
+# a larger share of failed operations is worse by any amount
+spec["fail_ratio"] = {"better": "lower", "bound": 0.0}
 rows = [l.split() for l in open(sys.argv[1])]
 side = {s: {k: [float(r[2 + c]) for r in rows if r[1] == s] for c, k in enumerate(names)}
         for s in ("parent", "change")}
+
+def quartiles(xs):
+    return statistics.quantiles(xs, n=4) if len(xs) > 1 else [xs[0]] * 3
+
 for k in names:
     p, c = side["parent"][k], side["change"][k]
+    lower = spec[k]["better"] == "lower"
+    bound = spec[k]["bound"]
     # pairs the change wins (ties count for neither side), and the spread
     # of the parent's own runs
-    wins = sum((cv < pv) if better[k] == "lower" else (cv > pv) for pv, cv in zip(p, c))
-    q = statistics.quantiles(p, n=4) if len(p) > 1 else [0, 0, 0]
-    print(f"{k}: median parent {statistics.median(p):.4f} change {statistics.median(c):.4f} "
-          f"({better[k]} is better); change wins {wins} of {len(p)} pairs; parent IQR {q[2] - q[0]:.4f}")
+    wins = sum((cv < pv) if lower else (cv > pv) for pv, cv in zip(p, c))
+    pq, cq = quartiles(p), quartiles(c)
+    pm, cm = statistics.median(p), statistics.median(c)
+    iqr = pq[2] - pq[0]
+    gain_by = (pm - cm) if lower else (cm - pm)  # > 0: the change is better
+    # the bound is a fraction of the parent's median (of 1 where that is 0)
+    scale = abs(pm) if pm else 1.0
+    if wins >= 0.9 * len(p) and gain_by > iqr:
+        verdict = "gain"
+    elif -gain_by > bound * scale:
+        verdict = "worse"
+    elif iqr > bound * scale:
+        verdict = "unresolved"
+    else:
+        verdict = "flat"
+    print(f"{k}: {verdict}; median parent {pm:.4f} change {cm:.4f} ({spec[k]['better']} is better, "
+          f"bound {bound:g}); quartiles parent {pq[0]:.4f}-{pq[2]:.4f} change {cq[0]:.4f}-{cq[2]:.4f}; "
+          f"change wins {wins} of {len(p)} pairs; parent IQR {iqr:.4f}")
 EOF

@@ -28,12 +28,107 @@ object Dedup {
     * probe OOM'd in SMJ spill machinery at 8 g before this). The bound is
     * deployment-parameterised in ROWS (~16 B/row; the default ≈ 128 MB of
     * key data, a few hundred MB as a HashedRelation). The count is exact
-    * and cheap: vt is always a localCheckpoint when this is called. */
+    * and free: [[pinCounted]] reads it off the job that checkpoints vt.
+    * Either way every probe is keyed on ONE integral column
+    * ([[verifyCounts]]), so the relation it builds is a LongHashedRelation
+    * sized to its rows, never a page-sized UnsafeHashedRelation. */
   private val VerifyBroadcastRows: Long =
     sys.env.get("GRAFT_VERIFY_BCAST_ROWS").flatMap(_.toLongOption)
       .getOrElse(8L << 20)
   private def probeSide(df: DataFrame, bcast: Boolean): DataFrame =
     if (bcast) broadcast(df) else df.hint("shuffle_hash")
+
+  /** `left` joined (`how`) to `right` on leftCols(i) = rightCols(i) for
+    * every i, with the planner's join key ONE long: xxhash64 of the
+    * columns. A build side keyed on two or more columns becomes an
+    * UnsafeHashedRelation, which takes a whole 16 MiB Tungsten page
+    * however few rows it holds (per broadcast, per executor); a single
+    * long key builds a LongHashedRelation sized to its rows. The hash only
+    * routes: the exact equality is the join's residual condition, written
+    * as an xor-zero test so the planner cannot lift it back into the key,
+    * so two tuples whose hashes collide never match. Integral columns;
+    * column names distinct across the two sides. */
+  private def longKeyJoin(left: DataFrame, leftCols: Seq[String],
+                          right: DataFrame, rightCols: Seq[String], how: String,
+                          build: DataFrame => DataFrame = identity): DataFrame = {
+    def key(cs: Seq[String]) = xxhash64(cs.map(c => col(c).cast("long")): _*)
+    val same = leftCols.zip(rightCols)
+      .map { case (l, r) => col(l).cast("long").bitwiseXOR(col(r).cast("long")) }
+      .reduce(_ bitwiseOR _) === 0L
+    left.withColumn("_lk", key(leftCols))
+      .join(build(right.withColumn("_rk", key(rightCols))),
+        col("_lk") === col("_rk") && same, how)
+      .drop("_lk", "_rk")
+  }
+
+  /** The exploded verify's intersection count, shared by the three exact
+    * verifies: (a, b, inter = |A ∩ B|) for every pair of `pairs` (columns
+    * `a`, `b`) whose docs share a token of the verify table `vt` (doc_id,
+    * h; distinct rows, `rows` of them). Both probes key their build side
+    * on one integral column: the fan-out on `a`, the match on the long
+    * hash of (doc_id, h) with the exact (doc_id, h) equality as residual
+    * ([[longKeyJoin]]), so `inter` counts exact matches only. Both build
+    * sides broadcast, or build per partition, by [[VerifyBroadcastRows]]. */
+  private def verifyCounts(pairs: DataFrame, a: String, b: String,
+                           vt: DataFrame, rows: Long): DataFrame = {
+    val bcast = rows <= VerifyBroadcastRows
+    val fanned = pairs.join(probeSide(vt.select(col("doc_id").as(a), col("h")), bcast), Seq(a))
+    longKeyJoin(fanned, Seq(b, "h"), vt.select(col("doc_id").as("_b"), col("h").as("_h")),
+        Seq("_b", "_h"), "inner", probeSide(_, bcast))
+      .groupBy(col(a), col(b)).agg(count(lit(1)).as("inter"))
+  }
+
+  private type Rdd = org.apache.spark.rdd.RDD[_]
+
+  /** The localCheckpoints [[pin]] made inside the innermost [[releasing]]
+    * call on this thread (None outside any). Not inherited: a thread
+    * started inside a scope must not feed that scope's buffer forever. */
+  private val pinned: ThreadLocal[Option[scala.collection.mutable.Buffer[Rdd]]] =
+    ThreadLocal.withInitial(() => None)
+
+  /** The RDDs a frame's plan scans (its LogicalRDD leaves). */
+  private def planRdds(df: DataFrame): Seq[Rdd] =
+    df.queryExecution.logical
+      .collectWithSubqueries { case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
+
+  /** Eager localCheckpoint of `df`, recorded in the enclosing [[releasing]]
+    * scope so the scope can free its blocks once nothing reads them. */
+  private def pin(df: DataFrame): DataFrame = {
+    val c = df.localCheckpoint()
+    pinned.get.foreach(_ ++= planRdds(c))
+    c
+  }
+
+  /** [[pin]], plus the frame's row count, observed on the checkpoint's own
+    * job: no count job of its own. */
+  private def pinCounted(df: DataFrame): (DataFrame, Long) = {
+    val obs = org.apache.spark.sql.Observation()
+    val c = pin(df.observe(obs, count(lit(1)).as("n")))
+    (c, obs.get("n").asInstanceOf[Long])
+  }
+
+  /** Frees a checkpoint's blocks now; the ContextCleaner would free them
+    * only once a driver GC collects the RDD. */
+  private def release(r: Rdd): Unit =
+    if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE) r.unpersist(blocking = false)
+
+  /** Runs `body`, then releases every checkpoint [[pin]] made inside it
+    * that the returned frame's plan does not read (directly or through an
+    * RDD derived from it); the ones it reads pass to the enclosing scope,
+    * which decides on them in turn. A lazily returned frame therefore
+    * keeps every checkpoint it reads. */
+  private def releasing(body: => DataFrame): DataFrame = {
+    val made = scala.collection.mutable.Buffer.empty[Rdd]
+    val outer = pinned.get
+    pinned.set(Some(made))
+    val out = try body finally pinned.set(outer)
+    def lineage(r: Rdd): Seq[Rdd] = r +: r.dependencies.flatMap(d => lineage(d.rdd))
+    val read = planRdds(out).flatMap(lineage).toSet
+    val (kept, dead) = made.partition(read)
+    dead.foreach(release)
+    outer.foreach(_ ++= kept)
+    out
+  }
 
   /** k shifted `slice`s of the token array, zipped positionally — THE
     * shingle construction, shared by hashing, string form, and MinHash so
@@ -231,10 +326,16 @@ object Dedup {
     * docs emits n(n−1)/2 pairs (the documented 47× slope at sf1) but only
     * n cluster rows. Pair emission ([[jaccardJoinToks]]) stays available,
     * opt-in, for consumers that need the per-pair scores (audits,
-    * threshold tuning). */
-  def jaccardDedup(toks: DataFrame, minJaccardPct: Int = 50): DataFrame =
+    * threshold tuning).
+    *
+    * Nothing the call checkpoints outlives it unless the result reads it
+    * ([[releasing]]): the join's pair set and verify table go as soon as
+    * the components are labelled, so at 1000 executors no block manager
+    * keeps pinned verify data the caller can no longer reach. */
+  def jaccardDedup(toks: DataFrame, minJaccardPct: Int = 50): DataFrame = releasing {
     connectedComponents(
       jaccardJoinToks(toks, minJaccardPct).select(col("id1"), col("id2")))
+  }
 
   /** L32: EXACT set-similarity join by prefix filtering (Chaudhuri 2006 /
     * PPJoin family) — every pair of documents whose distinct-token
@@ -276,8 +377,11 @@ object Dedup {
     * ([[corpusShingles]]). It emits every qualifying PAIR, so it is
     * output-bound under mass duplication; [[jaccardDedup]] is the
     * cluster-sized default for keeper-selection consumers.
-    * Returns (id1, id2, inter, uni) with id1 < id2. */
-  def jaccardJoinToks(toks: DataFrame, minJaccardPct: Int): DataFrame = {
+    * Returns (id1, id2, inter, uni) with id1 < id2, lazily: the returned
+    * frame reads the checkpointed pair set and verify table, so they stay
+    * pinned while it lives; the prefix, read by neither, is released
+    * before the call returns ([[releasing]]). */
+  def jaccardJoinToks(toks: DataFrame, minJaccardPct: Int): DataFrame = releasing {
     require(minJaccardPct > 0 && minJaccardPct <= 100)
     // r20: the whole join runs over xxhash64 SHINGLE HASHES, not strings —
     // every exchange (frequency window, rank window, candidate join, verify
@@ -293,8 +397,9 @@ object Dedup {
     val ht = toks.select(col("doc_id"), xxhash64(col("token")).as("h"))
     // materialised once: both sides of the self-join read it, and
     // unmaterialised each side would re-run both windows' sorts
-    val prefix = prefixOf(rarestFirst(ht), minJaccardPct).localCheckpoint()
-    val cand = prefix.select(col("doc_id").as("id1"), col("h"), col("sz").as("_s1"))
+    val prefix = pin(prefixOf(rarestFirst(ht), minJaccardPct))
+    // the tiny pair set, pinned: prefix-probe lineage, 2 consumers
+    val cand = pin(prefix.select(col("doc_id").as("id1"), col("h"), col("sz").as("_s1"))
       .join(prefix.select(col("doc_id").as("id2"), col("h"), col("sz").as("_s2")),
         Seq("h"))
       .filter(col("id1") < col("id2"))
@@ -305,8 +410,7 @@ object Dedup {
       // fan-out (§2.3: fewer rows into every downstream exchange)
       .filter(col("_s1") * 100 >= lit(minJaccardPct) * col("_s2") &&
         col("_s2") * 100 >= lit(minJaccardPct) * col("_s1"))
-      .select(col("id1"), col("id2")).distinct()
-      .localCheckpoint() // tiny pair set, prefix-probe lineage, 2 consumers
+      .select(col("id1"), col("id2")).distinct())
     // r21 (r19 ask #3 / r20 verdict #3): SPILL-SAFE exploded-token verify.
     // The former array-set shape (collect_set per doc + per-pair
     // array_intersect) held O(|set|) per pair row through two attach
@@ -324,23 +428,16 @@ object Dedup {
     val candIds = cand
       .select(explode(array(col("id1"), col("id2"))).as("doc_id")).distinct()
     // built ONCE (checkpoint), consumed three times: the size aggregate and
-    // both pair probes. No join hint: rows are narrow longs now — the
-    // planner's size-driven choice (broadcast small / shuffle at scale) is
-    // right, unlike the fat-array relation the old merge hint guarded.
-    val vt = toks.join(candIds, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), xxhash64(col("token")).as("h"))
-      .localCheckpoint()
+    // both pair probes ([[verifyCounts]]).
+    val (vt, vtRows) = pinCounted(toks.join(candIds, Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), xxhash64(col("token")).as("h")))
     val vsz = vt.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     // spread the probe: the checkpointed pair set is tiny-but-dense (AQE
     // coalesces it to ~1 partition locally) while the probe pipeline fans
     // each pair out ×|set| — repartition the PAIRS (narrow rows, guide
     // §2.5 "repartition after the read") so the fan-out runs slot-wide
     val candSpread = cand.repartition(cand.sparkSession.sparkContext.defaultParallelism)
-    val bcast = vt.count() <= VerifyBroadcastRows
-    candSpread
-      .join(probeSide(vt.select(col("doc_id").as("id1"), col("h")), bcast), Seq("id1"))
-      .join(probeSide(vt.select(col("doc_id").as("id2"), col("h")), bcast), Seq("id2", "h"))
-      .groupBy(col("id1"), col("id2")).agg(count(lit(1)).as("inter"))
+    verifyCounts(candSpread, "id1", "id2", vt, vtRows)
       .join(vsz.select(col("doc_id").as("id1"), col("sz").as("sz1")), Seq("id1"))
       .join(vsz.select(col("doc_id").as("id2"), col("sz").as("sz2")), Seq("id2"))
       .select(col("id1"), col("id2"), col("inter"),
@@ -364,7 +461,9 @@ object Dedup {
     * verify stage is one (pair, token) count against the distinct
     * shingle sets. At 100 TB the full index is the inverted index the
     * pipeline already maintains. Returns ordered pairs (id_a contained
-    * in id_b) with exact intersection and |A|. */
+    * in id_b) with exact intersection and |A|, lazily: the returned frame
+    * reads the checkpointed pair set and verify table, so they stay pinned
+    * while it lives. */
   def containmentJoin(docs: DataFrame, idCol: String, textCol: String,
                       minContainPct: Int = 90, shingle: Int = 3): DataFrame =
     containmentJoinToks(shingleToks(docs, idCol, textCol, shingle), minContainPct)
@@ -382,7 +481,9 @@ object Dedup {
     // side reads only sz, so Catalyst prunes the rank and frequency windows
     // from it and leaves one doc-keyed size window
     val ranked = rarestFirst(ht)
-    val cand = prefixOf(ranked, minContainPct)
+    // the tiny pair set over the full prefix-probe lineage, pinned: two
+    // consumers below (id extraction + the verify join)
+    val cand = pin(prefixOf(ranked, minContainPct)
       .select(col("doc_id").as("id_a"), col("h"), col("sz").as("_sa"))
       .join(ranked.select(col("doc_id").as("id_b"), col("h"), col("sz").as("_sb")),
         Seq("h"))
@@ -391,10 +492,7 @@ object Dedup {
       // necessary condition, so the candidate superset shrinks and no
       // qualifying ordered pair is lost (see jaccardJoinToks)
       .filter(col("_sb") * 100 >= lit(minContainPct) * col("_sa"))
-      .select(col("id_a"), col("id_b")).distinct()
-      // tiny pair set over the full prefix-probe lineage; two consumers
-      // below (id extraction + the verify join) — pin it once
-      .localCheckpoint()
+      .select(col("id_a"), col("id_b")).distinct())
     // r21 (r19 ask #3 / r20 verdict #3): SPILL-SAFE exploded-token verify —
     // the jaccardJoinToks rationale verbatim: per-pair intersection as an
     // equi-join COUNT over the candidate-bounded (doc_id, h) table instead
@@ -404,18 +502,12 @@ object Dedup {
     // family's documented ~2⁻⁵² in-doc hash-collision envelope.
     val candIds = cand
       .select(explode(array(col("id_a"), col("id_b"))).as("doc_id")).distinct()
-    // built ONCE (checkpoint), consumed three times (sizes + both probes);
-    // no join hint — narrow rows, planner-sized joins (see jaccardJoinToks)
-    val vt = ht.join(candIds, Seq("doc_id"), "left_semi")
-      .localCheckpoint()
+    // built ONCE (checkpoint), consumed three times (sizes + both probes)
+    val (vt, vtRows) = pinCounted(ht.join(candIds, Seq("doc_id"), "left_semi"))
     val vsz = vt.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     // spread the probe (the jaccardJoinToks rationale): pairs fan out ×|A|
     val candSpread = cand.repartition(cand.sparkSession.sparkContext.defaultParallelism)
-    val bcast = vt.count() <= VerifyBroadcastRows
-    candSpread
-      .join(probeSide(vt.select(col("doc_id").as("id_a"), col("h")), bcast), Seq("id_a"))
-      .join(probeSide(vt.select(col("doc_id").as("id_b"), col("h")), bcast), Seq("id_b", "h"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("inter"))
+    verifyCounts(candSpread, "id_a", "id_b", vt, vtRows)
       .join(vsz.select(col("doc_id").as("id_a"), col("sz").as("sz_a")), Seq("id_a"))
       .filter(col("inter") * 100 >= lit(minContainPct) * col("sz_a"))
       .select(col("id_a"), col("id_b"), col("inter"), col("sz_a"))
@@ -680,7 +772,11 @@ object Dedup {
   /** Exact n-gram Jaccard for candidate pairs only (the verify stage).
     * Shingle sets are computed ONLY for docs that appear in a candidate
     * pair (left-semi first): the expensive array materialization is
-    * candidate-bounded, not corpus-sized. */
+    * candidate-bounded, not corpus-sized. The intersection is
+    * [[verifyCounts]]' one-long-key probe, and the counts attach back to
+    * `pairs` on one long key too ([[longKeyJoin]]). Lazy: the returned
+    * frame reads the checkpointed verify table, which stays pinned while
+    * it lives. */
   def jaccardVerify(pairs: DataFrame, docs: DataFrame, idCol: String,
                     textCol: String, shingle: Int): DataFrame = {
     // one explode, not a two-branch union: the pairs subtree enters this
@@ -695,24 +791,20 @@ object Dedup {
     // duplicate-subtree problem HERE: the old form ran the whole
     // scan→semi→collect_set build once per attach join (2 corpus scans in
     // the dedup_minhash_pairs plan); the hash table now builds once.
-    val vt = shingleHashExplode(candDocs, idCol, textCol, shingle)
-      .distinct() // positional shingles → the doc's shingle SET
-      .localCheckpoint()
+    val (vt, vtRows) = pinCounted(shingleHashExplode(candDocs, idCol, textCol, shingle)
+      .distinct()) // positional shingles → the doc's shingle SET
     val vsz = vt.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     // probe with DISTINCT pairs (the public contract tolerates duplicate
     // input rows: each must come back with its own correct jaccard, so the
     // count below must not see the duplication)
     val pd = pairs.select(col("id1"), col("id2")).distinct()
       .repartition(pairs.sparkSession.sparkContext.defaultParallelism) // spread the ×|set| fan-out
-    val bcast = vt.count() <= VerifyBroadcastRows
-    val inter = pd
-      .join(probeSide(vt.select(col("doc_id").as("id1"), col("h")), bcast), Seq("id1"))
-      .join(probeSide(vt.select(col("doc_id").as("id2"), col("h")), bcast), Seq("id2", "h"))
-      .groupBy(col("id1"), col("id2")).agg(count(lit(1)).as("_i"))
-    pairs
+    val inter = verifyCounts(pd, "id1", "id2", vt, vtRows)
+      .select(col("id1").as("_i1"), col("id2").as("_i2"), col("inter").as("_i"))
+    val sized = pairs
       .join(vsz.select(col("doc_id").as("id1"), col("sz").as("sz1")), Seq("id1"))
       .join(vsz.select(col("doc_id").as("id2"), col("sz").as("sz2")), Seq("id2"))
-      .join(inter, Seq("id1", "id2"), "left_outer") // disjoint sets → inter 0
+    longKeyJoin(sized, Seq("id1", "id2"), inter, Seq("_i1", "_i2"), "left_outer") // disjoint sets → inter 0
       .select(col("id1"), col("id2"),
         round(coalesce(col("_i"), lit(0L)).cast("double") /
           (col("sz1") + col("sz2") - coalesce(col("_i"), lit(0L))), 6).as("jaccard"))
@@ -753,13 +845,19 @@ object Dedup {
     * joins/aggregates on the distributed edge list, and `localCheckpoint`
     * truncates the growing lineage. Both produce identical labels. This is
     * the keeper-selection stage of a dedup pipeline: keep
-    * doc_id == component, drop the rest. */
+    * doc_id == component, drop the rest.
+    *
+    * The edge count is observed on the job that checkpoints the edges (no
+    * count job). No checkpoint outlives its last reader: each round's
+    * labels go once the next round's are materialized, and the edge
+    * checkpoints when the call returns ([[releasing]]); the returned
+    * labels (a driver-side relation, or the last round's checkpoint) read
+    * none of them. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
-                          localEdgeThreshold: Long = 5000000L): DataFrame = {
+                          localEdgeThreshold: Long = 5000000L): DataFrame = releasing {
     val spark = pairs.sparkSession
-    val edgePairs = pairs.select(col("id1").cast("long").as("src"),
-      col("id2").cast("long").as("dst")).localCheckpoint()
-    val edgeCount = edgePairs.count()
+    val (edgePairs, edgeCount) = pinCounted(pairs.select(col("id1").cast("long").as("src"),
+      col("id2").cast("long").as("dst")))
     if (edgeCount <= localEdgeThreshold) {
       // Near-dup candidate graphs are SPARSE — orders of magnitude smaller
       // than the corpus (LSH buckets are capped, so pair counts are
@@ -790,12 +888,10 @@ object Dedup {
       // root = min id of the component: union always keeps the smaller root
       parent.keys.toSeq.sorted.map(id => (id, find(id))).toDF("doc_id", "component")
     } else {
-      val edges = edgePairs
-        .union(edgePairs.select(col("dst").as("src"), col("src").as("dst")))
-        .localCheckpoint()
-      var labels = edges.select(col("src").as("doc_id")).distinct()
-        .withColumn("component", col("doc_id"))
-        .localCheckpoint()
+      val edges = pin(edgePairs
+        .union(edgePairs.select(col("dst").as("src"), col("src").as("dst"))))
+      var labels = pin(edges.select(col("src").as("doc_id")).distinct()
+        .withColumn("component", col("doc_id")))
       var it = 0
       var converged = false
       while (!converged && it < maxIter) {
@@ -811,11 +907,11 @@ object Dedup {
           .groupBy(col("doc_id")).agg(min(col("component")).as("nbr"))
         // carry the changed flag inside the checkpointed frame: one
         // materialization per round, convergence read off the cached result
-        val updated = labels.join(nbrMin, Seq("doc_id"), "left")
+        val updated = pin(labels.join(nbrMin, Seq("doc_id"), "left")
           .select(col("doc_id"),
             least(col("component"), coalesce(col("nbr"), col("component"))).as("component"),
-            (coalesce(col("nbr"), col("component")) < col("component")).as("changed"))
-          .localCheckpoint()
+            (coalesce(col("nbr"), col("component")) < col("component")).as("changed")))
+        planRdds(labels).foreach(release) // the round before: nothing reads it now
         converged = updated.filter(col("changed")).limit(1).count() == 0
         labels = updated.select(col("doc_id"), col("component"))
         it += 1

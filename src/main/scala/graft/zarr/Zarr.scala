@@ -1457,7 +1457,8 @@ object Zarr {
     * which bare element_at would silently resolve from the END of the
     * list — raises an explicit error, in ANSI and non-ANSI sessions alike
     * (fail-fast, the astype rule: a wrong/null label corrupts group-bys
-    * downstream). */
+    * downstream). [[readObsAligned]] throws the same error from its task
+    * code ([[badCategorical]]). */
   def readCategorical(spark: SparkSession, path: String, key: String = ""): DataFrame = {
     val arr = resolveArray(path, Some(key).filter(_.nonEmpty))
     val cats = readAttrs(arr).path("categories")
@@ -1470,9 +1471,17 @@ object Zarr {
         when(code.between(0, labels.size - 1),
           element_at(typedlit(labels), code + 1))
           .otherwise(raise_error(concat(
-            lit(s"categorical code out of range [0, ${labels.size}) in $arr: "),
-            col("v").cast("string")))).as("label"))
+            lit(categoricalRange(arr, labels.size)), code.cast("string")))).as("label"))
   }
+
+  private def categoricalRange(arr: String, n: Int): String =
+    s"categorical code out of range [0, $n) in $arr: "
+
+  /** An out-of-range categorical code, thrown in a task: exactly what
+    * `raise_error` throws in [[readCategorical]] (class and message), so
+    * the same bad store fails the same way whichever reader meets it. */
+  private def badCategorical(arr: String, n: Int, code: Int): RuntimeException =
+    org.apache.spark.GraftSparkBridge.userRaisedError(s"${categoricalRange(arr, n)}$code")
 
   // ---- Aligned multi-component obs-table read ----
 
@@ -1619,9 +1628,7 @@ object Zarr {
             while (r < until) {
               val code = vals((r - ci * m.chunkRows).toInt).toInt
               if (code < 0 || code >= pc.labels.length)
-                throw new IllegalArgumentException(
-                  s"categorical code out of range [0, ${pc.labels.length}) " +
-                    s"in ${pc.arr}: $code")
+                throw badCategorical(pc.arr, pc.labels.length, code)
               a((r - lo).toInt) = pc.labels(code)
               r += 1
             }

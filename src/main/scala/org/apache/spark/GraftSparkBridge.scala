@@ -8,4 +8,13 @@ package org.apache.spark
   * Spark's own PythonRunner writer thread does exactly this. */
 object GraftSparkBridge {
   def setTaskContext(tc: TaskContext): Unit = TaskContext.setTaskContext(tc)
+
+  /** The class Catalyst's `raise_error` throws (private[spark] upstream). */
+  type UserRaisedError = SparkRuntimeException
+
+  /** Exactly what `raise_error(msg)` throws, for a check that runs in task
+    * code: a bad input then fails with the same exception, class and
+    * message, whether a Catalyst expression or task code meets it. */
+  def userRaisedError(msg: String): UserRaisedError =
+    new SparkRuntimeException("USER_RAISED_EXCEPTION", Map("errorMessage" -> msg))
 }

@@ -498,6 +498,106 @@ class DedupSpec extends AnyFunSuite {
     assert(comps.toSet == viaCC)
   }
 
+  // ---- checkpoint release on the near-dup path ----
+
+  /** A planted fixture for the release specs: a 14-doc sliding-window chain
+    * (neighbours up to 2 apart pair at Jaccard ≥ 50%, so the chain is one
+    * component of diameter ~7) with its min id mid-chain, a 5-doc clique,
+    * a one-word-edit pair, and 20 distinct docs. */
+  private lazy val releaseRows: Seq[(Long, String)] = {
+    val chainIds = Seq(40L, 33L, 47L, 31L, 45L, 30L, 41L, 38L, 44L, 32L, 46L, 35L, 43L, 39L)
+    val chain = chainIds.zipWithIndex.map { case (id, i) => id -> (i until i + 10).map(w => s"c$w").mkString(" ") }
+    val clique = (60L until 65L).map(_ -> "alpha beta gamma delta epsilon zeta eta theta")
+    val edit = Seq(70L -> "one two three four five six seven eight nine ten",
+      71L -> "one two three four five six seven eight nine eleven")
+    val rest = (100L until 120L).map(i => i -> s"doc $i body w${i}a w${i}b w${i}c w${i}d w${i}e")
+    chain ++ clique ++ edit ++ rest
+  }
+  private def shingleSets(rows: Seq[(Long, String)]): Map[Long, Set[String]] =
+    rows.map { case (id, t) => id -> t.split(" ").sliding(3).filter(_.length == 3).map(_.mkString(" ")).toSet }
+      .filter(_._2.nonEmpty).toMap
+  /** (id1, id2, inter, uni), id1 < id2, Jaccard ≥ pct: brute force. */
+  private def bruteJaccard(m: Map[Long, Set[String]], pct: Int): Set[(Long, Long, Long, Long)] =
+    (for {
+      (i, a) <- m; (j, b) <- m if i < j
+      inter = (a & b).size.toLong; uni = (a | b).size.toLong
+      if inter * 100 >= pct * uni
+    } yield (i, j, inter, uni)).toSet
+  /** (id_a, id_b, inter, |A|), containment of A in B ≥ pct: brute force. */
+  private def bruteContainment(m: Map[Long, Set[String]], pct: Int): Set[(Long, Long, Long, Long)] =
+    (for {
+      (i, a) <- m; (j, b) <- m if i != j
+      inter = (a & b).size.toLong
+      if inter * 100 >= pct * a.size
+    } yield (i, j, inter, a.size.toLong)).toSet
+  /** doc -> min id of its component, over the docs the pairs touch. */
+  private def bruteLabels(pairs: Iterable[(Long, Long)]): Map[Long, Long] = {
+    var label = pairs.flatMap { case (a, b) => Seq(a, b) }.map(id => id -> id).toMap
+    var changed = true
+    while (changed) {
+      val next = pairs.foldLeft(label) { case (l, (a, b)) =>
+        val m = math.min(l(a), l(b)); l.updated(a, m).updated(b, m)
+      }
+      changed = next != label
+      label = next
+    }
+    label
+  }
+  private def labelsOf(d: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    d.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  private def quads(d: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long, Long)] =
+    d.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+  private def persistedIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+  private def readIds(d: org.apache.spark.sql.DataFrame): Set[Int] =
+    d.queryExecution.logical.collect { case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id }.toSet
+
+  test("release: a dedup call leaves behind only the checkpoints its result reads, on both components paths") {
+    val toks = Dedup.shingleToks(releaseRows.toDF("doc_id", "text"), "doc_id", "text", 3).localCheckpoint()
+    val ref = bruteJaccard(shingleSets(releaseRows), 50)
+    val refLabels = bruteLabels(ref.map(t => (t._1, t._2)))
+    assert(refLabels.values.toSet == Set(30L, 60L, 70L), refLabels) // the fixture's three clusters
+    // driver-side union-find: the result is a driver relation, so nothing
+    // the call checkpointed (prefix, pairs, verify table, edges) survives
+    val before = persistedIds
+    val comps = Dedup.jaccardDedup(toks, 50)
+    assert(persistedIds -- before == Set.empty, "jaccardDedup left checkpoints pinned")
+    assert(labelsOf(comps) == refLabels)
+    // distributed label propagation: only the last round's labels, which
+    // the result reads, survive — no edge list, no earlier round
+    val pairs = Dedup.jaccardJoinToks(toks, 50).select("id1", "id2")
+    val beforeDist = persistedIds
+    val dist = Dedup.connectedComponents(pairs, localEdgeThreshold = 0L)
+    val reads = readIds(dist)
+    assert(reads.size == 1 && persistedIds -- beforeDist == reads,
+      s"left ${persistedIds -- beforeDist}, result reads $reads")
+    assert(labelsOf(dist) == refLabels)
+  }
+
+  test("release: lazily returned verify results still collect after later dedup calls") {
+    val df = releaseRows.toDF("doc_id", "text")
+    val toks = Dedup.shingleToks(df, "doc_id", "text", 3).localCheckpoint()
+    val sets = shingleSets(releaseRows)
+    val jac = Dedup.jaccardJoinToks(toks, 50)
+    val cont = Dedup.containmentJoinToks(toks, 60)
+    // a duplicated pair (each row comes back) and a disjoint pair (J = 0)
+    val probe = Seq((60L, 61L), (60L, 61L), (40L, 33L), (70L, 71L), (100L, 101L))
+    val ver = Dedup.jaccardVerify(probe.toDF("id1", "id2"), df, "doc_id", "text", 3)
+    // later dedup calls on both components paths release what they made
+    Dedup.jaccardDedup(toks, 50).collect()
+    Dedup.connectedComponents(jac.select("id1", "id2"), localEdgeThreshold = 0L).collect()
+    Dedup.jaccardDedup(toks, 80).collect()
+    assert(quads(jac) == bruteJaccard(sets, 50))
+    assert(quads(cont) == bruteContainment(sets, 60))
+    val want = probe.map { case (a, b) =>
+      (a, b, (sets(a) & sets(b)).size.toDouble / (sets(a) | sets(b)).size) }
+    val got = ver.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(got.map(t => (t._1, t._2)).sorted.toSeq == want.map(t => (t._1, t._2)).sorted)
+    got.foreach { case (a, b, j) =>
+      val w = want.find(t => t._1 == a && t._2 == b).get._3
+      assert(math.abs(j - w) <= 1e-6, s"($a, $b): $j, brute force $w")
+    }
+  }
+
   test("exact joins at the edges: threshold equality, the length-filter bound, frequency ties") {
     import spark.implicits._
     // shingle = 1, so each doc's set is exactly its distinct words

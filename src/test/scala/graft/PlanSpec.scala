@@ -130,6 +130,28 @@ class PlanSpec extends AnyFunSuite {
       : Seq[org.apache.spark.sql.execution.SparkPlanInfo] =
     p +: (if (p.nodeName == "ReusedExchange") Nil else p.children.flatMap(operators))
 
+  test("near-dup verify: every broadcast hash join builds on one long key") {
+    ops.Dedup.corpusShingles(spark, TestSpark.sf).collect() // build the durable index first
+    // "BroadcastHashJoin [left keys], [right keys], <type>, Build<side>, ..."
+    val shape = """BroadcastHashJoin \[(.*)\], \[(.*)\], \w+, Build(Left|Right).*""".r
+    for (name <- Seq("dedup_jaccard_join", "dedup_components", "dedup_containment",
+                     "dedup_minhash_pairs")) {
+      val joins = executionPlans(SparkEntry.queries(name)(spark, TestSpark.sf).collect())
+        .flatMap(operators).filter(_.nodeName == "BroadcastHashJoin").map(_.simpleString)
+      joins.foreach {
+        case shape(left, right, side) =>
+          val keys = (if (side == "Left") left else right).split(", ").toSeq
+          // a build side keyed on 2+ columns is an UnsafeHashedRelation,
+          // which takes a whole 16 MiB page however few rows it holds.
+          // Every key of these queries is a BIGINT column, which the plan
+          // string marks with an L after its expression id.
+          assert(keys.size == 1, s"$name: composite build key in $keys:\n${joins.mkString("\n")}")
+          assert(keys.head.matches("""\S+#\d+L"""), s"$name: non-long build key ${keys.head}")
+        case other => fail(s"$name: unparsed join $other")
+      }
+    }
+  }
+
   for (name <- Seq("dedup_jaccard_join", "dedup_containment"))
     test(s"$name: rarest-first prefix windows run once; no aggregate is broadcast") {
       ops.Dedup.corpusShingles(spark, TestSpark.sf).collect() // build the durable index first

@@ -1391,12 +1391,19 @@ class ZarrSpec extends AnyFunSuite {
     assert(Zarr.readAttrs(s"$p3#obs/batch").path("categories").get(0).asText() == "a")
     assert(Zarr.readCategorical(spark, p3, "obs/batch").collect().length == 4)
     // out-of-range code fails fast with an explicit error (ANSI or not),
-    // not a silent null label
+    // not a silent null label — and with the same exception class and
+    // message from both categorical readers
+    def bothReaders(root: String, key: String): (String, String) = {
+      val e = intercept[org.apache.spark.GraftSparkBridge.UserRaisedError](
+        Zarr.readCategorical(spark, root, key).collect())
+      val eAligned = intercept[org.apache.spark.GraftSparkBridge.UserRaisedError](
+        Zarr.readObsAligned(spark, root, Seq(Zarr.ObsCategorical(key, "label"))).collect())
+      (e.getMessage, eAligned.getMessage)
+    }
     Zarr.writeAttrs(s"$p3#obs/batch", """{"categories": ["only_one"]}""")
-    val e = intercept[Throwable](Zarr.readCategorical(spark, p3, "obs/batch").collect())
-    def deepMsg(t: Throwable): String =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.toString).mkString(" | ")
-    assert(deepMsg(e).contains("categorical code out of range"), deepMsg(e))
+    // codes 1 and 2 are both out of range: each reader names the first it meets
+    val (m, mAligned) = bothReaders(p3, "obs/batch")
+    Seq(m, mAligned).foreach(x => assert(x.contains("categorical code out of range [0, 1)"), x))
     // NEGATIVE codes (pandas NA sentinel) also fail — bare element_at
     // would silently resolve them from the END of the label list
     val negPath = "/root/repo/target/tmp/zarr_test_attrs_neg"
@@ -1404,8 +1411,10 @@ class ZarrSpec extends AnyFunSuite {
     Zarr.writeVector(Seq((0L, 0.0), (1L, -1.0)).toDF("i", "v"),
       s"$negPath#obs/c", n = 2, chunk = 2, dtype = "<i4")
     Zarr.writeAttrs(s"$negPath#obs/c", """{"categories": ["A", "B"]}""")
-    val eNeg = intercept[Throwable](Zarr.readCategorical(spark, negPath, "obs/c").collect())
-    assert(deepMsg(eNeg).contains("categorical code out of range"), deepMsg(eNeg))
+    // one bad code: the two messages are the same, word for word
+    val (mNeg, mNegAligned) = bothReaders(negPath, "obs/c")
+    assert(mNeg.contains(s"categorical code out of range [0, 2) in $negPath/obs/c: -1"), mNeg)
+    assert(mNegAligned == mNeg)
     // a stale .zattrs left beside a v3 node can NOT shadow zarr.json attrs
     // (read precedence matches write: zarr.json first)
     Zarr.writeBytes(s"$p3/obs/batch/.zattrs", """{"categories": ["stale"]}""".getBytes("UTF-8"))
