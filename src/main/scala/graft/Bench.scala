@@ -1,14 +1,182 @@
 package graft
 
-/** Benchmark main — one JSON line on stdout (build.sbt routes forked stdout
-  * through un-prefixed so the driver can parse it). Failed queries are
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.GraftSparkBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/** Benchmark main, and the one per-query measurement runner. Each query's
+  * wall time goes into one JSON line on stdout (build.sbt routes forked
+  * stdout through un-prefixed so the driver can parse it); its Spark
+  * counters go into `target/bench_detail.json`. Failed queries are
   * excluded from `total` and listed in `failed` instead of being silently
   * timed (round-1 verdict fix).
   */
 object Bench {
+  /** The scale factor `bench_floors.txt` was measured at. */
+  val FloorsSf = "sf0.1"
+
+  /** What one run of a query cost, from Spark's listener events. The
+    * names are those of perfbench's `Tracer.JobRec`, so the two outputs
+    * line up. `planMs` sums the Catalyst phases (analysis, optimization,
+    * planning) of the returned frame and of every action run inside the
+    * query; `codegenCompiles` counts Janino compilations. */
+  final case class Counters(jobs: Long, stages: Long, tasks: Long, taskCpuS: Double, gcS: Double,
+                            fetchWaitS: Double, shuffleMb: Double, spillMb: Double, planMs: Long,
+                            streamBatches: Long, codegenCompiles: Long) {
+    def json: String =
+      s"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_cpu_s":${f3(taskCpuS)},""" +
+        s""""gc_s":${f3(gcS)},"fetch_wait_s":${f3(fetchWaitS)},"shuffle_mb":${f3(shuffleMb)},""" +
+        s""""spill_mb":${f3(spillMb)},"plan_ms":$planMs,"stream_batches":$streamBatches,""" +
+        s""""codegen_compiles":$codegenCompiles}"""
+  }
+
+  /** One query's record: the kept (minimum) wall time, the first run's
+    * wall time, the extra runs the floors triggered, and the counters of
+    * the first run, which is the run that pays any model fit. */
+  final case class Result(name: String, best: Double, ok: Boolean, first: Double, reruns: Int,
+                          counters: Counters)
+
+  /** The wall time past which a query is re-run (at most twice more):
+    * max(3 s, 3 × its floor). A first measurement beyond it is far more
+    * likely ambient contention on a shared box than a regression — round
+    * 9's runs=1 artifact recorded a 36× noise spike. The floors are
+    * [[FloorsSf]] numbers, so at any other scale factor there is no
+    * threshold and a query runs `SPARK_GRAFT_RUNS` times and no more. */
+  def rerunPast(sfDir: String, floor: Double): Option[Double] =
+    if (new java.io.File(sfDir).getName == FloorsSf) Some(math.max(3.0, floor * 3)) else None
+
+  /** Runs each query in turn, `runs` times (plus any re-runs
+    * [[rerunPast]] allows), evaluating every output column: a count()
+    * would let Catalyst prune the very expressions under test. */
+  def run(spark: SparkSession, sfDir: String,
+          queries: Seq[(String, (SparkSession, String) => DataFrame)],
+          runs: Int, floors: Map[String, Double]): Seq[Result] = {
+    val rec = new Recorder(spark)
+    try queries.map { case (name, fn) =>
+      def once(): (Double, Boolean, Counters) = {
+        rec.begin()
+        var qe: Option[QueryExecution] = None
+        val t0 = System.nanoTime()
+        val ok =
+          try { qe = Some(fn(spark, sfDir).queryExecution); qe.get.toRdd.foreach(_ => ()); true }
+          catch {
+            case e: Throwable =>
+              System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
+              false
+          }
+        val t = (System.nanoTime() - t0) / 1e9
+        (t, ok, rec.end(qe))
+      }
+      val base = (1 to runs).map(_ => once())
+      val (first, _, counters) = base.head
+      var best = base.map(_._1).min
+      var ok = base.forall(_._2)
+      val past = rerunPast(sfDir, floors.getOrElse(name, 0.0))
+      var reruns = 0
+      while (ok && past.exists(best > _) && reruns < 2) {
+        val (t, ok2, _) = once()
+        best = math.min(best, t); ok &&= ok2; reruns += 1
+      }
+      Result(name, best, ok, first, reruns, counters)
+    } finally rec.close()
+  }
+
+  /** Counts Spark's events into the query run that is open. Queries run
+    * one at a time, so a run's events are the ones posted between its
+    * [[begin]] and its [[end]], each of which first drains the listener
+    * bus. Job groups would not do: a streaming query runs its batches
+    * under a job group of its own. */
+  private final class Recorder(spark: SparkSession) {
+    private val jobs, stages, tasks, cpuNs, gcMs, fetchWaitMs, shuffleBytes, spillBytes = new AtomicLong
+    private val batches = ConcurrentHashMap.newKeySet[(java.util.UUID, Long)]()
+    // by identity: a frame the query both ran an action on and returned
+    // is planned once
+    private val planned = new java.util.IdentityHashMap[QueryExecution, Unit]()
+    private var compiles0 = 0L
+
+    private val events = new SparkListener {
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = stages.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        tasks.incrementAndGet()
+        Option(e.taskMetrics).foreach { m =>
+          cpuNs.addAndGet(m.executorCpuTime)
+          gcMs.addAndGet(m.jvmGCTime)
+          fetchWaitMs.addAndGet(m.shuffleReadMetrics.fetchWaitTime)
+          shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          spillBytes.addAndGet(m.diskBytesSpilled)
+        }
+      }
+    }
+    private val actions = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = plan(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = plan(qe)
+    }
+    private val progress = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      // an idle query also reports progress, for a batch id it already ran
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        batches.add(e.progress.runId -> e.progress.batchId)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.sparkContext.addSparkListener(events)
+    spark.listenerManager.register(actions)
+    spark.streams.addListener(progress)
+
+    private def plan(qe: QueryExecution): Unit = planned.synchronized(planned.put(qe, ()))
+
+    def begin(): Unit = {
+      GraftSparkBridge.drainListenerBus(spark.sparkContext)
+      Seq(jobs, stages, tasks, cpuNs, gcMs, fetchWaitMs, shuffleBytes, spillBytes).foreach(_.set(0))
+      batches.clear()
+      planned.synchronized(planned.clear())
+      compiles0 = GraftSparkBridge.codegenCompiles
+    }
+
+    /** The open run's counters; `result` is the plan of the frame the
+      * query returned, whose planning no action reported. */
+    def end(result: Option[QueryExecution]): Counters = {
+      val compiles = GraftSparkBridge.codegenCompiles - compiles0
+      GraftSparkBridge.drainListenerBus(spark.sparkContext)
+      result.foreach(plan)
+      val phases = Seq(QueryPlanningTracker.ANALYSIS, QueryPlanningTracker.OPTIMIZATION,
+        QueryPlanningTracker.PLANNING)
+      val planMs = planned.synchronized {
+        import scala.jdk.CollectionConverters._
+        planned.keySet.asScala.toSeq.flatMap(qe => phases.flatMap(qe.tracker.phases.get))
+          .map(p => p.endTimeMs - p.startTimeMs).sum
+      }
+      Counters(jobs.get, stages.get, tasks.get, cpuNs.get / 1e9, gcMs.get / 1e3, fetchWaitMs.get / 1e3,
+        shuffleBytes.get / 1e6, spillBytes.get / 1e6, planMs, batches.size, compiles)
+    }
+
+    def close(): Unit = {
+      spark.sparkContext.removeSparkListener(events)
+      spark.listenerManager.unregister(actions)
+      spark.streams.removeListener(progress)
+    }
+  }
+
+  // Locale.ROOT: the f-interpolator uses the JVM default locale, and a
+  // de_DE/fr_FR machine would print "0,123" — unparseable JSON
+  private def f3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    // a fresh durable model store per run, deleted at exit (as in
+    // Verify): every fit a query needs is paid inside the run that
+    // reports it, none loaded from an earlier run
+    val models = java.nio.file.Files.createTempDirectory("graft_bench_models")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      conf = Map("spark.graft.models.dir" -> models.toString))
 
     // Warm the engine (scheduler, codegen compiler, shuffle machinery) so
     // the alphabetically-first query isn't billed for session startup.
@@ -29,11 +197,8 @@ object Bench {
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     val loadStart = loadavg()
     // Per-query warm-time floors (committed, measured min-of-2 on an idle
-    // box at sf0.1). A first measurement beyond max(3 s, 3×floor) is far
-    // more likely ambient contention on a shared box than a regression —
-    // round 9's runs=1 artifact recorded a 36× noise spike — so such
-    // outliers auto-re-run (≤2 extra) and the artifact keeps the min
-    // PLUS the discarded first value, making it trustworthy standalone.
+    // box at FloorsSf). The artifact keeps each re-run query's min PLUS
+    // its discarded first value, making it trustworthy standalone.
     val floors: Map[String, Double] = {
       val p = java.nio.file.Paths.get("bench_floors.txt")
       if (!java.nio.file.Files.exists(p)) Map.empty
@@ -49,53 +214,28 @@ object Bench {
           }.toMap
       }
     }
-    val results: Seq[(String, Double, Boolean, Double, Int)] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) => only.isEmpty || only.exists(name.contains) }
-        .map { case (name, fn) =>
-        def once(): (Double, Boolean) = {
-          val t0 = System.nanoTime()
-          val ok =
-            // full evaluation of EVERY output column: a count() would let
-            // Catalyst prune the very expressions under test (regex passes,
-            // window math) and time map-shaped queries as bare scans
-            try { fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ()); true }
-            catch {
-              case e: Throwable =>
-                System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-                false
-            }
-          ((System.nanoTime() - t0) / 1e9, ok)
-        }
-        val base = (1 to runs).map(_ => once())
-        val first = base.head._1
-        var best = base.map(_._1).min
-        var ok = base.forall(_._2)
-        val threshold = math.max(3.0, floors.getOrElse(name, 0.0) * 3)
-        var reruns = 0
-        while (ok && best > threshold && reruns < 2) {
-          val (t, ok2) = once()
-          best = math.min(best, t); ok &&= ok2; reruns += 1
-        }
-        (name, best, ok, first, reruns)
+    val results =
+      try run(spark, sfDir, SparkEntry.queries.toSeq.sortBy(_._1)
+          .filter { case (name, _) => only.isEmpty || only.exists(name.contains) }, runs, floors)
+      finally {
+        spark.stop()
+        graft.zarr.Zarr.delete(models.toString, recursive = true)
       }
     val loadEnd = loadavg()
 
-    // Locale.ROOT: the f-interpolator uses the JVM default locale, and a
-    // de_DE/fr_FR machine would print "0,123" — unparseable JSON
-    def f3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def esc(s: String): String = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val qs = results.collect { case (k, v, true, _, _) => s""""$k":${f3(v)}""" }.mkString("{", ",", "}")
-    val failed = results.collect { case (k, _, false, _, _) => s""""$k"""" }.mkString("[", ",", "]")
-    val total = results.collect { case (_, v, true, _, _) => v }.sum
+    val qs = results.filter(_.ok).map(r => s""""${r.name}":${f3(r.best)}""").mkString("{", ",", "}")
+    val failed = results.filterNot(_.ok).map(r => s""""${r.name}"""").mkString("[", ",", "]")
+    val total = results.filter(_.ok).map(_.best).sum
     // adjudication record: every auto-re-run outlier with its discarded
     // first measurement — the gap between first and the kept min IS the
     // measured ambient noise, visible in the artifact itself
-    val rerunRec = results.collect { case (k, v, _, first, n) if n > 0 =>
-      s""""$k":{"first":${f3(first)},"kept":${f3(v)},"extra_runs":$n}""" }
+    val rerunRec = results.filter(_.reruns > 0).map(r =>
+      s""""${r.name}":{"first":${f3(r.first)},"kept":${f3(r.best)},"extra_runs":${r.reruns}}""")
       .mkString("{", ",", "}")
+    val counters = results.map(r => s""""${r.name}":${r.counters.json}""").mkString("{", ",", "}")
     val stamps = s""""runs":$runs,"loadavg_start":${f3(loadStart)},"loadavg_end":${f3(loadEnd)}"""
-    val detail = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"failed":$failed,"reruns":$rerunRec,$stamps,"sf":"${esc(sfDir)}"}"""
+    val detail = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"failed":$failed,"reruns":$rerunRec,"counters":$counters,$stamps,"sf":"${esc(sfDir)}"}"""
     // The per-query map AND the rerun-adjudication map overflow the driver's
     // 2000-char tail-capture window (r7 verdict #2; r10 parsed:null when a
     // loaded box re-ran 20+ queries and the rerun map alone blew the window)
@@ -104,17 +244,16 @@ object Bench {
     val detailPath = java.nio.file.Paths.get("target", "bench_detail.json")
     java.nio.file.Files.createDirectories(detailPath.getParent)
     java.nio.file.Files.write(detailPath, detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    spark.stop()
     // r21 (r20 verdict #2): driver-visible per-query output — one SMALL
     // fixed-shape JSON line per query, so a line-scanning consumer can
     // rebuild the per-query map (geomean, regressions, scaling ratios)
     // without the single-line map that overflowed the tail-capture window
     // in r7. Strictly additive: the compact total line below stays the
     // LAST stdout line, unchanged.
-    results.foreach { case (k, v, ok, first, n) =>
-      println(s"""{"metric":"query","name":"${esc(k)}","value":${f3(v)},"unit":"sec","ok":$ok,"first":${f3(first)},"extra_runs":$n}""")
+    results.foreach { r =>
+      println(s"""{"metric":"query","name":"${esc(r.name)}","value":${f3(r.best)},"unit":"sec","ok":${r.ok},"first":${f3(r.first)},"extra_runs":${r.reruns}}""")
     }
-    val rerunCount = results.count { case (_, _, _, _, n) => n > 0 }
+    val rerunCount = results.count(_.reruns > 0)
     println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","failed":$failed,"rerun_queries":$rerunCount,$stamps,"sf":"${esc(sfDir)}"}""")
   }
 }

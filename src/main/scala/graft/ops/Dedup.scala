@@ -540,8 +540,8 @@ object Dedup {
     * cap (sorted prefix — the skew guard that bounds a degenerate
     * bucket, e.g. a mass-duplicated boilerplate page, to cap² pairs),
     * localCheckpointed because the tiny pair set feeds the verify
-    * twice; the verify is the [[jaccardVerify]] array-set shape — one
-    * candidate-bounded set build + per-pair array_intersect, never a
+    * twice; the verify builds one candidate-bounded `collect_set` of
+    * shingle hashes per doc and sizes each pair's `array_intersect`, never a
     * (pair, token) row explosion (the join-count form multiplied 25M
     * sf10 pairs by ~100 tokens each and OOM'd). Nothing is ever
     * corpus². */
@@ -580,8 +580,8 @@ object Dedup {
       .filter(col("id1") < col("id2"))
       .distinct()
       .localCheckpoint() // tiny pair set, corpus-scan lineage, two consumers
-    // verify (the jaccardVerify shape): per-candidate-doc shingle SETS
-    // built once (candidate-bounded), intersection sized per pair row
+    // verify: per-candidate-doc shingle-hash SETS (collect_set) built
+    // once (candidate-bounded), array_intersect sized per pair row
     val candIds = cand
       .select(explode(array(col("id1"), col("id2"))).as("doc_id")).distinct()
     // merge hint: the set table is candidate-bounded but can approach

@@ -17,4 +17,12 @@ object GraftSparkBridge {
     * message, whether a Catalyst expression or task code meets it. */
   def userRaisedError(msg: String): UserRaisedError =
     new SparkRuntimeException("USER_RAISED_EXCEPTION", Map("errorMessage" -> msg))
+
+  /** Blocks until every event posted so far has reached its listeners
+    * (`listenerBus` is private[spark]). */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** Janino compilations of generated code in this JVM so far, driver and
+    * local executors alike (`CodegenMetrics` is private[spark]). */
+  def codegenCompiles: Long = metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }

@@ -118,7 +118,7 @@ class PlanSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     sc.setJobGroup(group, group)
-    try { body; org.apache.spark.ListenerBusDrain(sc) }
+    try { body; org.apache.spark.GraftSparkBridge.drainListenerBus(sc) }
     finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
     import scala.jdk.CollectionConverters._
     plans.values.asScala.toSeq
